@@ -5972,27 +5972,43 @@ _7Z_CODER_IDS = {
 _7Z_CODER_CIDS = {v: k for k, v in _7Z_CODER_IDS.items()}
 
 
+# NumCyclesPower above 7-Zip's supported maximum refuses (the value
+# comes from untrusted coder properties); the KDF hashes 2^16 counter
+# rows per slab, so its memory stays bounded whatever the header says.
+_SZ_MAX_CYCLES = 24
+_SZ_KDF_SLAB = 1 << 16
+
+
 def _sz_aes_key(password: str, salt: bytes, cycles: int) -> bytes:
     """7z AES-256 key derivation (7-Zip 7zAes.cpp semantics): the
     password as UTF-16LE appended to the salt, then SHA-256 over
     2^cycles repetitions of (salt || password || counter_le64) fed
     into ONE running hash. cycles == 0x3F short-circuits to the raw
-    zero-padded salt+password (the spec's no-KDF escape hatch)."""
+    zero-padded salt+password (the spec's no-KDF escape hatch);
+    cycles above 24 refuse as ValueError."""
     data = salt + password.encode("utf-16-le")
     if cycles == 0x3F:
         return (data + bytes(32))[:32]
-    # r15 opt (guide §4.2): ONE running SHA-256 over the concatenated
-    # (data ‖ counter_le64) repetitions — the per-iteration two-update
-    # Python loop cost ~5× the hash itself at NumCyclesPower 14. The
-    # buffer is built vectorized (rows of data bytes + a little-endian
-    # u64 counter column) and hashed in one call; bit-identical input
-    # stream by construction.
+    if cycles > _SZ_MAX_CYCLES:
+        raise ValueError(
+            f"7z AES NumCyclesPower {cycles} exceeds {_SZ_MAX_CYCLES}"
+        )
+    # A per-iteration Python loop costs ~5x the hash itself, so each
+    # slab is built vectorized (rows of data bytes + a little-endian
+    # u64 counter column) and handed to the running hash as one buffer:
+    # bit-identical input stream.
     n = 1 << cycles
     w = len(data)
-    buf = np.empty((n, w + 8), dtype=np.uint8)
+    rows = min(n, _SZ_KDF_SLAB)
+    buf = np.empty((rows, w + 8), dtype=np.uint8)
     buf[:, :w] = np.frombuffer(data, dtype=np.uint8)
-    buf[:, w:] = np.arange(n, dtype="<u8").reshape(n, 1).view(np.uint8)
-    return hashlib.sha256(buf.tobytes()).digest()
+    counter = np.arange(rows, dtype="<u8").reshape(rows, 1)
+    h = hashlib.sha256()
+    for _ in range(n // rows):
+        buf[:, w:] = counter.view(np.uint8)
+        h.update(buf)
+        counter += rows
+    return h.digest()
 
 
 def _sz_aes_props(props: bytes) -> tuple[int, bytes, bytes]:

@@ -12,6 +12,13 @@ the per-document work is distributed; Python's ``str.find`` is a C-level
 substring search, which plays the role of the reference's per-byte
 ``readUntilMatch`` loop.
 
+The pass stays single and forward through a per-rule next-match cache:
+each rule remembers the offset of its next start-pattern match and is
+searched again only once the scan position has moved past that offset;
+a rule with no match left is never searched again. Each rule's searches
+therefore cover the document about once, and the total ``find`` work is
+O(len(content) × rules), however many fragments the document holds.
+
 Semantics preserved deliberately (SURVEY.md §2.2):
 - Non-overlapping fragments: once a start pattern matches, other rules are
   not scanned until the fragment closes (§2.2-8).
@@ -67,14 +74,18 @@ def scan_document(
     """
     pos = 0
     n = len(content)
+    # Next start-pattern match per rule. An offset >= pos is still the
+    # first match at or after pos; -1 means the rule never matches again.
+    nexts = [content.find(rule.start_pattern) for rule in compiled]
     while pos < n:
         # Earliest next start-pattern match across all rules; ties broken by
         # rule declaration order (the reference's matchStack examines
         # patterns in array order, SeqXmlRecordReader.java:307-324).
         best_at = -1
         best_rule = -1
-        for idx, rule in enumerate(compiled):
-            at = content.find(rule.start_pattern, pos)
+        for idx, at in enumerate(nexts):
+            if 0 <= at < pos:
+                at = nexts[idx] = content.find(compiled[idx].start_pattern, pos)
             if at != -1 and (best_at == -1 or at < best_at):
                 best_at, best_rule = at, idx
         if best_at == -1:

@@ -1929,9 +1929,11 @@ def test_7z_aes_wrong_password_and_tamper():
 
 
 def test_7z_aes_key_derivation_pins():
-    """KDF pinned two ways: an independent one-shot SHA-256 over the
-    fully materialized iteration buffer, and the 0x3F no-KDF escape
-    hatch (raw zero-padded salt+password)."""
+    """KDF pinned three ways: an independent one-shot SHA-256 over the
+    fully materialized iteration buffer, the plain 7zAes.cpp loop (one
+    update of salt+password and one of the u64 counter per iteration)
+    for cycles 0..18, and the 0x3F no-KDF escape hatch (raw
+    zero-padded salt+password)."""
     import hashlib as H
 
     salt = bytes(range(8))
@@ -1941,6 +1943,12 @@ def test_7z_aes_key_derivation_pins():
         b"".join(data + i.to_bytes(8, "little") for i in range(64))
     ).digest()
     assert D._sz_aes_key(pw, salt, 6) == one_shot
+    for cycles in range(19):
+        h = H.sha256()
+        for i in range(1 << cycles):
+            h.update(data)
+            h.update(i.to_bytes(8, "little"))
+        assert D._sz_aes_key(pw, salt, cycles) == h.digest(), cycles
     assert D._sz_aes_key(pw, salt, 0x3F) == (data + bytes(32))[:32]
     # props encode/decode mirror
     props = bytes([14 | 0xC0, 0x7F]) + salt + bytes(range(16))
@@ -1949,6 +1957,21 @@ def test_7z_aes_key_derivation_pins():
     # short-iv form pads to 16
     props2 = bytes([10 | 0xC0, 0x73]) + salt + bytes(4)
     assert D._sz_aes_props(props2) == (10, salt, bytes(16))
+
+
+def test_7z_aes_oversized_cycles_refuse():
+    """NumCyclesPower comes from untrusted coder properties: above 24
+    it refuses with ValueError before hashing, on the key derivation
+    and on the decode chain alike — never a MemoryError."""
+    salt = bytes(range(8))
+    with pytest.raises(ValueError, match="NumCyclesPower"):
+        D._sz_aes_key("infected", salt, 44)
+    with pytest.raises(ValueError, match="NumCyclesPower"):
+        D._sz_aes_key("infected", salt, 25)
+    props = bytes([44 | 0xC0, 0x7F]) + salt + bytes(16)
+    with pytest.raises(ValueError, match="NumCyclesPower"):
+        D._sz_decode_chain([("aes256", props, 16)], bytes(16),
+                           password="infected")
 
 
 # a REAL `7z` CLI archive (libarchive's test corpus, found in this
