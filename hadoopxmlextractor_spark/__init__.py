@@ -7,7 +7,10 @@ Layers
   XML fragment extraction — the reference's scan → filter → XPath-project →
   ordered pivot + forward fill pipeline (reference:
   ``src/main/java/HadoopXmlExtractor/XmlExtractor.java:150-175``) expressed
-  as a DataFrame plan with exactly one shuffle.
+  as a DataFrame plan. On the fused path the pivot and forward fill run
+  map-side, in the scan loop, so the sink's per-document repartition is
+  the only shuffle; the general (JVM XPath) path assembles with one
+  window shuffle before it.
 - **Analytics surface** (``operators``, ``queries*``): typed DataFrame
   operators — joins, aggregations, windows, set ops, dedup, similarity
   search, text analysis — all built on ``pyspark.sql`` so Catalyst/AQE

@@ -73,6 +73,18 @@ class ExtractionConfig:
     sort_order_delimiter: str = "#"
     column_names: tuple[str, ...] = field(default=())
 
+    def __post_init__(self) -> None:
+        # The reference indexes theColumns[order] directly
+        # (XmlExtractor.java:155), so an order outside [0, nr_of_columns)
+        # fails there; refuse it here rather than drop or misplace cells.
+        for rule in self.rules:
+            for xp in rule.xpaths:
+                if not 0 <= xp.order < self.nr_of_columns:
+                    raise ValueError(
+                        f"rule '{rule.name}': xpath order {xp.order} outside "
+                        f"[0, nr_of_columns={self.nr_of_columns})"
+                    )
+
     def output_columns(self) -> list[str]:
         """Column names for the assembled output (c0..cN-1 unless named)."""
         if self.column_names:

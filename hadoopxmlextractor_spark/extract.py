@@ -16,15 +16,24 @@ Spark-first restatement of the reference's fixed physical plan
 3. **XPath projection** — JVM-side ``xpath()`` (whole-stage codegen,
    no Python round-trip) evaluated per fragment, gated by rule index;
    multi-node results concatenate with no separator and empty nodesets
-   drop the cell, matching ``XmlExtractor.java:100-112``.
-4. **Assembly** — ``operators.assembly.assemble_rows``: one shuffle
-   (partition by doc, sort by (seq, order)), running forward fill,
-   trigger-gated emit.
+   drop the cell, matching ``XmlExtractor.java:100-112``. When every
+   XPath is in the ``xpath_subset``, steps 2-4 instead run fused in one
+   Python pass per document (scan → ``ET.fromstring`` → evaluate).
+4. **Assembly** — running forward fill and trigger-gated emit. The
+   general path uses ``operators.assembly.assemble_rows``: one shuffle
+   (partition by doc, sort by (seq, order)). The fused path needs no
+   shuffle: one scan sees a whole document (whole-file input, as the
+   reference's non-splittable format, ``XmlExtractor.java:64-67``) and
+   yields its cells in (seq, order) order, so the reducer's state array
+   runs inside the scan loop and rows leave the Python pass assembled.
 
-At scale: the only Python stage is the scanner (string find over opaque
-documents — work Spark's built-ins cannot express); everything after the
-fragment DataFrame is built-in Catalyst-optimizable operators, and the
-plan has exactly one shuffle, keyed on the high-cardinality doc_id.
+At scale: the only Python stage is the scan (string find over opaque
+documents — work Spark's built-ins cannot express). On the fused path
+that stage also parses, projects and assembles, and extraction has no
+shuffle at all; the sink's ``repartition("doc_id")`` is the plan's only
+exchange. On the general path everything after the fragment DataFrame
+is built-in Catalyst-optimizable operators, and assembly adds exactly
+one shuffle, keyed on the high-cardinality doc_id.
 """
 
 from __future__ import annotations
@@ -34,6 +43,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
@@ -146,7 +156,11 @@ _CELL_SCHEMA = "doc_id string, seq long, order int, value string"
 
 def _compile_fused(config: ExtractionConfig):
     """Per-rule list of (order, evaluator) if ALL xpaths are in the fast
-    subset, else None (→ general JVM xpath path)."""
+    subset, else None (→ general JVM xpath path).
+
+    Each rule's list is sorted by ``order``, ties in declaration order, so
+    one fragment's cells come out in the window's ``ORDER BY seq, order``.
+    """
     from hadoopxmlextractor_spark.xpath_subset import compile_subset
 
     per_rule = []
@@ -157,25 +171,52 @@ def _compile_fused(config: ExtractionConfig):
             if ev is None:
                 return None
             evs.append((xp.order, ev))
-        per_rule.append(evs)
+        per_rule.append(sorted(evs, key=lambda e: e[0]))
     return per_rule
 
 
-def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
-    """Fused scan + parse + project in one Arrow-batched Python pass.
+def _select_fused(config: ExtractionConfig, fused: bool | None):
+    """``_compile_fused``'s evaluators when the fused path runs, else None.
+
+    ``fused=None`` auto-selects: the fused path when every XPath is in the
+    supported subset, else the general JVM xpath path.
+    """
+    if fused is False:
+        return None
+    per_rule = _compile_fused(config)
+    if fused and per_rule is None:
+        raise ValueError("config contains XPath outside the fused subset")
+    return per_rule
+
+
+def _fused_scan(config: ExtractionConfig, per_rule):
+    """The fused loop: ``document_cells(content)`` yields one document's
+    cells ``(seq, order, value)`` in ``(seq, order)`` order.
 
     One ``ET.fromstring`` per fragment (C expat, ~µs) feeds both
     validation and projection — vs. the general path's per-(row, expr)
-    javax XPath evaluation (~ms) on the JVM. ~40× faster end-to-end on
-    the extraction benchmark; used automatically when every configured
-    XPath is in the supported subset (see ``xpath_subset``).
+    javax XPath evaluation (~ms) on the JVM.
     """
     import xml.etree.ElementTree as ET
 
-    per_rule = _compile_fused(config)
-    if per_rule is None:
-        raise ValueError("config contains XPath outside the fused subset")
     compiled = compile_rules(config.rules)
+
+    def document_cells(content: str) -> Iterator[tuple[int, int, str]]:
+        for frag in scan_document(content, compiled, validate=False):
+            try:
+                tree = ET.fromstring(frag.xml)
+            except ET.ParseError:
+                continue  # silent drop, XmlExtractor.java:114-126
+            for order, ev in per_rule[frag.rule_idx]:
+                value = ev(tree)
+                if value is not None:  # empty nodeset → no cell, XmlExtractor.java:104
+                    yield frag.seq, order, value
+
+    return document_cells
+
+
+def _cell_batches(document_cells):
+    """mapInPandas body: documents → the long-format cell stream."""
 
     def scan_project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -186,19 +227,11 @@ def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
             for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
                 if content is None:
                     continue
-                for frag in scan_document(content, compiled, validate=False):
-                    try:
-                        tree = ET.fromstring(frag.xml)
-                    except ET.ParseError:
-                        continue  # silent drop, XmlExtractor.java:114-126
-                    for order, ev in per_rule[frag.rule_idx]:
-                        value = ev(tree)
-                        if value is None:
-                            continue  # empty nodeset, XmlExtractor.java:104
-                        doc_ids.append(doc_id)
-                        seqs.append(frag.seq)
-                        orders.append(order)
-                        values.append(value)
+                for seq, order, value in document_cells(content):
+                    doc_ids.append(doc_id)
+                    seqs.append(seq)
+                    orders.append(order)
+                    values.append(value)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(doc_ids, dtype="object"),
@@ -208,7 +241,51 @@ def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(scan_project, schema=_CELL_SCHEMA)
+    return scan_project
+
+
+def _row_batches(document_cells, config: ExtractionConfig, missing_value: str | None):
+    """mapInPandas body: documents → assembled rows, the reference's reducer
+    (``XmlExtractor.java:150-175``) run map-side.
+
+    One scan sees a whole document and yields its cells in ``(seq,
+    order)`` order, which is all the reducer's shuffle and sort provide.
+    So ``state[order] = value`` per cell (forward fill, an empty string
+    overwrites too) and a row per trigger-column arrival give
+    ``assemble_rows``' rows, rendered the same way. ``ExtractionConfig``
+    guarantees every order lies in ``[0, nr_of_columns)``.
+    """
+    names = config.output_columns()
+    n = config.nr_of_columns
+    trigger = n - 1
+
+    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+                if content is None:
+                    continue
+                state: list[str | None] = [None] * n
+                for seq, order, value in document_cells(content):
+                    state[order] = value
+                    if order == trigger:
+                        if missing_value is None:
+                            rows.append((doc_id, seq, *state))
+                        else:
+                            rows.append((doc_id, seq, *[v or missing_value for v in state]))
+            yield pd.DataFrame(rows, columns=["doc_id", "seq", *names]).astype({"seq": "int64"})
+
+    return assemble
+
+
+def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
+    """Fused scan + parse + project in one Arrow-batched Python pass.
+
+    ~40× faster end-to-end than the general path on the extraction
+    benchmark; used automatically when every configured XPath is in the
+    supported subset (see ``xpath_subset``).
+    """
+    return extract_cells(docs, config, fused=True)
 
 
 def extract_cells(
@@ -224,11 +301,10 @@ def extract_cells(
     ``fused=None`` auto-selects: the fused Python fast path when every
     XPath is in the supported subset, else the general JVM xpath path.
     """
-    if fused is None:
-        fused = _compile_fused(config) is not None
-    if fused:
-        return extract_cells_fused(docs, config)
-    return project_cells(extract_fragments(docs, config, validate=validate), config)
+    per_rule = _select_fused(config, fused)
+    if per_rule is None:
+        return project_cells(extract_fragments(docs, config, validate=validate), config)
+    return docs.mapInPandas(_cell_batches(_fused_scan(config, per_rule)), schema=_CELL_SCHEMA)
 
 
 def extract(
@@ -243,14 +319,24 @@ def extract(
 
     Returns DataFrame[doc_id, seq, <output columns>] — row order within a
     document follows document order via ``seq``; use
-    ``sinks.write_reference_format`` for the delimited-text sink.
+    ``sinks.write_reference_format`` for the delimited-text sink. The
+    fused path assembles rows inside its scan loop (no shuffle); the
+    general path assembles its cell stream with ``assemble_rows``.
     """
-    cells = extract_cells(docs, config, validate=validate, fused=fused)
-    return assemble_rows(
-        cells,
-        config.nr_of_columns,
-        column_names=config.output_columns(),
-        missing_value=missing_value,
+    per_rule = _select_fused(config, fused)
+    if per_rule is None:
+        return assemble_rows(
+            extract_cells(docs, config, validate=validate, fused=False),
+            config.nr_of_columns,
+            column_names=config.output_columns(),
+            missing_value=missing_value,
+        )
+    schema = StructType(
+        [StructField("doc_id", StringType()), StructField("seq", LongType())]
+        + [StructField(name, StringType()) for name in config.output_columns()]
+    )
+    return docs.mapInPandas(
+        _row_batches(_fused_scan(config, per_rule), config, missing_value), schema=schema
     )
 
 

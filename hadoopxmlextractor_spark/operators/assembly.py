@@ -24,6 +24,12 @@ At 100 TB this scales with the number of documents — doc_id is a
 high-cardinality key, so the hash partitioning is balanced and the
 running-window state per partition is O(nr_of_columns), same as the
 reference's reducer memory bound.
+
+Callers: ``extract()``'s general (JVM XPath) path, and analytics callers
+that assemble a cell stream themselves (``missing_value=None`` keeps SQL
+NULLs). The fused path does not come here: its scan sees whole documents
+in (seq, order) order, so ``extract.py`` runs the same state array inside
+the scan loop, with no shuffle.
 """
 
 from __future__ import annotations

@@ -1,3 +1,5 @@
+import pytest
+
 from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule, XPathSpec
 from tests.fixtures import BOOK_CONFIG_XML, INVENTORY_CONFIG_XML
 
@@ -54,3 +56,21 @@ def test_output_columns_default_and_named():
         cfg.rules, nr_of_columns=2, column_names=("a", "b")
     )
     assert named.output_columns() == ["a", "b"]
+
+
+def test_out_of_range_order_refused():
+    # The reference would fail on theColumns[order] (XmlExtractor.java:155);
+    # both constructors refuse, naming the rule and the order.
+    for bad_order, n in ((2, 2), (-1, 3)):
+        bad = ExtractRule("item", "item", True, False, None, (XPathSpec(bad_order, "//item/@b"),))
+        with pytest.raises(ValueError, match=rf"rule 'item'.*order {bad_order}\b"):
+            ExtractionConfig.from_rules([bad], nr_of_columns=n)
+    ok = ExtractRule("item", "item", True, False, None, (XPathSpec(0, "//i/@a"), XPathSpec(2, "//i/@b")))
+    assert ExtractionConfig.from_rules([ok], nr_of_columns=3).nr_of_columns == 3
+    xml = INVENTORY_CONFIG_XML.replace(
+        "<name>xmlextractor.nr_of_columns</name><value>6</value>",
+        "<name>xmlextractor.nr_of_columns</name><value>5</value>",
+    )
+    assert xml != INVENTORY_CONFIG_XML
+    with pytest.raises(ValueError, match=r"rule 'book'.*order 5\b"):
+        ExtractionConfig.from_hadoop_xml(xml, is_text=True)

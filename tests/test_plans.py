@@ -1619,3 +1619,19 @@ def test_sessionize_incremental_seed_broadcast_size_gated(spark):
     spark.catalog.clearCache()
     assert n_bx(gated) < n_bx(small)
     spark.catalog.clearCache()
+
+
+def test_fused_extraction_assembles_map_side(spark):
+    # The fused path assembles rows inside its scan loop: no window and no
+    # shuffle before the sink.
+    import re
+
+    from hadoopxmlextractor_spark.config import ExtractionConfig
+    from hadoopxmlextractor_spark.extract import extract
+    from hadoopxmlextractor_spark.sources import docs_from_strings
+    from tests.fixtures import INVENTORY_CONFIG_XML, SOHO, make_store_xml
+
+    cfg = ExtractionConfig.from_hadoop_xml(INVENTORY_CONFIG_XML, is_text=True)
+    out = extract(docs_from_strings(spark, {"soho.xml": make_store_xml(SOHO)}), cfg)
+    assert not re.search(r"\bWindow\b", executed_plan(out))
+    assert count_exchanges(out) == 0

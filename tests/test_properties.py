@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
@@ -74,40 +74,158 @@ def test_scanner_invariants(doc):
         assert core in xml
 
 
+def reducer_rows(xml: str, config: ExtractionConfig, missing_value: str | None = " ") -> list[tuple]:
+    """Pure-Python emulation of the reference's reducer over one document
+    (``XmlExtractor.java:150-175``): validated fragments' cells sorted by
+    (seq, order), ties in declaration order (the shuffle's sort), one
+    state array forward-filled, a row (seq, *columns) per trigger-column
+    cell, None and "" rendered as ``missing_value`` unless it is None."""
+    n = config.nr_of_columns
+    cells = []
+    for f in scan_with_config(xml, config):
+        tree = ET.fromstring(f.xml)
+        for xp in config.rules[f.rule_idx].xpaths:
+            v = compile_subset(xp.expr)(tree)
+            if v is not None:
+                cells.append((f.seq, xp.order, v))
+    cells.sort(key=lambda c: c[:2])
+    cols: list[str | None] = [None] * n
+    rows = []
+    for seq, order, v in cells:
+        cols[order] = v
+        if order == n - 1:
+            rendered = cols if missing_value is None else [c or missing_value for c in cols]
+            rows.append((seq, *rendered))
+    return rows
+
+
 @given(store_doc())
 @settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
 def test_assembly_semantics_pure(doc):
-    """Emulate the reducer semantics in pure Python and check the row
-    count invariant: #rows == #trigger-column cells (qty present)."""
+    """Row count invariant of the reducer semantics: #rows == #trigger-column
+    cells (qty present)."""
     xml, n_items, items = doc
-    frags = scan_with_config(xml, ITEM_CFG)
-    evs = {
-        (ri, xp.order): compile_subset(xp.expr)
-        for ri, rule in enumerate(ITEM_CFG.rules)
-        for xp in rule.xpaths
-    }
-    cells = []
-    for f in frags:
-        tree = ET.fromstring(f.xml)
-        for (ri, order), ev in evs.items():
-            if ri != f.rule_idx:
-                continue
-            v = ev(tree)
-            if v is not None:
-                cells.append((f.seq, order, v))
-    cells.sort()
-    cols = [None] * 4
-    rows = []
-    for _, order, v in cells:
-        cols[order] = v
-        if order == 3:
-            rows.append(tuple(c if c is not None else " " for c in cols))
+    rows = [r[1:] for r in reducer_rows(xml, ITEM_CFG)]
     assert len(rows) == n_items  # trigger-gated emit
     # emitted item columns appear in document order
     assert [r[2] for r in rows] == [name for name, _ in items]
     assert [r[3] for r in rows] == [str(q) for _, q in items]
     # forward fill: store name present on every row once seen
     assert all(r[0] == "S" for r in rows)
+
+
+# The item rule declares its trigger (qty, order 3) before id and alt, which
+# tie on order 2; every attribute may be absent (no cell) or empty (a cell
+# that overwrites context with "").
+ORDERING_CFG = ExtractionConfig.from_rules(
+    [
+        ExtractionConfig.parse_rule("store", "store;true;false; ;0#//store/@name;", ";", "#"),
+        ExtractionConfig.parse_rule(
+            "inventory", "inventory;true;false; ;1#//inventory/@month;", ";", "#"
+        ),
+        ExtractionConfig.parse_rule(
+            "item", "item;true;false; ;3#//item/@qty;2#//item/@id;2#//item/@alt;", ";", "#"
+        ),
+    ],
+    nr_of_columns=4,
+    column_names=("store", "month", "id", "qty"),
+)
+
+_attr_value = st.one_of(st.none(), st.just(""), _word)
+
+
+def _tag(draw, name: str, attrs: tuple[str, ...], *, broken: bool = False) -> str:
+    rendered = "".join(
+        f' {a}="{v}"' for a in attrs if (v := draw(_attr_value)) is not None
+    )
+    # an attribute without a value: the fragment matches but fails to parse
+    return f'<{name} x="1"{rendered}{" broken" if broken else ""}>'
+
+
+@st.composite
+def ordering_doc(draw):
+    parts = [_tag(draw, "store", ("name",))]
+    for _ in range(draw(st.integers(0, 3))):
+        parts.append(_tag(draw, "inventory", ("month",)))
+        for _ in range(draw(st.integers(0, 4))):
+            broken = draw(st.integers(0, 5)) == 0
+            parts.append(_tag(draw, "item", ("qty", "id", "alt"), broken=broken) + "</item>")
+        parts.append("</inventory>")
+    parts.append("</store>")
+    return "".join(parts)
+
+
+@given(st.lists(ordering_doc(), min_size=1, max_size=3))
+@example(['<store x="1" name="S"><inventory x="1" month="m"><item x="1" id="a"></item></inventory></store>'])
+@example([
+    '<store x="1" name="S"><inventory x="1" month="m">'
+    '<item x="1" id="a" qty="1"></item><item x="1" qty="2" id="b" broken></item>'
+    '<item x="1" qty="3"></item></inventory><inventory x="1" month="">'
+    '<item x="1" alt="c" id="" qty=""></item></inventory></store>'
+])
+@settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
+def test_map_side_assembly_equals_reducer(docs):
+    """The fused path's map-side assembler equals the reducer emulation:
+    out-of-order declarations and order ties, empty values overwriting
+    context, fragments without the trigger, malformed fragments, documents
+    without any trigger, a null document, two Arrow batches."""
+    import pandas as pd
+
+    from hadoopxmlextractor_spark.extract import _compile_fused, _fused_scan, _row_batches
+
+    doc_ids = [f"d{i}" for i in range(len(docs))]
+    pdf = pd.DataFrame({"doc_id": [*doc_ids, "null"], "content": [*docs, None]})
+    document_cells = _fused_scan(ORDERING_CFG, _compile_fused(ORDERING_CFG))
+    for missing_value in (" ", None):
+        assemble = _row_batches(document_cells, ORDERING_CFG, missing_value)
+        out = pd.concat(list(assemble(iter([pdf[:1], pdf[1:]]))))
+        assert list(out.columns) == ["doc_id", "seq", "store", "month", "id", "qty"]
+        want = [
+            (doc_id, *row)
+            for doc_id, xml in zip(doc_ids, docs)
+            for row in reducer_rows(xml, ORDERING_CFG, missing_value)
+        ]
+        assert list(out.itertuples(index=False, name=None)) == want
+
+
+def test_fused_extract_equals_window_assembly(spark):
+    """Spark level: the fused extract() equals assemble_rows over the fused
+    cell stream on the golden fixtures, with and without column names."""
+    import dataclasses
+
+    from hadoopxmlextractor_spark.extract import extract, extract_cells
+    from hadoopxmlextractor_spark.operators.assembly import assemble_rows
+    from hadoopxmlextractor_spark.sources import docs_from_strings
+    from tests.fixtures import (
+        BANKS,
+        BOOK_CONFIG_XML,
+        INVENTORY_CONFIG_XML,
+        SOHO,
+        make_store_xml,
+    )
+
+    docs = docs_from_strings(
+        spark, {"soho.xml": make_store_xml(SOHO), "banks.xml": make_store_xml(BANKS)}
+    )
+    inv = ExtractionConfig.from_hadoop_xml(INVENTORY_CONFIG_XML, is_text=True)
+    configs = [
+        inv,
+        ExtractionConfig.from_hadoop_xml(BOOK_CONFIG_XML, is_text=True),
+        dataclasses.replace(inv, column_names=("store", "phone", "month", "day", "id", "stock")),
+    ]
+    for cfg in configs:
+        for missing_value in (" ", None):
+            map_side = extract(docs, cfg, missing_value=missing_value, fused=True)
+            window = assemble_rows(
+                extract_cells(docs, cfg, fused=True),
+                cfg.nr_of_columns,
+                column_names=cfg.output_columns(),
+                missing_value=missing_value,
+            )
+            assert map_side.dtypes == window.dtypes
+            got = sorted(map(tuple, map_side.collect()))
+            assert got == sorted(map(tuple, window.collect()))
+            assert got
 
 
 @given(st.text(alphabet="ab<>/ \"=x", max_size=80))
