@@ -15,8 +15,12 @@ Layers
   operators — joins, aggregations, windows, set ops, dedup, similarity
   search, text analysis — all built on ``pyspark.sql`` so Catalyst/AQE
   optimize them.
+- **Worker imports** (``worker_imports``, imported first): a stat-gated
+  ``zipimporter.invalidate_caches`` so each Python task in a reused worker
+  skips re-reading ``pyspark.zip``'s directory.
 """
 
+from hadoopxmlextractor_spark import worker_imports  # noqa: F401  (installs on import)
 from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule, XPathSpec
 from hadoopxmlextractor_spark.extract import extract, extract_cells, run_extraction
 

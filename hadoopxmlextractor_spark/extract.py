@@ -281,9 +281,11 @@ def _row_batches(document_cells, config: ExtractionConfig, missing_value: str | 
 def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
     """Fused scan + parse + project in one Arrow-batched Python pass.
 
-    ~40× faster end-to-end than the general path on the extraction
-    benchmark; used automatically when every configured XPath is in the
-    supported subset (see ``xpath_subset``).
+    Used automatically when every configured XPath is in the supported
+    subset (see ``xpath_subset``). End to end (inventory config through
+    the text sink, perfbench's 200-document, 2.8 MB corpus, warm,
+    ``local[4]`` on 4 Xeon cores) the fused pass took 0.82–0.88 s median
+    against the general path's 2.06–2.38 s: ~2.5× faster.
     """
     return extract_cells(docs, config, fused=True)
 

@@ -2416,10 +2416,15 @@ def q_text_sentence_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     # 19/20: with a 31-token vocabulary the 9/20 doc-level default
     # prunes ~99.8% of chunks (degenerate); 0.95 keeps ~90% and prunes
     # the genuinely near-identical ones (and all 25 plants).
-    return S.semdedup_prune(
+    pruned = S.semdedup_prune(
         dense.unionByName(plants), k=8, rounds=3,
         threshold_num=19, threshold_den=20,
     )
+    # semdedup_prune has materialized its own cache of the union, so the
+    # returned plan no longer reads dense; a loaded dependent cache
+    # survives the non-cascading unpersist.
+    dense.unpersist()
+    return pruned
 
 
 @query("multimodal_png_ahash", O.image_ahash_oracle(side=8))

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Measure the fused-XPath hit rate (round-5 verdict item 7): which
-fraction of expressions compile onto the ~40x fused ElementTree path
-vs falling back to the general JVM ``xpath()``.
+fraction of expressions compile onto the fused ElementTree path (~2.5x
+faster end to end, see ``extract_cells_fused``) vs falling back to the
+general JVM ``xpath()``.
 
 Three corpora, measured separately:
 1. Both reference configs' expressions (ExtractInventory /

@@ -1635,3 +1635,20 @@ def test_fused_extraction_assembles_map_side(spark):
     out = extract(docs_from_strings(spark, {"soho.xml": make_store_xml(SOHO)}), cfg)
     assert not re.search(r"\bWindow\b", executed_plan(out))
     assert count_exchanges(out) == 0
+
+
+def test_sentence_semdedup_releases_its_embedding_cache(spark, tmp_path):
+    # semdedup_prune caches the embedding union itself, so the query drops
+    # its own cache of the dense table once that union is loaded. Left
+    # behind: the union cache, the pair-stage cache and k-means' local
+    # checkpoint. The symlinked input gives this run's plans their own
+    # cache entries, whatever other tests cached.
+    import __spark_entry__ as e
+
+    sf = tmp_path / "sf"
+    sf.symlink_to(SF)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    out = e.queries()["text_sentence_semdedup"](spark, str(sf))
+    assert out.filter(F.col("kept")).count() > 0
+    assert len(set(persisted().keys()) - before) == 3
