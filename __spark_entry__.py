@@ -68,22 +68,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return revenue.withColumn("rank_in_region", F.row_number().over(w))
 
 
-# Registry-order rotation: the driver's correctness sample takes the
-# FIRST 50 registry entries, so the front of this list decides what
-# gets a driver-ledger row this round.
+# The oracle check that runs ``queries()`` against ``oracle_sql()``
+# samples the FIRST 50 entries, so the newest and most recently changed
+# queries come first. Order only: the local full-registry gate still
+# runs every query.
 FRONT = [
-    # round-13 rotation: the 17 new r13 operators first, then the
-    # queries whose code paths CHANGED this round — source_xls_cells
-    # (parser rewritten for the BIFF8 surface), source_doc_text /
-    # source_ppt_text (doc extract path restructured for piece
-    # tables + decryption), archive_7z_meta + pipeline_7z_documents
-    # (PackPos + pack/folder validation), source_pdf_encrypted (+
-    # metadata twin — /Length anchoring, keylen fallback),
-    # text_robots_admission (robots module grew the crawl-delay/
-    # multi-host surface), pipeline_frontier_expand/schedule (reused
-    # by the politeness capstone), multimodal_image_orientation_dedup
-    # (lossless twin of the new lossy arm) — so the driver
-    # re-certifies every touched surface.
     "pipeline_protected_documents",
     "archive_cfb_properties",
     "source_ppt_notes",
@@ -94,7 +83,7 @@ FRONT = [
     "archive_cfb_meta",
     "source_xls_multisheet",
     "source_ooxml_encrypted",
-    "source_docx_text",  # document_text zip routing refactored r13
+    "source_docx_text",
     "source_doc97_text",
     "source_xls_biff8_full",
     "source_pdf_aesv3",
@@ -115,15 +104,6 @@ FRONT = [
     "pipeline_frontier_schedule",
     "multimodal_image_orientation_dedup",
     "multimodal_audio_mp3_frames",
-    # round-12 rotation: the 6 new r12 operators, then the queries
-    # whose code paths CHANGED this round — source_pdf_encrypted
-    # (R2/R3/R4 arms + enc_rev), pipeline_mbox_attachments (RFC 5987
-    # fallback), pipeline_crawl_robots_meta (multi-meta union),
-    # archive_zip64_meta (validated EOCD scan) — so the driver
-    # re-certifies every touched surface. Cumulative certification
-    # already covers the full registry (348/348 at r11).
-    "multimodal_audio_mp3_frames",
-    "source_pdf_encrypted_metadata",
     "pipeline_wat_writer",
     "text_main_content",
     "text_script_detect",
@@ -133,36 +113,17 @@ FRONT = [
     "pipeline_crawl_outlinks",
     "pipeline_crawl_link_graph",
     "source_rtf_text",
-    "multimodal_image_orientation_dedup",
-    "archive_7z_meta",
-    "pipeline_7z_documents",
-    "pipeline_frontier_expand",
-    "pipeline_frontier_schedule",
-    "archive_cfb_meta",
-    "source_doc_text",
-    "source_xls_cells",
-    "source_ppt_text",
-    "source_pdf_encrypted",
     "pipeline_mbox_attachments",
     "pipeline_crawl_robots_meta",
     "archive_zip64_meta",
-    "multimodal_audio_mp3_meta",  # r12: router fallback arm landed
-    # round-11 rotation (r10 verdict item 9): the cumulative driver
-    # ledger covers 328/334; the 6 round-10 additions below were
-    # verified locally but never driver-sampled — front-load them so
-    # CORRECTNESS_r11.json closes certification at the full registry.
-    # New round-11 queries are prepended above this block as they land.
+    "multimodal_audio_mp3_meta",
     "source_warc_charset",
-    "archive_zip64_meta",
     "source_odf_text",
     "source_ods_cells",
     "source_odf_metadata",
-    "pipeline_mbox_attachments",
     "source_subtitle_ass",
     "pipeline_audio_cover_art",
-    "pipeline_crawl_robots_meta",
     "pipeline_wet_writer",
-    "source_pdf_encrypted",
     "multimodal_image_exif",
     "multimodal_audio_alac_decode",
     "multimodal_audio_alac_hires",
@@ -172,18 +133,7 @@ FRONT = [
     "source_cdx_index",
     "source_wikipedia_multistream",
     "text_html_markdown",
-    # round-9 rotation (r8 verdict item 1): CORRECTNESS_r08.json came
-    # back 50/50 green, so the cumulative hash_match union over
-    # CORRECTNESS_r0{1..8}.json certifies 291/298 registry names. The
-    # only 7 without a green driver row are the post-cap round-8
-    # additions below — front-loading them completes certification of
-    # the FULL registry. New round-9 queries are prepended above that
-    # block as they land (30 new + 7 post-cap = 37, inside the
-    # driver's 50-query sample). Ordering is presentation-only: every
-    # entry still runs in the local full-registry gate.
-    # --- new round-9 operators ---
     "source_pdf_text",
-    "source_docx_text",
     "source_epub_text",
     "source_xlsx_cells",
     "source_pptx_text",
@@ -212,7 +162,6 @@ FRONT = [
     "multimodal_video_webm_meta",
     "multimodal_image_webp_meta",
     "multimodal_audio_m4a_meta",
-    # --- post-cap round-8 queries, never driver-sampled (7) ---
     "corpus_ccnet_buckets",
     "multimodal_audio_oggflac_meta",
     "multimodal_audio_wav_meta",
@@ -227,7 +176,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, with the
     newest/riskiest queries rotated to the front of the iteration
     order (see FRONT)."""
-    ordered = {n: QUERIES[n] for n in FRONT if n in QUERIES}
+    ordered = {n: QUERIES[n] for n in FRONT}
     ordered.update((n, f) for n, f in QUERIES.items() if n not in ordered)
     return ordered
 

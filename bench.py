@@ -20,6 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.host import canary_s  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -100,76 +102,19 @@ HEADLINE = [
 N_XML_DOCS = 500
 BOOKS_PER_INV = 40
 
-# Best-known engine times (sec, sf0.1) from prior clean runs. ONLY a
-# sampling heuristic: a contention window on this host can outlast the
-# whole base sample budget (observed: 11.6/11.3/10.2 s for a query whose
-# true time is ~3 s — three poisoned samples that "converge" among
-# themselves), so convergence alone can't distinguish "settled" from
-# "still stolen". While the running min is >1.5× the reference we keep
-# sampling up to `cap` instead of accepting the first plateau. Reported
-# values are always the measured min — the reference never substitutes
-# for a measurement, so a REAL regression still reports slow (after
-# walking to `cap`).
-REFERENCE = {
-    "xml_extraction": 0.95,
-    "agg_pricing_summary": 0.91,
-    "agg_cube": 0.88,
-    "join_inner_agg": 0.42,
-    "join_broadcast_dim": 0.68,
-    "join_asof": 0.32,
-    "q10_returned_items": 0.53,
-    "q18_large_orders": 0.90,
-    "window_topk_per_group": 0.33,
-    "events_sessionize": 0.26,
-    "dedup_ngram_jaccard": 1.4,
-    "dedup_minhash_lsh": 1.79,
-    "text_quality": 0.27,
-    "similarity_topk_bruteforce": 0.29,
-    # r14 opt floors (post UDF-dedup / persist fixes; sampling
-    # heuristic only — see the adaptive walk below)
-    "corpus_prepare_training_data": 1.55,
-    "dedup_sorted_neighborhood": 1.74,
-    "embedding_bitext_mine": 1.17,
-    "corpus_paragraph_dedup": 0.60,
-    "similarity_maxsim_multivector": 0.38,
-    "dedup_prefix_filter_join": 1.60,
-    "events_sessionize_incremental": 1.55,
-    "corpus_epoch_shuffle": 0.25,
-    "corpus_priority_sample_grouped": 0.28,
-    "source_warc_split": 2.3,
-    "corpus_minhash_semantic_scope": 1.47,
-    "source_pdf_text": 1.0,
-    "pipeline_documents_to_corpus": 1.25,
-    # r11: crawl→markdown re-measured at 1.66 warm min after the
-    # warc_records frame-flush fix — the old 3.8 reference let the
-    # sampler accept warm-up-inflated values; r14 opt: fused single
-    # mapInPandas chain re-measured at 1.10
-    "pipeline_crawl_to_markdown": 1.2,
-    "multimodal_audio_flac_decode": 1.11,
-    "multimodal_audio_alac_decode": 1.02,
-    "source_warc_charset": 1.1,
-    "pipeline_crawl_outlinks": 1.0,
-    "multimodal_image_orientation_dedup": 1.12,
-    "source_pdf_aesv3": 1.2,
-    "pipeline_frontier_polite": 1.33,
-    # r15 end: per-blob floors re-pinned to this round's measured
-    # post-kernel-optimization mins (lowering only — a floor can
-    # only make the contention walk take MORE samples; pdf_aesv3's
-    # 1.2 placeholder stays, already below the measured 1.43 min)
-    # r15: floors for the five entries above lowered to the r14
-    # certified BENCH_LOCAL_r14.json mins (ADVICE item: the stale
-    # floors let the contention walk accept plateaus up to ~2.4x
-    # engine time; lowering is risk-free — sampling heuristic only)
-    # r14: first real measurements (were placeholders)
-    "archive_7z_encrypted": 0.58,
-    "multimodal_audio_mp3_spectral": 0.66,
-}
+# The walk treats a sample as taken in a contended window while the
+# host canary read right after it runs above this multiple of the
+# quietest canary of the run.
+CONTENDED = 1.3
 
 
-def build_spark():
+def build_spark(event_log_dir: str | None = None):
+    """bench's session. With ``event_log_dir`` it also writes an
+    uncompressed, unrolled event log there, the form that
+    ``perfbench.eventlog.EventLog`` reads."""
     from pyspark.sql import SparkSession
 
-    return (
+    builder = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("hadoopxmlextractor-spark-bench")
         .config("spark.sql.shuffle.partitions", str(CPUS))
@@ -178,8 +123,64 @@ def build_spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    if event_log_dir is not None:
+        builder = (
+            builder.config("spark.eventLog.enabled", "true")
+            .config("spark.eventLog.dir", "file://" + os.path.abspath(event_log_dir))
+            .config("spark.eventLog.compress", "false")
+            .config("spark.eventLog.rolling.enabled", "false")
+        )
+    return builder.getOrCreate()
+
+
+def warm_up(spark, qs) -> None:
+    """Warm the JVM and the Python workers once (tiny query, not measured)."""
+    qs["scan_filter_project"](spark, SF_DIR).count()
+
+
+def walk(spark, label: str, run_once, canaries: list[float], base: int = 3,
+         cap: int = 8) -> list[tuple[float, float]]:
+    """Adaptive min-of-N; returns (seconds, canary seconds) per sample.
+
+    The first execution of a query pays one-off plan compilation,
+    classloading and Python worker spin-up, and shared virtual hosts
+    show bursty hypervisor CPU contention (task wall ≫ cpu in the event
+    log while guest-visible steal and cgroup throttling read zero) whose
+    windows can outlast a fixed sample budget (observed: dedup_minhash_lsh
+    19.98 → 10.20 → 3.27 → 2.58 s on an identical plan). So take
+    ``base`` samples, then keep sampling, up to ``cap``, while the
+    newest sample still improves the minimum by >10% or the canary read
+    right after it says the window was contended. Convergence alone is
+    spoofable: a window that covers every base sample makes three slow
+    samples agree (observed: 11.6/11.3/10.2 s for a ~3 s query).
+
+    ``canaries`` holds every canary reading of the run so far, so
+    "contended" is relative to the quietest one; each sample appends
+    its reading.
+    """
+    samples: list[tuple[float, float]] = []
+    while len(samples) < cap:
+        t0 = time.perf_counter()
+        run_once()
+        secs = time.perf_counter() - t0
+        # Release operator-internal persisted DataFrames (minhash
+        # signatures, inverted indexes) so queries are measured in
+        # isolation rather than under the previous query's memory.
+        spark.catalog.clearCache()
+        canaries.append(canary_s())
+        samples.append((secs, canaries[-1]))
+        ratio = canaries[-1] / min(canaries)
+        print(f"  {label}: {secs:.2f}s canary {ratio:.2f}", file=sys.stderr)
+        if (len(samples) >= base and secs > 0.9 * min(s for s, _ in samples[:-1])
+                and ratio <= CONTENDED):
+            break
+    return samples
+
+
+def timed_min(spark, label: str, run_once, canaries: list[float]) -> float:
+    """The fastest sample of ``walk``: the engine's time, not the host's."""
+    return round(min(s for s, _ in walk(spark, label, run_once, canaries)), 3)
 
 
 def run_noop(df) -> None:
@@ -226,55 +227,18 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    times: dict[str, float] = {}
+    warm_up(spark, qs)
+    canaries = [canary_s()]
 
-    # Warm the JVM/Python workers once (tiny query, not measured).
-    qs["scan_filter_project"](spark, SF_DIR).count()
-
-    # Each query runs twice and reports the faster run: the first
-    # execution pays one-off plan compilation / classloading / Python
-    # worker spin-up. This host also shows BURSTY HYPERVISOR CPU
-    # CONTENTION (task wall≫cpu in the event log while guest-visible
-    # /proc/stat steal and cgroup throttling read zero): identical
-    # queries can swing 3s↔30s+ through no fault of the plan. min-of-N
-    # measures the engine, not the host.
-    def timed_min(label: str, run_once, base: int = 3, cap: int = 8) -> float:
-        # Adaptive min-of-N: slow windows here last tens of seconds
-        # (event-log adjudication on an identical plan showed task
-        # cpu/wall = 0.35 with zero guest-visible steal ticks or cgroup
-        # throttling — the contention is hypervisor-level), long enough
-        # to poison all of a fixed sample budget (observed:
-        # dedup_minhash_lsh 19.98 → 10.20 → 3.27 → 2.58 s, identical
-        # plan). So: take `base` samples, then keep sampling while the
-        # newest sample is still IMPROVING the minimum by >10% — i.e.
-        # the measurement hasn't converged — up to `cap`. A quiet host
-        # pays exactly `base` runs; a stolen window walks down to the
-        # true engine time instead of reporting the burst.
-        samples = []
-        ref = REFERENCE.get(label)
-        while len(samples) < cap:
-            t0 = time.perf_counter()
-            run_once()
-            samples.append(time.perf_counter() - t0)
-            print(f"  {label}: {samples[-1]:.2f}s", file=sys.stderr)
-            # Release operator-internal persisted DataFrames (minhash
-            # signatures, inverted indexes) so queries are measured in
-            # isolation rather than under the previous query's memory.
-            spark.catalog.clearCache()
-            if len(samples) >= base and samples[-1] > 0.9 * min(samples[:-1]):
-                # Converged among themselves — but if the min is still
-                # far above the best-known engine time, a slow window
-                # may have covered every sample so far; keep walking.
-                if ref is None or min(samples) <= 1.5 * ref:
-                    break
-        return round(min(samples), 3)
-
-    times["xml_extraction"] = timed_min(
-        "xml_extraction", lambda: bench_extraction(spark)
-    )
-
+    times = {
+        "xml_extraction": timed_min(
+            spark, "xml_extraction", lambda: bench_extraction(spark), canaries
+        )
+    }
     for name in HEADLINE:
-        times[name] = timed_min(name, lambda: run_noop(qs[name](spark, SF_DIR)))
+        times[name] = timed_min(
+            spark, name, lambda: run_noop(qs[name](spark, SF_DIR)), canaries
+        )
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     result = {

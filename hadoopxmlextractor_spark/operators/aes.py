@@ -20,6 +20,10 @@ batch; there is no hot loop over corpus bytes.
 
 from __future__ import annotations
 
+import logging
+
+_log = logging.getLogger(__name__)
+
 # --- GF(2^8) tables -------------------------------------------------------
 
 _EXP = [0] * 510
@@ -229,8 +233,13 @@ if _Cipher is not None:
                         != _refc.update(_pt) + _refc.finalize()):
                     raise RuntimeError("fast AES ctx self-check failed")
         _fast_ctx = (_fast_cbc, _fast_ecb)
-    except Exception:  # pragma: no cover - binding layout changed
+    except Exception as _e:  # pragma: no cover - binding layout changed
         _fast_ctx = None
+        _log.warning(
+            "AES fast path off (%s: %s); every CBC/ECB context goes "
+            "through the public cryptography API, which is slower for "
+            "the iterated-KDF kernels", type(_e).__name__, _e,
+        )
 
 
 def _cbc_encrypt_pure(key: bytes, iv: bytes, plaintext: bytes) -> bytes:

@@ -1276,9 +1276,10 @@ def robots_admit_multi_udf(robots_by_key: dict, agent: str = "*"):
     # admission predicate through the join-key equality onto BOTH
     # union branches of the crawled side — the Python UDF ran over
     # the whole crawled set twice before this marker (baseline plan
-    # `plans/r14/pipeline_frontier_polite_before.txt`, ArrowEvalPython
-    # nodes (15)/(21)), for a filter whose only job is to gate
-    # frontier-side rows. Callers apply cheap row filters before it.
+    # `git show 03e6117:plans/r14/pipeline_frontier_polite_before.txt`,
+    # ArrowEvalPython nodes (15)/(21)), for a filter whose only job is
+    # to gate frontier-side rows. Callers apply cheap row filters
+    # before it.
     return _admit.asNondeterministic()
 
 

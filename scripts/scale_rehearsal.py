@@ -276,24 +276,10 @@ def stage_extremes() -> dict:
 def main() -> None:
     build_tables()
 
-    from pyspark.sql import SparkSession
-
+    import bench
     from __spark_entry__ import queries
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-rehearsal")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{EVLOG}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    spark = bench.build_spark(event_log_dir=EVLOG)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = queries()

@@ -160,3 +160,30 @@ def test_fast_path_equals_pure_python():
     bad = ct[:-1] + bytes([ct[-1] ^ 0x55])
     with pytest.raises(ValueError):
         A.cbc_decrypt(KEY, bytes(16), bad)
+
+
+def test_fast_path_is_active():
+    """The private-binding fast path loads in this environment: a
+    ``cryptography`` upgrade that breaks it must fail here, not quietly
+    slow the iterated-KDF kernels (``source_pdf_aesv3``)."""
+    assert A._fast_ctx is not None
+
+
+def test_fast_path_fallback_warns():
+    """A binding that no longer imports turns the fast path off with one
+    warning at import."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, types\n"
+        "import cryptography.hazmat.primitives.ciphers\n"
+        "sys.modules['cryptography.hazmat.bindings._rust'] = types.ModuleType('gone')\n"
+        "from hadoopxmlextractor_spark.operators import aes\n"
+        "assert aes._fast_ctx is None\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stderr.count("AES fast path off") == 1, out.stderr
