@@ -179,8 +179,17 @@ except Exception:  # pragma: no cover - env without cryptography
 # the same rust-side context constructor the public API uses. The
 # private binding is version-fragile by nature, so it is gated on a
 # load-time known-answer cross-check against the PUBLIC API for every
-# key size and both directions; any mismatch or import error falls
-# back to the public path. Results are byte-identical by construction.
+# key size, both modes and both directions; any mismatch or import
+# error falls back to the public path. Results are byte-identical by
+# construction.
+def _public_ctx(key: bytes, iv: bytes | None, decrypt: bool):
+    """CBC (``iv`` given) or ECB (``iv`` None) context through the
+    public ``cryptography`` API."""
+    mode = _modes.ECB() if iv is None else _modes.CBC(iv)
+    c = _Cipher(_algorithms.AES(key), mode)
+    return c.decryptor() if decrypt else c.encryptor()
+
+
 _fast_ctx = None
 if _Cipher is not None:
     try:
@@ -188,53 +197,33 @@ if _Cipher is not None:
             openssl as _rust_openssl,
         )
 
-        _create_ctx = (
-            _rust_openssl.ciphers.create_encryption_ctx,
-            _rust_openssl.ciphers.create_decryption_ctx,
-        )
         # bind the classes once — the cryptography modules route
         # attribute access through a deprecation-shim __getattr__,
         # which would otherwise fire on every call
-        _AES_cls = _algorithms.AES
-        _CBC_cls = _modes.CBC
-        _ECB_mODE = _modes.ECB()
-
-        def _fast_cbc(key: bytes, iv: bytes, decrypt: bool,
-                      _a=_AES_cls, _c=_CBC_cls, _mk=_create_ctx):
+        def _fast(key: bytes, iv: bytes | None, decrypt: bool,
+                  _a=_algorithms.AES, _c=_modes.CBC, _ecb=_modes.ECB(),
+                  _mk=(_rust_openssl.ciphers.create_encryption_ctx,
+                       _rust_openssl.ciphers.create_decryption_ctx)):
             alg = _a.__new__(_a)
             alg.key = key
+            if iv is None:
+                return _mk[decrypt](alg, _ecb)
             mode = _c.__new__(_c)
             mode._initialization_vector = iv
             return _mk[decrypt](alg, mode)
 
-        def _fast_ecb(key: bytes, decrypt: bool,
-                      _a=_AES_cls, _m=_ECB_mODE, _mk=_create_ctx):
-            alg = _a.__new__(_a)
-            alg.key = key
-            return _mk[decrypt](alg, _m)
-
+        _pt = bytes(range(64)) * 2
         for _klen in (16, 24, 32):
-            _k = bytes(range(_klen))
-            _iv = bytes(range(16, 32))
-            _pt = bytes(range(64)) * 2
-            for _dec in (False, True):
-                _ref = _Cipher(
-                    _algorithms.AES(_k), _modes.CBC(_iv)
-                )
-                _refc = _ref.decryptor() if _dec else _ref.encryptor()
-                _got = _fast_cbc(_k, _iv, _dec)
-                if (_got.update(_pt) + _got.finalize()
-                        != _refc.update(_pt) + _refc.finalize()):
-                    raise RuntimeError("fast AES ctx self-check failed")
-                _refe = _Cipher(_algorithms.AES(_k), _modes.ECB())
-                _refc = _refe.decryptor() if _dec else _refe.encryptor()
-                _got = _fast_ecb(_k, _dec)
-                if (_got.update(_pt) + _got.finalize()
-                        != _refc.update(_pt) + _refc.finalize()):
-                    raise RuntimeError("fast AES ctx self-check failed")
-        _fast_ctx = (_fast_cbc, _fast_ecb)
+            for _iv in (bytes(range(16, 32)), None):
+                for _dec in (False, True):
+                    _k = bytes(range(_klen))
+                    _got = _fast(_k, _iv, _dec)
+                    _ref = _public_ctx(_k, _iv, _dec)
+                    if (_got.update(_pt) + _got.finalize()
+                            != _ref.update(_pt) + _ref.finalize()):
+                        raise RuntimeError("fast AES ctx self-check failed")
+        _fast_ctx = _fast
     except Exception as _e:  # pragma: no cover - binding layout changed
-        _fast_ctx = None
         _log.warning(
             "AES fast path off (%s: %s); every CBC/ECB context goes "
             "through the public cryptography API, which is slower for "
@@ -242,9 +231,7 @@ if _Cipher is not None:
         )
 
 
-def _cbc_encrypt_pure(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
-    pad = 16 - len(plaintext) % 16
-    data = plaintext + bytes([pad]) * pad
+def _cbc_encrypt_blocks(key: bytes, iv: bytes, data: bytes) -> bytes:
     out = bytearray()
     prev = iv
     for i in range(0, len(data), 16):
@@ -252,6 +239,11 @@ def _cbc_encrypt_pure(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
         prev = encrypt_block(key, blk)
         out += prev
     return bytes(out)
+
+
+def _cbc_encrypt_pure(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
+    pad = 16 - len(plaintext) % 16
+    return _cbc_encrypt_blocks(key, iv, plaintext + bytes([pad]) * pad)
 
 
 def _cbc_decrypt_pure(key: bytes, iv: bytes, ciphertext: bytes) -> bytes:
@@ -262,6 +254,28 @@ def _cbc_decrypt_pure(key: bytes, iv: bytes, ciphertext: bytes) -> bytes:
         out += bytes(a ^ b for a, b in zip(decrypt_block(key, blk), prev))
         prev = blk
     return bytes(out)
+
+
+# The one context factory, picked once: the fast private-binding
+# context when its known-answer check passed, else the public API,
+# else None (no `cryptography`: the pure block loops below).
+_ctx = _fast_ctx or (_public_ctx if _Cipher is not None else None)
+
+
+def _crypt(key: bytes, iv: bytes | None, decrypt: bool, data: bytes) -> bytes:
+    """AES over block-multiple ``data``: CBC when ``iv`` is given,
+    ECB when it is None."""
+    if _ctx is not None:
+        c = _ctx(key, iv, decrypt)
+        return c.update(data) + c.finalize()
+    if iv is not None:
+        return (_cbc_decrypt_pure if decrypt else _cbc_encrypt_blocks)(
+            key, iv, data
+        )
+    block = decrypt_block if decrypt else encrypt_block
+    return b"".join(
+        block(key, data[i : i + 16]) for i in range(0, len(data), 16)
+    )
 
 
 def _check_key_iv(key: bytes, iv: bytes) -> None:
@@ -275,30 +289,28 @@ def _check_key_iv(key: bytes, iv: bytes) -> None:
         raise ValueError("IV must be 16 bytes")
 
 
+def _check_blocks(data: bytes, what: str) -> None:
+    if len(data) % 16:
+        raise ValueError(f"{what} not a multiple of the block size")
+
+
 def cbc_encrypt(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
     """AES-CBC (128/192/256 by key length) with PKCS#7 padding
-    (always appended, 1-16 bytes). Dispatches to the AES-NI-backed
+    (always appended, 1-16 bytes). Runs on the AES-NI-backed
     ``cryptography`` cipher when importable (the r12 rehearsal's
     heaviest per-blob kernel was the pure-Python block loop);
     byte-identical by construction — the test suite asserts both
     paths agree on every shape."""
     _check_key_iv(key, iv)
-    if _fast_ctx is not None:
-        pad = 16 - len(plaintext) % 16
-        enc = _fast_ctx[0](key, iv, False)
-        return enc.update(plaintext + bytes([pad]) * pad) + enc.finalize()
-    if _Cipher is not None:
-        pad = 16 - len(plaintext) % 16
-        enc = _Cipher(_algorithms.AES(key), _modes.CBC(iv)).encryptor()
-        return enc.update(plaintext + bytes([pad]) * pad) + enc.finalize()
-    return _cbc_encrypt_pure(key, iv, plaintext)
+    pad = 16 - len(plaintext) % 16
+    return _crypt(key, iv, False, plaintext + bytes([pad]) * pad)
 
 
 def cbc_decrypt(key: bytes, iv: bytes, ciphertext: bytes) -> bytes:
     """AES-CBC decrypt with PKCS#7 padding VALIDATED — a wrong key
     or truncated stream refuses (ValueError) instead of returning
-    garbage-suffixed plaintext. Same fast-path dispatch as
-    :func:`cbc_encrypt`; padding validation stays OURS either way."""
+    garbage-suffixed plaintext. Same dispatch as :func:`cbc_encrypt`;
+    padding validation stays OURS either way."""
     if len(ciphertext) == 0:
         raise ValueError("ciphertext not a multiple of the block size")
     out = bytearray(cbc_decrypt_nopad(key, iv, ciphertext))
@@ -313,35 +325,15 @@ def cbc_encrypt_nopad(key: bytes, iv: bytes, plaintext: bytes) -> bytes:
     block multiple. The PDF R5/R6 (/AESV3) /UE //OE key blobs are
     exactly 32 bytes, unpadded, IV all-zero (ISO 32000-2 §7.6.4.4)."""
     _check_key_iv(key, iv)
-    if len(plaintext) % 16:
-        raise ValueError("plaintext not a multiple of the block size")
-    if _fast_ctx is not None:
-        enc = _fast_ctx[0](key, iv, False)
-        return enc.update(plaintext) + enc.finalize()
-    if _Cipher is not None:
-        enc = _Cipher(_algorithms.AES(key), _modes.CBC(iv)).encryptor()
-        return enc.update(plaintext) + enc.finalize()
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(plaintext), 16):
-        blk = bytes(a ^ b for a, b in zip(plaintext[i : i + 16], prev))
-        prev = encrypt_block(key, blk)
-        out += prev
-    return bytes(out)
+    _check_blocks(plaintext, "plaintext")
+    return _crypt(key, iv, False, plaintext)
 
 
 def cbc_decrypt_nopad(key: bytes, iv: bytes, ciphertext: bytes) -> bytes:
     """AES-CBC decrypt without padding validation or removal."""
     _check_key_iv(key, iv)
-    if len(ciphertext) % 16:
-        raise ValueError("ciphertext not a multiple of the block size")
-    if _fast_ctx is not None:
-        dec = _fast_ctx[0](key, iv, True)
-        return dec.update(ciphertext) + dec.finalize()
-    if _Cipher is not None:
-        dec = _Cipher(_algorithms.AES(key), _modes.CBC(iv)).decryptor()
-        return dec.update(ciphertext) + dec.finalize()
-    return _cbc_decrypt_pure(key, iv, ciphertext)
+    _check_blocks(ciphertext, "ciphertext")
+    return _crypt(key, iv, True, ciphertext)
 
 
 def ecb_encrypt(key: bytes, plaintext: bytes) -> bytes:
@@ -349,35 +341,15 @@ def ecb_encrypt(key: bytes, plaintext: bytes) -> bytes:
     ECMA-376 STANDARD encryption form applies to the verifier and
     the EncryptedPackage payload."""
     _check_key_iv(key, bytes(16))
-    if len(plaintext) % 16:
-        raise ValueError("plaintext not a multiple of the block size")
-    if _fast_ctx is not None:
-        enc = _fast_ctx[1](key, False)
-        return enc.update(plaintext) + enc.finalize()
-    if _Cipher is not None:
-        enc = _Cipher(_algorithms.AES(key), _modes.ECB()).encryptor()
-        return enc.update(plaintext) + enc.finalize()
-    return b"".join(
-        encrypt_block(key, plaintext[i : i + 16])
-        for i in range(0, len(plaintext), 16)
-    )
+    _check_blocks(plaintext, "plaintext")
+    return _crypt(key, None, False, plaintext)
 
 
 def ecb_decrypt(key: bytes, ciphertext: bytes) -> bytes:
     """AES-ECB decrypt without padding handling."""
     _check_key_iv(key, bytes(16))
-    if len(ciphertext) % 16:
-        raise ValueError("ciphertext not a multiple of the block size")
-    if _fast_ctx is not None:
-        dec = _fast_ctx[1](key, True)
-        return dec.update(ciphertext) + dec.finalize()
-    if _Cipher is not None:
-        dec = _Cipher(_algorithms.AES(key), _modes.ECB()).decryptor()
-        return dec.update(ciphertext) + dec.finalize()
-    return b"".join(
-        decrypt_block(key, ciphertext[i : i + 16])
-        for i in range(0, len(ciphertext), 16)
-    )
+    _check_blocks(ciphertext, "ciphertext")
+    return _crypt(key, None, True, ciphertext)
 
 
 def ctr_winzip(key: bytes, data: bytes) -> bytes:

@@ -30,9 +30,12 @@ matrixing) re-derived from the public specification:
 Encoder is the write partner over the same surface; the entropy and
 predictor ADAPTATION code paths are SHARED between encode and decode
 (one implementation each), so the synth/replay contract cannot drift
-between the two sides. Caveat (mirror-bug ledger, like FLAC r10):
-proven against this module's own synthesizer; cross-validate against
-a second decoder when the environment permits.
+between the two sides. Bits go through the shared MSB-first
+``bitio.BitReader``/``BitWriter`` (overrun message "ALAC bitstream
+overrun"); the adaptive-Golomb walks inline over their state.
+Caveat (mirror-bug ledger, like FLAC r10): proven against this
+module's own synthesizer; cross-validate against a second decoder
+when the environment permits.
 
 Reference parity note: the reference decodes records packed in Hadoop
 containers (SeqXmlRecordReader.java:233-328); this is the same
@@ -42,6 +45,8 @@ byte-level record discipline applied to an audio bitstream.
 from __future__ import annotations
 
 import struct
+
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
 
 # adaptive-Golomb constants (public ALACSpecificConfig defaults)
 _QBSHIFT = 9
@@ -53,77 +58,6 @@ _BITOFF = 24
 _MAX_PREFIX = 9
 _MAX_RUN_BITS = 16
 PB0, MB0, KB0, MAXRUN0 = 40, 10, 14, 255
-
-
-class _BR:
-    """MSB-first bit reader (same convention as operators/flac.py)."""
-
-    def __init__(self, data: bytes, pos_bits: int = 0):
-        self.d = data
-        self.pos = pos_bits
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        pos = self.pos
-        end = pos + n
-        byte_end = (end + 7) >> 3
-        if byte_end > len(self.d):
-            raise ValueError("ALAC bitstream overrun")
-        chunk = int.from_bytes(self.d[pos >> 3 : byte_end], "big")
-        self.pos = end
-        return (chunk >> ((byte_end << 3) - end)) & ((1 << n) - 1)
-
-    def sread(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >= 1 << (n - 1) else v
-
-    def leading_ones(self, cap: int) -> int:
-        """Count of consecutive 1 bits (capped), NOT consumed."""
-        d = self.d
-        pos = self.pos
-        nbits = len(d) << 3
-        q = 0
-        while q < cap:
-            p = pos + q
-            if p >= nbits:
-                raise ValueError("ALAC bitstream overrun")
-            if not (d[p >> 3] >> (7 - (p & 7))) & 1:
-                break
-            q += 1
-        return q
-
-
-class _BW:
-    """MSB-first bit writer."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nacc = 0
-
-    def write(self, v: int, n: int) -> None:
-        if n == 0:
-            return
-        if not 0 <= v < (1 << n):
-            raise ValueError("ALAC bit-writer value out of range")
-        self.acc = (self.acc << n) | v
-        self.nacc += n
-        while self.nacc >= 8:
-            self.nacc -= 8
-            self.buf.append((self.acc >> self.nacc) & 0xFF)
-        self.acc &= (1 << self.nacc) - 1
-
-    def swrite(self, v: int, n: int) -> None:
-        self.write(v & ((1 << n) - 1), n)
-
-    def align(self) -> None:
-        if self.nacc:
-            self.write(0, 8 - self.nacc)
-
-    def bytes(self) -> bytes:
-        assert self.nacc == 0
-        return bytes(self.buf)
 
 
 def _lead(x: int) -> int:
@@ -163,7 +97,7 @@ def _mb_update(mb: int, pb: int, n: int) -> int:
     return 0xFFFF if n > 0xFFFF else mb
 
 
-def _dyn_get(br: _BR, m: int, k: int, escape_bits: int) -> int:
+def _dyn_get(br: BitReader, m: int, k: int, escape_bits: int) -> int:
     """One modified-Golomb value: unary prefix of 1s (9 escapes to
     ``escape_bits`` raw bits); remainder in k bits unless it is 0,
     which spends only k−1 (m = 2^k − 1 truncated coding)."""
@@ -187,7 +121,7 @@ def _dyn_get(br: _BR, m: int, k: int, escape_bits: int) -> int:
     return pre * m + v - 1
 
 
-def _dyn_put(bw: _BW, n: int, m: int, k: int, escape_bits: int) -> None:
+def _dyn_put(bw: BitWriter, n: int, m: int, k: int, escape_bits: int) -> None:
     """Write partner of :func:`_dyn_get`."""
     div = n // m
     if div >= _MAX_PREFIX:
@@ -208,7 +142,7 @@ def _dyn_put(bw: _BW, n: int, m: int, k: int, escape_bits: int) -> None:
 
 
 def _dyn_decomp_ref(
-    br: _BR, num: int, max_size: int, mb0: int, pb: int, kb: int
+    br: BitReader, num: int, max_size: int, mb0: int, pb: int, kb: int
 ) -> list[int]:
     """Residual block decode: adaptive Golomb + zigzag sign + the
     low-mean zero-run mode. REFERENCE form, composed of the shared
@@ -241,7 +175,7 @@ def _dyn_decomp_ref(
 
 
 def _dyn_decomp(
-    br: _BR, num: int, max_size: int, mb0: int, pb: int, kb: int
+    br: BitReader, num: int, max_size: int, mb0: int, pb: int, kb: int
 ) -> list[int]:
     """r15 opt: :func:`_dyn_decomp_ref` with the per-sample helper
     calls (`_golomb_params`/`_dyn_get`/`_mb_update`/
@@ -382,7 +316,7 @@ def _dyn_decomp(
 
 
 def _dyn_comp_ref(
-    bw: _BW, vals: list[int], max_size: int, mb0: int, pb: int, kb: int
+    bw: BitWriter, vals: list[int], max_size: int, mb0: int, pb: int, kb: int
 ) -> None:
     """Write partner of :func:`_dyn_decomp_ref` — identical state
     walk, composed of the shared helpers (the firewall form; the
@@ -417,7 +351,7 @@ def _dyn_comp_ref(
 
 
 def _dyn_comp(
-    bw: _BW, vals: list[int], max_size: int, mb0: int, pb: int, kb: int
+    bw: BitWriter, vals: list[int], max_size: int, mb0: int, pb: int, kb: int
 ) -> None:
     """r15 opt: :func:`_dyn_comp_ref` with `_dyn_put`/`_golomb_params`
     and the bit-writer inlined over a local accumulator — same bit
@@ -429,7 +363,7 @@ def _dyn_comp(
     c = 0
     num = len(vals)
     acc = bw.acc
-    nacc = bw.nacc
+    nacc = bw.nbits
     buf = bw.buf
     append = buf.append
     while c < num:
@@ -506,7 +440,7 @@ def _dyn_comp(
                 zmode = 0
             mb = 0
     bw.acc = acc
-    bw.nacc = nacc
+    bw.nbits = nacc
 
 
 # ---------------------------------------------------------------------------
@@ -610,7 +544,7 @@ def _pc_block(
 _ID_SCE, _ID_CPE, _ID_END = 0, 3, 7
 
 
-def _read_channel_params(br: _BR) -> dict:
+def _read_channel_params(br: BitReader) -> dict:
     hb = br.read(8)
     mode, denshift = hb >> 4, hb & 0xF
     hb = br.read(8)
@@ -621,7 +555,7 @@ def _read_channel_params(br: _BR) -> dict:
     }
 
 
-def _write_channel_params(bw: _BW, arm: dict) -> None:
+def _write_channel_params(bw: BitWriter, arm: dict) -> None:
     bw.write((arm.get("mode", 0) << 4) | arm["denshift"], 8)
     bw.write((arm.get("pbf", 4) << 5) | len(arm["coefs"]), 8)
     for c in arm["coefs"]:
@@ -629,7 +563,7 @@ def _write_channel_params(bw: _BW, arm: dict) -> None:
 
 
 def _decode_residual_channel(
-    br: _BR, num: int, chanbits: int, cfg: dict, params: dict
+    br: BitReader, num: int, chanbits: int, cfg: dict, params: dict
 ) -> list[int]:
     pb = (cfg["pb"] * params["pbf"]) >> 2
     resid = _dyn_decomp(br, num, chanbits, cfg["mb"], pb, cfg["kb"])
@@ -640,7 +574,7 @@ def _decode_residual_channel(
     )
 
 
-def _decode_element(br: _BR, stereo: bool, cfg: dict) -> list[list[int]]:
+def _decode_element(br: BitReader, stereo: bool, cfg: dict) -> list[list[int]]:
     """One SCE/CPE element body (tag already consumed) → channels."""
     br.read(4)  # element instance tag
     if br.read(12) != 0:
@@ -687,7 +621,7 @@ def _decode_element(br: _BR, stereo: bool, cfg: dict) -> list[list[int]]:
     else:
         chans = [u]
     if bytes_shifted:
-        sbr = _BR(br.d, shift_pos)
+        sbr = BitReader(br.d, shift_pos, br.overrun)
         for i in range(num):  # interleaved per sample across channels
             for ch in chans:
                 ch[i] = (ch[i] << shift) | sbr.read(shift)
@@ -697,7 +631,7 @@ def _decode_element(br: _BR, stereo: bool, cfg: dict) -> list[list[int]]:
 def decode_alac_packet(data: bytes, cfg: dict) -> list[list[int]]:
     """One mdat packet → per-channel sample lists (elements walked in
     order, END byte-aligns)."""
-    br = _BR(data)
+    br = BitReader(data, 0, "ALAC bitstream overrun")
     chans: list[list[int]] = []
     while True:
         tag = br.read(3)
@@ -725,7 +659,7 @@ def encode_alac_packet(
     ``bytes_shifted`` splits off the low bytes into the shift buffer
     (the real >16-bit layout): prediction/matrixing run on the high
     parts, the lows ride verbatim between params and residuals."""
-    bw = _BW()
+    bw = BitWriter()
     num = len(channels[0])
     stereo = len(channels) == 2
     bit_depth = cfg["bit_depth"]
@@ -788,7 +722,7 @@ def encode_alac_packet(
             )
     bw.write(_ID_END, 3)
     bw.align()
-    return bw.bytes()
+    return bw.tobytes()
 
 
 # ---------------------------------------------------------------------------

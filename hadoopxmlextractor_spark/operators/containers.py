@@ -28,6 +28,8 @@ import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
+
 # ---------------------------------------------------------------------------
 # MP4 / ISO-BMFF (ISO 14496-12) box walk
 # ---------------------------------------------------------------------------
@@ -1501,49 +1503,8 @@ def mp3_frame_info(blob: bytes) -> dict:
 # curation signals ride on relative energy anyway).
 # ---------------------------------------------------------------------------
 
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.nbits += bits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            return bytes(self.buf) + bytes(
-                [(self.acc << (8 - self.nbits)) & 0xFF]
-            )
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-
-    def read(self, bits: int) -> int:
-        # r15 opt: whole-byte slice instead of the per-bit loop (the
-        # MP1/MP2/MP3 decode hot path). Same overrun condition: the
-        # old loop raised iff any needed bit's byte was past the end,
-        # i.e. iff pos+bits overruns len(data)*8.
-        if bits == 0:
-            return 0
-        pos = self.pos
-        end = pos + bits
-        byte_end = (end + 7) >> 3
-        d = self.data
-        if byte_end > len(d):
-            raise ValueError("Layer I payload exhausted")
-        chunk = int.from_bytes(d[pos >> 3 : byte_end], "big")
-        self.pos = end
-        return (chunk >> ((byte_end << 3) - end)) & ((1 << bits) - 1)
+# overrun refusal of every MPEG audio bit reader (Layers I-III)
+_EXHAUSTED = "Layer I payload exhausted"
 
 
 def build_mp1(
@@ -1571,7 +1532,7 @@ def build_mp1(
             (br_idx << 4) | (sr_idx << 2),
             3 << 6,  # mono
         ])
-        w = _BitWriter()
+        w = BitWriter()
         for sb in range(32):
             nb = by_sb.get(sb, (1, 0, []))[0]
             w.write(nb - 1 if sb in by_sb else 0, 4)
@@ -1581,7 +1542,7 @@ def build_mp1(
             for sb in sorted(by_sb):
                 nb, _scf, codes = by_sb[sb]
                 w.write(codes[s], nb)
-        body = w.bytes()
+        body = w.tobytes()
         if len(header) + len(body) > flen:
             raise ValueError("Layer I frame content exceeds frame size")
         out += header + body + b"\x00" * (flen - 4 - len(body))
@@ -1661,7 +1622,7 @@ def build_mp2(
             (br_idx << 4) | (sr_idx << 2),
             3 << 6,  # mono
         ])
-        w = _BitWriter()
+        w = BitWriter()
         for sb in range(sblimit):
             classes = _mp2_classes(table, sb)
             nbal = {15: 4, 7: 3, 3: 2}[len(classes)]
@@ -1691,7 +1652,7 @@ def build_mp2(
                     nbits = (steps + 1).bit_length() - 1
                     for s in (s0, s1, s2):
                         w.write(s, nbits)
-        body = w.bytes()
+        body = w.tobytes()
         if len(header) + len(body) > flen:
             raise ValueError("Layer II frame content exceeds frame size")
         out += header + body + b"\x00" * (flen - 4 - len(body))
@@ -1756,7 +1717,7 @@ def mp2_subband_stats(blob: bytes) -> list[dict]:
         if off + flen > end:
             raise ValueError("Layer II frame past stream end")
         crc_len = 0 if (b1 & 1) else 2
-        r = _BitReader(blob[off + 4 + crc_len : off + flen])
+        r = BitReader(blob[off + 4 + crc_len : off + flen], 0, _EXHAUSTED)
         allocs = []
         for sb in range(sblimit):
             classes = _mp2_classes(table, sb)
@@ -1873,7 +1834,7 @@ def mp1_subband_stats(blob: bytes) -> list[dict]:
         if off + flen > end:
             raise ValueError("Layer I frame past stream end")
         crc_len = 0 if (b1 & 1) else 2
-        r = _BitReader(blob[off + 4 + crc_len : off + flen])
+        r = BitReader(blob[off + 4 + crc_len : off + flen], 0, _EXHAUSTED)
         allocs = [r.read(4) for _ in range(32)]
         if any(a == 15 for a in allocs):
             raise ValueError("forbidden Layer I allocation 15")

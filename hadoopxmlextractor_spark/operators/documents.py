@@ -49,6 +49,12 @@ import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.bitio import (
+    _bounded_inflate,
+    _bounded_unxz,
+    _bz2_decompress_streams,
+)
+
 # ---------------------------------------------------------------------------
 # ZIP container — EOCD scan-back + central-directory walk + inflate
 # ---------------------------------------------------------------------------
@@ -58,39 +64,6 @@ _EOCD64_SIG = b"PK\x06\x06"
 _EOCD64_LOC_SIG = b"PK\x06\x07"
 _CEN_SIG = b"PK\x01\x02"
 _LOC_SIG = b"PK\x03\x04"
-
-# Hard ceiling on any single inflate whose container declares no
-# uncompressed size (gzip'd tar, PDF FlateDecode). DEFLATE's intrinsic
-# max ratio is ~1032:1, so a crafted small blob bombs by depth/size,
-# not ratio — a per-stream absolute cap keeps one hostile member from
-# OOMing an executor; legitimate members beyond it refuse to the
-# NULL-marker row like any other malformed blob.
-_MAX_INFLATE = 256 * 1024 * 1024
-
-
-def _bounded_inflate(raw: bytes, wbits: int, cap: int = _MAX_INFLATE) -> bytes:
-    """zlib inflate in 1 MiB steps with a hard output bound — refuses
-    (ValueError) instead of materializing a decompression bomb."""
-    d = zlib.decompressobj(wbits)
-    chunks: list[bytes] = []
-    total = 0
-    buf = raw
-    while True:
-        out = d.decompress(buf, 1 << 20)
-        if out:
-            chunks.append(out)
-            total += len(out)
-            if total > cap:
-                raise ValueError("inflated output exceeds bound")
-        buf = d.unconsumed_tail
-        if not buf:
-            break
-    chunks.append(d.flush())
-    if not d.eof:
-        # flush() never raises on a cut-off stream; a capture truncated
-        # mid-stream (or mid-trailer) must refuse, not emit a prefix
-        raise ValueError("truncated compressed stream")
-    return b"".join(chunks)
 
 
 def _zip_eocd_pos(blob: bytes) -> int:
@@ -3360,29 +3333,6 @@ def _tar_checksum(header: bytes) -> tuple[int, int]:
     return unsigned, signed
 
 
-def _bounded_unxz(raw: bytes, cap: int = _MAX_INFLATE) -> bytes:
-    """xz decompress with the same hard output bound and truncation
-    refusal as the zlib/bz2 walks."""
-    import lzma
-
-    d = lzma.LZMADecompressor()
-    out: list[bytes] = []
-    total = 0
-    piece = d.decompress(raw, 1 << 20)
-    while True:
-        if piece:
-            out.append(piece)
-            total += len(piece)
-            if total > cap:
-                raise ValueError("inflated output exceeds bound")
-        if d.eof:
-            break
-        if d.needs_input:
-            raise ValueError("truncated xz stream")
-        piece = d.decompress(b"", 1 << 20)
-    return b"".join(out)
-
-
 def _tar_pax_records(data: bytes) -> dict[str, str]:
     """Key→value records of a PAX extended header payload: each
     record is ``<len> <key>=<value>\\n`` where <len> counts the WHOLE
@@ -5025,35 +4975,6 @@ def wikitext_to_text(src: str) -> str:
     s = s.replace("'''", "").replace("''", "")
     s = re.sub(r"^=+\s*(.*?)\s*=+\s*$", r"\1", s, flags=re.M)
     return " ".join(s.split())
-
-
-def _bz2_decompress_streams(raw: bytes, cap: int = _MAX_INFLATE) -> bytes:
-    """Decompress a CONCATENATION of bz2 streams (the multistream dump
-    layout) with the same hard output bound as :func:`_bounded_inflate`
-    — refuses bombs and truncated streams."""
-    import bz2 as _bz2
-
-    out: list[bytes] = []
-    total = 0
-    pos = 0
-    while pos < len(raw):
-        if raw[pos : pos + 3] != b"BZh":
-            raise ValueError("not a bz2 stream boundary")
-        d = _bz2.BZ2Decompressor()
-        piece = d.decompress(raw[pos:], 1 << 20)
-        while True:
-            if piece:
-                out.append(piece)
-                total += len(piece)
-                if total > cap:
-                    raise ValueError("inflated output exceeds bound")
-            if d.eof:
-                break
-            if d.needs_input:
-                raise ValueError("truncated bz2 stream")
-            piece = d.decompress(b"", 1 << 20)
-        pos = len(raw) - len(d.unused_data)
-    return b"".join(out)
 
 
 def _wikipedia_page_rows(did, data: bytes) -> list[dict]:

@@ -22,6 +22,9 @@ three independent integrity layers a decode fault cannot all satisfy.
 
 Encoder is the bit-exact write partner over the same surface, used by
 the fixture synthesizer to rotate every decode path deterministically.
+Both sides run on the shared MSB-first ``bitio.BitReader`` /
+``BitWriter`` (overrun message "FLAC bitstream overrun"); the Rice
+residual walks inline over their state.
 Reference parity note: the reference decodes records packed in Hadoop
 containers (SeqXmlRecordReader.java:233-328); this is the same
 byte-level record discipline applied to an audio bitstream.
@@ -32,6 +35,8 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
 
 
 def _interleave_le(samples: list[list[int]], nbytes: int) -> bytes:
@@ -94,84 +99,6 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BR:
-    """MSB-first bit reader (the FLAC convention — opposite of
-    VP8L's LSB-first). Multi-bit reads slice whole bytes instead of
-    looping per bit — the decode hot path."""
-
-    def __init__(self, data: bytes, pos_bits: int = 0):
-        self.d = data
-        self.pos = pos_bits
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        end = pos + n
-        byte_end = (end + 7) >> 3
-        if byte_end > len(self.d):
-            raise ValueError("FLAC bitstream overrun")
-        chunk = int.from_bytes(self.d[pos >> 3 : byte_end], "big")
-        self.pos = end
-        return (chunk >> ((byte_end << 3) - end)) & ((1 << n) - 1)
-
-    def sread(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >= 1 << (n - 1) else v
-
-    def unary(self) -> int:
-        d = self.d
-        pos = self.pos
-        q = 0
-        nbits = len(d) << 3
-        while True:
-            if pos >= nbits:
-                raise ValueError("FLAC bitstream overrun")
-            if (d[pos >> 3] >> (7 - (pos & 7))) & 1:
-                self.pos = pos + 1
-                return q
-            pos += 1
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("runaway unary code")
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
-class _BW:
-    """MSB-first bit writer — byte-accumulator form (the encode hot
-    path: no per-bit list)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def swrite(self, v: int, n: int) -> None:
-        self.write(v & ((1 << n) - 1), n)
-
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then the terminating 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def tobytes(self) -> bytes:
-        self.align()
-        return bytes(self.out)
-
-
 _SR_CODES = {88200: 1, 176400: 2, 192000: 3, 8000: 4, 16000: 5,
              22050: 6, 24000: 7, 32000: 8, 44100: 9, 48000: 10,
              96000: 11}
@@ -193,7 +120,7 @@ def _unzigzag(u: int) -> int:
     return u >> 1 if u % 2 == 0 else -(u >> 1) - 1
 
 
-def _read_residual(br: _BR, blocksize: int, order: int) -> list[int]:
+def _read_residual(br: BitReader, blocksize: int, order: int) -> list[int]:
     method = br.read(2)
     if method > 1:
         raise ValueError("reserved residual coding method")
@@ -278,7 +205,7 @@ def _read_residual(br: _BR, blocksize: int, order: int) -> list[int]:
 
 
 def _write_residual(
-    bw: _BW, res: list[int], blocksize: int, order: int,
+    bw: BitWriter, res: list[int], blocksize: int, order: int,
     *, po: int, rice2: bool, escape_all: bool,
 ) -> None:
     method = 1 if rice2 else 0
@@ -293,7 +220,7 @@ def _write_residual(
     # asserted in tests).
     acc = bw.acc
     nbits = bw.nbits
-    out = bw.out
+    out = bw.buf
     append = out.append
     for part in range(1 << po):
         n = (blocksize >> po) - (order if part == 0 else 0)
@@ -376,7 +303,7 @@ def _predict(warm: list[int], res: list[int], coefs: list[int],
     return out
 
 
-def _read_subframe(br: _BR, blocksize: int, bps: int) -> list[int]:
+def _read_subframe(br: BitReader, blocksize: int, bps: int) -> list[int]:
     if br.read(1):
         raise ValueError("subframe padding bit set")
     t = br.read(6)
@@ -458,7 +385,7 @@ def decode_flac(blob: bytes) -> dict:
     modes: list[int] = []
     while pos < len(blob):
         frame_start = pos
-        br = _BR(blob, pos * 8)
+        br = BitReader(blob, pos * 8, "FLAC bitstream overrun")
         if br.read(14) != 0b11111111111110:
             raise ValueError("bad frame sync")
         if br.read(1):
@@ -568,7 +495,7 @@ def decode_flac(blob: bytes) -> dict:
 
 
 def _write_subframe(
-    bw: _BW, ch_samples: list[int], bps: int, plan: dict
+    bw: BitWriter, ch_samples: list[int], bps: int, plan: dict
 ) -> None:
     """One subframe per the plan: {type: 'constant'|'verbatim'|
     'fixed'|'lpc', order, wasted, po, rice2, escape}."""
@@ -694,7 +621,7 @@ def encode_flac(
         else:
             coded = frame
             bpss = [bits] * channels
-        bw = _BW()
+        bw = BitWriter()
         bw.write(0b11111111111110, 14)
         bw.write(0, 1)
         bw.write(0, 1)  # fixed blocking
@@ -706,7 +633,7 @@ def encode_flac(
         bw.write(fno, 8)  # UTF-8 frame number (< 0x80: one byte)
         bw.write(blocksize - 1, 8)
         hdr = bw.tobytes()
-        bw2 = _BW()
+        bw2 = BitWriter()
         for byte in hdr:
             bw2.write(byte, 8)
         bw2.write(_crc8(hdr), 8)

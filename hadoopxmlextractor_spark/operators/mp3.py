@@ -56,9 +56,9 @@ from __future__ import annotations
 
 import struct  # noqa: F401
 
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
 from hadoopxmlextractor_spark.operators.containers import (
-    _BitReader,
-    _BitWriter,
+    _EXHAUSTED,
     _MP3_BR_V1,
     _MP3_BR_V2,
     _MP3_SR,
@@ -164,7 +164,7 @@ class _SideInfo:
 def _parse_side_info(data: bytes) -> tuple[int, list[int], list[_SideInfo]]:
     """(main_data_begin, scfsi[4], granule side info ×2) of a mono
     MPEG-1 frame's 17 side-info bytes."""
-    r = _BitReader(data)
+    r = BitReader(data, 0, _EXHAUSTED)
     mdb = r.read(9)
     r.read(5)  # private_bits (mono)
     scfsi = [r.read(1) for _ in range(4)]
@@ -207,7 +207,7 @@ def _parse_side_info_lsf(data: bytes) -> tuple[int, list[_SideInfo]]:
     granule whose scalefac_compress widens to 9 bits and whose
     preflag derives from the scalefac_compress branch instead of a
     bit."""
-    r = _BitReader(data)
+    r = BitReader(data, 0, _EXHAUSTED)
     mdb = r.read(8)
     r.read(1)  # private_bits (mono)
     si = _SideInfo()
@@ -255,7 +255,7 @@ _HUFF_BIG_LUT = {
 
 
 def _read_huff_pair_serial(
-    r: _BitReader, table_id: int
+    r: BitReader, table_id: int
 ) -> tuple[int, int]:
     """Bit-serial reference walk (also the fallback where the stream
     tail is shorter than the LUT width)."""
@@ -271,7 +271,7 @@ def _read_huff_pair_serial(
     raise ValueError("Huffman codeword exceeds table depth")
 
 
-def _read_huff_pair(r: _BitReader, table_id: int) -> tuple[int, int]:
+def _read_huff_pair(r: BitReader, table_id: int) -> tuple[int, int]:
     if table_id not in _HUFF_BIG:
         raise ValueError(
             f"Huffman big-value table {table_id} not in registry"
@@ -280,7 +280,7 @@ def _read_huff_pair(r: _BitReader, table_id: int) -> tuple[int, int]:
         return 0, 0
     width, lut = _HUFF_BIG_LUT[table_id]
     pos = r.pos
-    d = r.data
+    d = r.d
     byte_end = (pos + width + 7) >> 3
     if byte_end > len(d):
         # stream tail shorter than the LUT width: the serial walk
@@ -295,7 +295,7 @@ def _read_huff_pair(r: _BitReader, table_id: int) -> tuple[int, int]:
     return hit[0], hit[1]
 
 
-def _read_cnt1(r: _BitReader, select: int) -> tuple[int, int, int, int]:
+def _read_cnt1(r: BitReader, select: int) -> tuple[int, int, int, int]:
     if select != 1:
         raise ValueError("count1 table A not in registry")
     v = r.read(4) ^ 0xF
@@ -383,7 +383,7 @@ def mp3_spectral_stats(blob: bytes) -> list[dict]:
         start = slot_off - mdb
         if start < 0:
             raise ValueError("Layer III reservoir underflow")
-        r = _BitReader(bytes(md_all[start:]))
+        r = BitReader(bytes(md_all[start:]), 0, _EXHAUSTED)
         gr0_short = False
         for g_no, si in enumerate(grs):
             if si.mixed_block:
@@ -457,7 +457,7 @@ def mp3_spectral_stats(blob: bytes) -> list[dict]:
             # local reader state (LUT hit path; any tail-short or
             # unmatched prefix falls back to the function forms,
             # which preserve the exact serial overrun behavior)
-            d = r.data
+            d = r.d
             dlen8 = len(d) << 3
             for reg, bound in enumerate(region_bounds):
                 tid = si.table_select[reg]
@@ -624,7 +624,7 @@ def _encode_granule(si_dict: dict, spectrum: list[int], sr: int,
     side-info fields). ``spectrum`` is 576 ints in {−1, 0, 1}."""
     L = _SFB_LONG[sr]
     short = si_dict["short"]
-    w = _BitWriter()
+    w = BitWriter()
     if short:
         S = _SFB_SHORT[sr]
         slen1, slen2 = _SLEN[si_dict["scalefac_compress"]]
@@ -720,7 +720,7 @@ def _encode_granule(si_dict: dict, spectrum: list[int], sr: int,
         "region1_count": 0,
         "preflag": si_dict.get("preflag", 0),
     }
-    return w.bytes(), p23, side
+    return w.tobytes(), p23, side
 
 
 def build_mp3l3(
@@ -754,7 +754,7 @@ def build_mp3l3(
     for scfsi, granules in frame_specs:
         if version != "1" and (len(granules) != 1 or any(scfsi)):
             raise ValueError("LSF frames carry one granule, no scfsi")
-        frame_bits = _BitWriter()
+        frame_bits = BitWriter()
         gr_sides = []
         for g_no, gd in enumerate(granules):
             payload, p23, side = _encode_granule(
@@ -772,7 +772,7 @@ def build_mp3l3(
                     len(payload) * 8 - p23
                 )
                 frame_bits.write(val, p23)
-        mds.append(frame_bits.bytes())
+        mds.append(frame_bits.tobytes())
         sides.append((scfsi, gr_sides))
 
     # greedy reservoir packing with stuffing to honor the cap
@@ -807,7 +807,7 @@ def build_mp3l3(
             (br_idx << 4) | (sr_idx << 2),
             3 << 6,  # mono
         ])
-        w = _BitWriter()
+        w = BitWriter()
         w.write(mdbs[k], 9 if version == "1" else 8)
         w.write(0, 5 if version == "1" else 1)
         if version == "1":
@@ -837,7 +837,7 @@ def build_mp3l3(
                 w.write(side["preflag"], 1)
             w.write(1, 1)  # scalefac_scale = 1 (dyadic contract)
             w.write(1, 1)  # count1 table B
-        side_bytes = w.bytes()
+        side_bytes = w.tobytes()
         if len(side_bytes) != side_len:
             raise ValueError("side info misencoded")
         slot = stream_md[k * cap : (k + 1) * cap]

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.bitio import _MAX_INFLATE, _bounded_inflate
+
 MEDIA_SCHEMA = (
     "media_id long, media_type string, content binary, "
     "meta struct<source:string, n_bytes:long, declared_format:string>"
@@ -105,6 +107,26 @@ _ADAM7 = [
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
 ]
+
+
+def _png_inflate(idat: list[bytes], w: int, h: int, channels: int,
+                 depth: int, interlace: int) -> bytes:
+    """The concatenated IDAT stream inflated under the exact byte count
+    the IHDR implies: per scanline of each (Adam7) pass, one filter
+    byte plus the packed samples. A header implying more than the
+    inflate ceiling refuses before anything image-sized is allocated;
+    a stream inflating past its count refuses too (ValueError)."""
+    import zlib
+
+    need = 0
+    for x0, y0, dx, dy in _ADAM7 if interlace else [(0, 0, 1, 1)]:
+        pw = (w - x0 + dx - 1) // dx
+        ph = (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            need += ph * ((pw * channels * depth + 7) // 8 + 1)
+    if need > _MAX_INFLATE:
+        raise ValueError("PNG header implies more than the inflate bound")
+    return _bounded_inflate(b"".join(idat), zlib.MAX_WBITS, need)
 
 
 def _png_unfilter(raw: bytes, offset: int, w_px: int, h_px: int, bpp: int):
@@ -238,7 +260,8 @@ def _decode_png(blob: bytes):
     """PNG → (H, W, 3) uint8 array with ZERO dependencies beyond
     stdlib ``zlib`` + numpy — the codec leg PIL's absence from this
     container used to block, made real: chunk walk (IHDR / PLTE /
-    IDAT* / IEND), inflate, per-scanline UNFILTERING (all five PNG
+    IDAT* / IEND), inflate bounded by the IHDR's exact byte count
+    (:func:`_png_inflate`), per-scanline UNFILTERING (all five PNG
     filter types: None/Sub/Up/Average/Paeth, the Paeth predictor per
     the spec), then color normalization (grayscale and palette expand
     to RGB; alpha channels drop). Covers bit depths 8 AND 16 (16-bit
@@ -298,7 +321,7 @@ def _decode_png(blob: bytes):
             # scaling.
             if color not in (0, 3):
                 return None
-            raw = zlib.decompress(b"".join(idat))
+            raw = _png_inflate(idat, w, h, channels, depth, interlace)
             samples = np.zeros((h, w), dtype=np.uint8)
             if interlace == 0:
                 stride = (w * depth + 7) // 8
@@ -328,7 +351,7 @@ def _decode_png(blob: bytes):
             return None  # spec forbids 16-bit palette
         bps = depth // 8
         bpp = channels * bps
-        raw = zlib.decompress(b"".join(idat))
+        raw = _png_inflate(idat, w, h, channels, depth, interlace)
         if interlace == 0:
             rows, _ = _png_unfilter(raw, 0, w, h, bpp)
             data = rows.reshape(h, w, bpp)

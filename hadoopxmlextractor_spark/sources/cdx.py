@@ -30,7 +30,7 @@ import json
 import zlib
 from urllib.parse import urlsplit
 
-from hadoopxmlextractor_spark.operators.documents import _bounded_inflate
+from hadoopxmlextractor_spark.operators.bitio import _bounded_inflate
 
 CDX_SCHEMA = (
     "doc_id bigint, urlkey string, ts_ms bigint, url string, "

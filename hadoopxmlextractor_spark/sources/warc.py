@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.bitio import _bounded_inflate
+
 
 def _local_path(path: str) -> str:
     """Executor-side local path of a Spark file URI. Hadoop percent-
@@ -633,10 +635,6 @@ def split_http_response(payload: bytes):
     truncated/corrupt encoded bodies return (None, None, payload) —
     the capture stays auditable instead of flowing garbage into the
     corpus."""
-    # deferred import: operators.documents owns the bounded inflater
-    # (hostile-blob cap); it has no sources.* imports, so no cycle
-    from hadoopxmlextractor_spark.operators.documents import _bounded_inflate
-
     if not payload.startswith(b"HTTP/"):
         return None, None, payload
     try:

@@ -10,6 +10,12 @@ import random
 import pytest
 
 from hadoopxmlextractor_spark.operators import alac as A
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
+
+
+def _br(data: bytes) -> BitReader:
+    return BitReader(data, 0, "ALAC bitstream overrun")
+
 
 CFG2 = {
     "frame_length": 64, "bit_depth": 16, "pb": A.PB0, "mb": A.MB0,
@@ -33,29 +39,29 @@ def test_entropy_coder_roundtrip_and_zero_run_compression():
         [0] * 64,
         [32767, -32768] * 10,
     ):
-        bw = A._BW()
+        bw = BitWriter()
         A._dyn_comp(bw, vals, 17, A.MB0, A.PB0, A.KB0)
         bw.align()
-        br = A._BR(bw.bytes())
+        br = _br(bw.tobytes())
         assert A._dyn_decomp(br, len(vals), 17, A.MB0, A.PB0, A.KB0) == vals
     # the zero-run coder is LIVE: a silence tail must cost almost
     # nothing vs coding each zero individually
-    bw = A._BW()
+    bw = BitWriter()
     A._dyn_comp(bw, [9, -9] + [0] * 500, 17, A.MB0, A.PB0, A.KB0)
     bw.align()
-    assert len(bw.bytes()) < 20  # run-coded, not 500 symbols
+    assert len(bw.tobytes()) < 20  # run-coded, not 500 symbols
 
 
 def test_entropy_escape_path_is_live():
     # a value far above the adapted mean forces the 9-ones escape
-    bw = A._BW()
+    bw = BitWriter()
     A._dyn_comp(bw, [1, 1, 30000], 16, A.MB0, A.PB0, A.KB0)
     bw.align()
-    data = bw.bytes()
+    data = bw.tobytes()
     # 9 consecutive 1 bits appear somewhere (the escape prefix)
     bits = "".join(f"{b:08b}" for b in data)
     assert "1" * 9 in bits
-    br = A._BR(data)
+    br = _br(data)
     assert A._dyn_decomp(br, 3, 16, A.MB0, A.PB0, A.KB0) == [1, 1, 30000]
 
 
@@ -260,7 +266,7 @@ def test_dyn_coder_fast_matches_reference():
                 rng.choice([0, 0, 0, rng.randrange(-(1 << 15), 1 << 15)])
                 for _ in range(num)
             ]
-        b_ref, b_fast = A._BW(), A._BW()
+        b_ref, b_fast = BitWriter(), BitWriter()
         e_ref = e_fast = None
         try:
             A._dyn_comp_ref(b_ref, vals, maxsz, mb0, pb, kb)
@@ -274,9 +280,9 @@ def test_dyn_coder_fast_matches_reference():
         if e_ref is not None:
             continue
         b_ref.align(), b_fast.align()
-        assert b_ref.bytes() == b_fast.bytes()
-        data = b_ref.bytes()
-        r_ref, r_fast = A._BR(data), A._BR(data)
+        assert b_ref.tobytes() == b_fast.tobytes()
+        data = b_ref.tobytes()
+        r_ref, r_fast = _br(data), _br(data)
         v_ref = A._dyn_decomp_ref(r_ref, num, maxsz, mb0, pb, kb)
         v_fast = A._dyn_decomp(r_fast, num, maxsz, mb0, pb, kb)
         assert v_ref == v_fast == vals
@@ -285,11 +291,11 @@ def test_dyn_coder_fast_matches_reference():
         cut = data[: rng.randrange(0, max(1, len(data) - 1))]
         o_ref = o_fast = x_ref = x_fast = None
         try:
-            o_ref = A._dyn_decomp_ref(A._BR(cut), num, maxsz, mb0, pb, kb)
+            o_ref = A._dyn_decomp_ref(_br(cut), num, maxsz, mb0, pb, kb)
         except ValueError as e:
             x_ref = str(e)
         try:
-            o_fast = A._dyn_decomp(A._BR(cut), num, maxsz, mb0, pb, kb)
+            o_fast = A._dyn_decomp(_br(cut), num, maxsz, mb0, pb, kb)
         except ValueError as e:
             x_fast = str(e)
         assert o_ref == o_fast and x_ref == x_fast

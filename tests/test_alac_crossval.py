@@ -6,7 +6,7 @@ adaptation code between encoder and decoder — which guarantees
 internal consistency but means a bug in a shared expression would be
 invisible to roundtrip tests. This decoder re-implements the packet
 walk with a DIFFERENT structure: integer-cursor bit access over one
-big int (no _BR), iterative Golomb decode with explicit bit windows,
+big int (no shared BitReader), iterative Golomb decode with explicit bit windows,
 matrix reconstruction in a single expression, and NO imports from the
 shared entropy/predictor helpers. Agreement on every synth fixture
 bounds the implementation-level mirror risk (the spec-level risk —
@@ -17,6 +17,12 @@ from __future__ import annotations
 import hashlib
 
 from hadoopxmlextractor_spark.operators import alac as A
+from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
+
+
+def _br(data: bytes) -> BitReader:
+    return BitReader(data, 0, "ALAC bitstream overrun")
+
 
 QB = 512
 
@@ -230,12 +236,12 @@ def test_alac_second_decoder_golomb_unit_vectors():
         [0] * 200,
         [1] * 50 + [0] * 50 + [-1] * 50,
     ):
-        bw = A._BW()
+        bw = BitWriter()
         A._dyn_comp(bw, vals, 17, A.MB0, A.PB0, A.KB0)
         bw.align()
-        data = bw.bytes()
+        data = bw.tobytes()
         # primary decode
-        assert A._dyn_decomp(A._BR(data), len(vals), 17,
+        assert A._dyn_decomp(_br(data), len(vals), 17,
                              A.MB0, A.PB0, A.KB0) == vals
         # independent decode of the same bits via the xval machinery:
         # wrap as a fake mono residual-only walk

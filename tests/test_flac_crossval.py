@@ -4,7 +4,7 @@ No external decoder exists in this environment (no ffmpeg / flac CLI /
 soundfile — probed and ledgered in BENCH_NOTES_r11.md), so this is an
 INDEPENDENT minimal decoder written from the RFC 9639 layout with a
 deliberately different structure from operators/flac.py: a
-closure-based bit feeder instead of the _BR class, fixed-predictor
+closure-based bit feeder instead of the shared BitReader, fixed-predictor
 coefficients derived from Pascal's triangle instead of a table,
 difference-equation stereo reconstruction, and NO shared helpers. It
 ignores CRCs (integrity is the primary decoder's job) and decodes

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from hadoopxmlextractor_spark.operators import mp3 as M
-from hadoopxmlextractor_spark.operators.containers import _BitReader
+from hadoopxmlextractor_spark.operators.bitio import BitReader
 
 
 def _g_long(sr, gg, actives, *, preflag=0, sfc=9):
@@ -82,7 +82,7 @@ def test_mp3_roundtrip_all_srs_with_reservoir_and_count1():
         assert rs["exp"] == (206 - 210) // 4 - 8 * 1 - 3
         # the reservoir is genuinely engaged: later frames' mdb > 0
         flen = len(blob) // 2
-        r2 = _BitReader(blob[flen + 4 : flen + 4 + 17])
+        r2 = BitReader(blob[flen + 4 : flen + 4 + 17])
         assert r2.read(9) > 0
 
 

@@ -969,6 +969,35 @@ def test_png_interlaced_and_16bit_roundtrips_and_refusals():
     assert _decode_png(bytes(low)) is None
 
 
+def test_png_inflate_is_bounded_by_the_ihdr():
+    """IDAT inflates under the exact byte count the IHDR implies: a
+    deflate bomb behind a 1x1 header refuses without materializing
+    its output, and a header implying more than the inflate ceiling
+    refuses before any image-sized allocation (never MemoryError)."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from hadoopxmlextractor_spark.operators.multimodal import _decode_png
+
+    def png(w, h, idat):
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+                + _png_chunk(b"IDAT", idat) + _png_chunk(b"IEND", b""))
+
+    assert _decode_png(png(1, 1, zlib.compress(b"\x00" * 4))) is not None
+    bomb = png(1, 1, zlib.compress(b"\x00" * (64 << 20), 9))
+    tracemalloc.start()
+    try:
+        assert _decode_png(bomb) is None
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 << 20
+    huge = png(1 << 31, 1 << 31, zlib.compress(b"\x00" * 4))
+    assert _decode_png(huge) is None
+
+
 def test_png_media_flows_through_features_and_resize(spark):
     """E2E through the Spark operators: PNG media extracts the SAME
     16-float feature vectors as the identical-plane PPM media, and
