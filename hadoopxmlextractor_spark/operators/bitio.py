@@ -9,7 +9,8 @@ public on purpose: the hot residual, Rice and Huffman walks in
 flac/alac/mp3 run inlined over that state and store it back.
 
 The bounded decompressors refuse (``ValueError``) instead of
-materializing a bomb or emitting the prefix of a cut-off stream.
+materializing a bomb or emitting the prefix of a cut-off stream, and
+:func:`alloc` refuses a header-declared array past the same budget.
 Reference parity note: the reference shares one byte-level record
 reader across every job (SeqXmlRecordReader.java:233-328); this is
 the same discipline applied to bitstreams and compressed members.
@@ -17,7 +18,11 @@ the same discipline applied to bitstreams and compressed members.
 
 from __future__ import annotations
 
+import lzma
+import math
 import zlib
+
+import numpy as np
 
 
 class BitReader:
@@ -170,15 +175,30 @@ def _bounded_inflate(raw: bytes, wbits: int, cap: int = _MAX_INFLATE) -> bytes:
     return b"".join(chunks)
 
 
+def alloc(shape: tuple[int, ...], dtype) -> np.ndarray:
+    """``np.zeros(shape, dtype)`` for an array whose size a header
+    declares: refuses (``ValueError``) before allocating past
+    ``_MAX_INFLATE`` bytes, so a patched dimension field becomes a
+    marker row instead of a ``MemoryError``."""
+    if math.prod(shape) * np.dtype(dtype).itemsize > _MAX_INFLATE:
+        raise ValueError("header-declared array exceeds bound")
+    return np.zeros(shape, dtype)
+
+
 def _drain(d, raw: bytes, cap: int, kind: str) -> list[bytes]:
     """One stream through an lzma/bz2-style decompressor (both expose
     ``decompress(data, max_length)``, ``eof`` and ``needs_input``) in
-    1 MiB steps, refusing past ``cap`` output bytes or a cut-off
-    stream."""
+    1 MiB steps, refusing past ``cap`` output bytes, a cut-off stream
+    or corrupt data (bz2 raises ``OSError``, lzma ``LZMAError``)."""
     out: list[bytes] = []
     total = 0
-    piece = d.decompress(raw, _STEP)
+    data = raw
     while True:
+        try:
+            piece = d.decompress(data, _STEP)
+        except (OSError, lzma.LZMAError) as e:
+            raise ValueError(f"corrupt {kind} stream") from e
+        data = b""
         if piece:
             out.append(piece)
             total += len(piece)
@@ -188,14 +208,11 @@ def _drain(d, raw: bytes, cap: int, kind: str) -> list[bytes]:
             return out
         if d.needs_input:
             raise ValueError(f"truncated {kind} stream")
-        piece = d.decompress(b"", _STEP)
 
 
 def _bounded_unxz(raw: bytes, cap: int = _MAX_INFLATE) -> bytes:
     """xz decompress with the same hard output bound and truncation
     refusal as the zlib/bz2 walks."""
-    import lzma
-
     return b"".join(_drain(lzma.LZMADecompressor(), raw, cap, "xz"))
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoopxmlextractor_spark.operators.bitio import BitReader, BitWriter
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 
 # ---------------------------------------------------------------------------
 # MP4 / ISO-BMFF (ISO 14496-12) box walk
@@ -527,31 +528,14 @@ def webp_meta(
     :func:`multimodal.audio_container_meta`), with the same
     format-NULL marker contract for unrecognized blobs."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "format", "width", "height",
-            "has_alpha", "is_animated", "is_lossless", "n_chunks",
-        ]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                meta = None
-                if blob is not None:
-                    try:
-                        meta = _parse_webp_meta(bytes(blob))
-                    except (ValueError, IndexError, struct.error):
-                        meta = None
-                if meta is None:
-                    meta = {
-                        "format": None, "width": None, "height": None,
-                        "has_alpha": None, "is_animated": None,
-                        "is_lossless": None, "n_chunks": None,
-                    }
-                rows.append({"media_id": mid, **meta})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        meta = _parse_webp_meta(bytes(blob))
+        if meta is None:
+            raise ValueError("not a WebP")
+        return [meta]
 
-    return media.select(id_col, content_col).mapInPandas(
-        _meta, schema=IMAGE_META_SCHEMA
+    return blob_rows(
+        media, id_col, content_col, _decode, IMAGE_META_SCHEMA, {}
     )
 
 
@@ -1118,32 +1102,18 @@ def audio_id3_tags(
     licensing tables. Blobs without a leading ID3v2 tag (or with a
     malformed one) yield the version-NULL marker row."""
 
-    def _tags(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "id3_version", "title", "artist", "album",
-                "year"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                tags = ver = None
-                if blob is not None:
-                    b = bytes(blob)
-                    try:
-                        tags = parse_id3v2_frames(b)
-                        if tags is not None:
-                            ver = f"2.{b[3]}"
-                    except (ValueError, IndexError, struct.error,
-                            UnicodeDecodeError):
-                        tags = None
-                if tags is None:
-                    tags = {"title": None, "artist": None,
-                            "album": None, "year": None}
-                rows.append({"media_id": mid, "id3_version": ver, **tags})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        b = bytes(blob)
+        tags = parse_id3v2_frames(b)
+        if tags is None:
+            raise ValueError("no ID3v2 tag")
+        return [{"id3_version": f"2.{b[3]}", **tags}]
 
-    return media.select(id_col, content_col).mapInPandas(
-        _tags,
-        schema="media_id bigint, id3_version string, title string, "
+    return blob_rows(
+        media, id_col, content_col, _decode,
+        "media_id bigint, id3_version string, title string, "
         "artist string, album string, year string",
+        {},
     )
 
 

@@ -54,6 +54,7 @@ from hadoopxmlextractor_spark.operators.bitio import (
     _bounded_unxz,
     _bz2_decompress_streams,
 )
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 
 # ---------------------------------------------------------------------------
 # ZIP container — EOCD scan-back + central-directory walk + inflate
@@ -1927,31 +1928,19 @@ def odf_metadata(
 ) -> DataFrame:
     """One metadata row per ODF package in one Arrow pass; malformed
     packages yield the kind-NULL marker row."""
-
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "title", "creator", "date",
-                "word_count", "page_count"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    rows.append(
-                        {"doc_id": did, **_odf_metadata(bytes(blob))}
-                    )
-                except (ValueError, IndexError, KeyError, struct.error,
-                        zlib.error, ElementTree.ParseError, TypeError):
-                    rows.append({
-                        "doc_id": did, "kind": None, "title": None,
-                        "creator": None, "date": None,
-                        "word_count": None, "page_count": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, content_col).mapInPandas(
-        _meta,
-        schema="doc_id bigint, kind string, title string, "
+    return blob_rows(
+        docs, id_col, content_col,
+        lambda blob: [_odf_metadata(bytes(blob))],
+        "doc_id bigint, kind string, title string, "
         "creator string, date string, word_count int, page_count int",
+        {},
     )
+
+
+_CELL_SCHEMA = (
+    "doc_id bigint, sheet string, row int, col string, kind string, "
+    "value string"
+)
 
 
 def ods_cells(
@@ -1959,27 +1948,9 @@ def ods_cells(
 ) -> DataFrame:
     """One row per ODS cell in one Arrow pass — the ODF leg beside
     :func:`xlsx_cells`, same schema and marker contract."""
-
-    def _cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sheet", "row", "col", "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for c in _ods_extract(bytes(blob)):
-                        rows.append({"doc_id": did, **c})
-                except (ValueError, IndexError, KeyError, struct.error,
-                        zlib.error, ElementTree.ParseError, TypeError):
-                    rows.append({
-                        "doc_id": did, "sheet": None, "row": -1,
-                        "col": None, "kind": None, "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, content_col).mapInPandas(
-        _cells,
-        schema="doc_id bigint, sheet string, row int, col string, "
-        "kind string, value string",
+    return blob_rows(
+        docs, id_col, content_col, lambda blob: _ods_extract(bytes(blob)),
+        _CELL_SCHEMA, {"row": -1},
     )
 
 
@@ -2022,58 +1993,35 @@ def document_text(
                 )
         return None, None, None
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "format", "n_units", "text"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                fmt = n = text = None
-                if blob is not None:
-                    b = bytes(blob)
-                    try:
-                        if b.startswith(b"%PDF-"):
-                            fmt, (n, text) = "pdf", _pdf_extract(b)
-                        elif b.startswith(b"{\\rtf"):
-                            fmt, (n, text) = "rtf", rtf_to_text(b)
-                        elif b.startswith(_CFB_MAGIC):
-                            names = [
-                                m["name"] for m in cfb_members(b)
-                            ]
-                            if "EncryptedPackage" in names:
-                                # ECMA-376 encryption container: the
-                                # modern password-protected form —
-                                # silent default password, then the
-                                # ordinary zip routing (r13)
-                                fmt, n, text = _route_zip(
-                                    ooxml_decrypt(b)
-                                )
-                            else:
-                                kind = cfb_kind(names)
-                                if kind == "doc":
-                                    fmt, (n, text) = (
-                                        "doc", doc_extract_text(b)
-                                    )
-                                elif kind == "ppt":
-                                    fmt, (n, text) = (
-                                        "ppt", ppt_extract_text(b)
-                                    )
-                                else:  # xls/unknown: not text
-                                    raise ValueError(
-                                        "unrouted compound file"
-                                    )
-                        elif b.startswith(_LOC_SIG):
-                            fmt, n, text = _route_zip(b)
-                    except (ValueError, IndexError, KeyError, struct.error,
-                            zlib.error, ElementTree.ParseError):
-                        fmt = n = text = None
-                rows.append(
-                    {"doc_id": did, "format": fmt, "n_units": n, "text": text}
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        fmt = n = text = None
+        b = bytes(blob)
+        if b.startswith(b"%PDF-"):
+            fmt, (n, text) = "pdf", _pdf_extract(b)
+        elif b.startswith(b"{\\rtf"):
+            fmt, (n, text) = "rtf", rtf_to_text(b)
+        elif b.startswith(_CFB_MAGIC):
+            names = [m["name"] for m in cfb_members(b)]
+            if "EncryptedPackage" in names:
+                # ECMA-376 encryption container: the modern
+                # password-protected form — silent default password,
+                # then the ordinary zip routing (r13)
+                fmt, n, text = _route_zip(ooxml_decrypt(b))
+            else:
+                kind = cfb_kind(names)
+                if kind == "doc":
+                    fmt, (n, text) = "doc", doc_extract_text(b)
+                elif kind == "ppt":
+                    fmt, (n, text) = "ppt", ppt_extract_text(b)
+                else:  # xls/unknown: not text
+                    raise ValueError("unrouted compound file")
+        elif b.startswith(_LOC_SIG):
+            fmt, n, text = _route_zip(b)
+        return [{"format": fmt, "n_units": n, "text": text}]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _extract,
-        schema="doc_id bigint, format string, n_units int, text string",
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, format string, n_units int, text string", {},
     )
 
 
@@ -2086,42 +2034,30 @@ def archive_members(
     archive), and the first 16 decoded characters as proof the inflate
     really ran. Malformed archives yield the member_idx -1 marker."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["archive_id", "member_idx", "name", "method",
-                "uncomp_bytes", "crc_ok", "head"]
-        for pdf in batches:
-            rows = []
-            for aid, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    entries = zip_member_list(bytes(blob))
-                    for k, e in enumerate(entries):
-                        try:
-                            data = zip_read_member(bytes(blob), e)
-                            ok = True
-                            head = data[:16].decode("utf-8", "replace")
-                        except ValueError:
-                            ok, head = False, None
-                        rows.append({
-                            "archive_id": aid, "member_idx": k,
-                            "name": e["name"],
-                            "method": "stored" if e["method"] == 0
-                            else "deflate" if e["method"] == 8
-                            else f"method{e['method']}",
-                            "uncomp_bytes": e["usize"], "crc_ok": ok,
-                            "head": head,
-                        })
-                except (ValueError, IndexError, struct.error, TypeError):
-                    rows.append({
-                        "archive_id": aid, "member_idx": -1, "name": None,
-                        "method": None, "uncomp_bytes": None,
-                        "crc_ok": None, "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        b = bytes(blob)
+        rows = []
+        for k, e in enumerate(zip_member_list(b)):
+            try:
+                data = zip_read_member(b, e)
+                ok = True
+                head = data[:16].decode("utf-8", "replace")
+            except ValueError:  # refuses the member, not the archive
+                ok, head = False, None
+            rows.append({
+                "member_idx": k, "name": e["name"],
+                "method": "stored" if e["method"] == 0
+                else "deflate" if e["method"] == 8
+                else f"method{e['method']}",
+                "uncomp_bytes": e["usize"], "crc_ok": ok, "head": head,
+            })
+        return rows
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _walk,
-        schema="archive_id bigint, member_idx int, name string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "archive_id bigint, member_idx int, name string, "
         "method string, uncomp_bytes bigint, crc_ok boolean, head string",
+        {"member_idx": -1},
     )
 
 
@@ -2134,27 +2070,9 @@ def xlsx_cells(
     and the resolved value (shared strings looked up, numbers kept as
     their raw token — no float parse). Malformed workbooks yield the
     row -1 marker."""
-
-    def _cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sheet", "row", "col", "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for c in _xlsx_extract(bytes(blob)):
-                        rows.append({"doc_id": did, **c})
-                except (ValueError, IndexError, KeyError, struct.error,
-                        zlib.error, ElementTree.ParseError, TypeError):
-                    rows.append({
-                        "doc_id": did, "sheet": None, "row": -1,
-                        "col": None, "kind": None, "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, content_col).mapInPandas(
-        _cells,
-        schema="doc_id bigint, sheet string, row int, col string, "
-        "kind string, value string",
+    return blob_rows(
+        docs, id_col, content_col, lambda blob: _xlsx_extract(bytes(blob)),
+        _CELL_SCHEMA, {"row": -1},
     )
 
 
@@ -2282,31 +2200,21 @@ def subtitle_cues(
     cue index, start/end in integer milliseconds, tag-stripped text.
     Malformed payloads yield the cue_idx -1 marker row."""
 
-    def _cues(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "cue_idx", "kind", "start_ms", "end_ms", "text"]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    kind, cues = _parse_cues(str(payload))
-                    if not cues:
-                        raise ValueError("no cues")
-                    for k, (s, e, t) in enumerate(cues):
-                        rows.append({
-                            "media_id": mid, "cue_idx": k, "kind": kind,
-                            "start_ms": s, "end_ms": e, "text": t,
-                        })
-                except (ValueError, AttributeError):
-                    rows.append({
-                        "media_id": mid, "cue_idx": -1, "kind": None,
-                        "start_ms": None, "end_ms": None, "text": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(payload) -> list[dict]:
+        kind, cues = _parse_cues(str(payload))
+        if not cues:
+            raise ValueError("no cues")
+        return [
+            {"cue_idx": k, "kind": kind, "start_ms": s, "end_ms": e,
+             "text": t}
+            for k, (s, e, t) in enumerate(cues)
+        ]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _cues,
-        schema="media_id bigint, cue_idx int, kind string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "media_id bigint, cue_idx int, kind string, "
         "start_ms bigint, end_ms bigint, text string",
+        {"cue_idx": -1},
     )
 
 
@@ -2441,37 +2349,27 @@ def feed_entries(
     same integer civil-date arithmetic), summary. Malformed feeds
     yield the entry_idx -1 marker row."""
 
-    def _entries(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["feed_id", "entry_idx", "kind", "title", "url",
-                "published_ms", "summary"]
-        for pdf in batches:
-            rows = []
-            for fid, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    data = bytes(payload) if not isinstance(
-                        payload, str
-                    ) else payload.encode("utf-8")
-                    kind = "rss" if b"<rss" in data[:256] else "atom"
-                    for k, e in enumerate(_feed_extract(data)):
-                        rows.append({
-                            "feed_id": fid, "entry_idx": k, "kind": kind,
-                            "title": e["title"], "url": e["url"],
-                            "published_ms": None if e["published_s"] is None
-                            else e["published_s"] * 1000,
-                            "summary": e["summary"],
-                        })
-                except (ValueError, ElementTree.ParseError, TypeError):
-                    rows.append({
-                        "feed_id": fid, "entry_idx": -1, "kind": None,
-                        "title": None, "url": None, "published_ms": None,
-                        "summary": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(payload) -> list[dict]:
+        data = bytes(payload) if not isinstance(
+            payload, str
+        ) else payload.encode("utf-8")
+        kind = "rss" if b"<rss" in data[:256] else "atom"
+        return [
+            {
+                "entry_idx": k, "kind": kind,
+                "title": e["title"], "url": e["url"],
+                "published_ms": None if e["published_s"] is None
+                else e["published_s"] * 1000,
+                "summary": e["summary"],
+            }
+            for k, e in enumerate(_feed_extract(data))
+        ]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _entries,
-        schema="feed_id bigint, entry_idx int, kind string, title string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "feed_id bigint, entry_idx int, kind string, title string, "
         "url string, published_ms bigint, summary string",
+        {"entry_idx": -1},
     )
 
 
@@ -3497,30 +3395,18 @@ def archive_tar_members(
     :func:`archive_members`, transparently gunzipping .tar.gz blobs.
     Malformed archives yield the member_idx -1 marker row."""
 
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["archive_id", "member_idx", "name", "typeflag",
-                "uncomp_bytes", "head"]
-        for pdf in batches:
-            rows = []
-            for aid, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for k, e in enumerate(tar_members(bytes(blob))):
-                        rows.append({
-                            "archive_id": aid, "member_idx": k,
-                            "name": e["name"], "typeflag": e["typeflag"],
-                            "uncomp_bytes": e["size"], "head": e["head"],
-                        })
-                except (ValueError, IndexError, zlib.error, TypeError):
-                    rows.append({
-                        "archive_id": aid, "member_idx": -1, "name": None,
-                        "typeflag": None, "uncomp_bytes": None, "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        return [
+            {"member_idx": k, "name": e["name"], "typeflag": e["typeflag"],
+             "uncomp_bytes": e["size"], "head": e["head"]}
+            for k, e in enumerate(tar_members(bytes(blob)))
+        ]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _walk,
-        schema="archive_id bigint, member_idx int, name string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "archive_id bigint, member_idx int, name string, "
         "typeflag string, uncomp_bytes bigint, head string",
+        {"member_idx": -1},
     )
 
 
@@ -3760,25 +3646,13 @@ def latex_text(
     """(doc_id, text, n_tokens) in one Arrow pass over LaTeX source —
     the arXiv leg of corpus text extraction."""
 
-    def _tex(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "text", "n_tokens"]
-        for pdf in batches:
-            rows = []
-            for did, src in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    text = latex_to_text(str(src))
-                    rows.append({
-                        "doc_id": did, "text": text,
-                        "n_tokens": len(text.split()),
-                    })
-                except (ValueError, TypeError, re.error):
-                    rows.append(
-                        {"doc_id": did, "text": None, "n_tokens": None}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(src) -> list[dict]:
+        text = latex_to_text(str(src))
+        return [{"text": text, "n_tokens": len(text.split())}]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _tex, schema="doc_id bigint, text string, n_tokens int"
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, text string, n_tokens int", {},
     )
 
 
@@ -3891,26 +3765,18 @@ def html_metadata(
 ) -> DataFrame:
     """One structured-metadata row per HTML page in one Arrow pass."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "og_title", "og_description", "og_image",
-                "canonical_href", "jsonld_type", "jsonld_name",
-                "jsonld_date"]
-        for pdf in batches:
-            rows = []
-            for did, html in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    rows.append(
-                        {"doc_id": did, **html_page_metadata(str(html))}
-                    )
-                except Exception:  # noqa: BLE001 — tag soup never kills a job
-                    rows.append({"doc_id": did, **{c: None for c in cols[1:]}})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(html) -> list[dict]:
+        try:
+            return [html_page_metadata(str(html))]
+        except Exception as e:  # noqa: BLE001 — tag soup never kills a job
+            raise ValueError("unparseable HTML") from e
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _meta,
-        schema="doc_id bigint, og_title string, og_description string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, og_title string, og_description string, "
         "og_image string, canonical_href string, jsonld_type string, "
         "jsonld_name string, jsonld_date string",
+        {},
     )
 
 
@@ -3980,34 +3846,23 @@ def html_tables(
     """One row per table cell in one Arrow pass; pages without tables
     yield the table_idx -1 marker row so page accounting stays total."""
 
-    def _cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "table_idx", "row_idx", "col_idx",
-                "is_header", "text"]
-        for pdf in batches:
-            rows = []
-            for did, html in zip(pdf[id_col], pdf[content_col]):
-                cells = []
-                try:
-                    cells = html_table_cells(str(html))
-                except Exception:  # noqa: BLE001
-                    cells = []
-                if not cells:
-                    # is_header pinned FALSE, not NULL: a NULL boolean
-                    # stringifies differently across the engines
-                    # (the canonicalizer trap documented in CLAUDE.md)
-                    rows.append({
-                        "doc_id": did, "table_idx": -1, "row_idx": None,
-                        "col_idx": None, "is_header": False, "text": None,
-                    })
-                    continue
-                for c in cells:
-                    rows.append({"doc_id": did, **c})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(html) -> list[dict]:
+        try:
+            cells = html_table_cells(str(html))
+        except Exception as e:  # noqa: BLE001 — tag soup never kills a job
+            raise ValueError("unparseable HTML") from e
+        if not cells:
+            raise ValueError("no tables")
+        return cells
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _cells,
-        schema="doc_id bigint, table_idx int, row_idx int, col_idx int, "
+    # is_header pinned FALSE, not NULL, on the marker: a NULL boolean
+    # stringifies differently across the engines (the nullable-boolean
+    # canonicalizer trap)
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, table_idx int, row_idx int, col_idx int, "
         "is_header boolean, text string",
+        {"table_idx": -1, "is_header": False},
     )
 
 
@@ -4316,33 +4171,23 @@ def mbox_emails(
     subject, date in epoch ms, decoded text/plain body. Malformed
     payloads yield the msg_idx -1 marker row."""
 
-    def _msgs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "msg_idx", "from_addr", "subject",
-                "date_ms", "body"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for k, msg in enumerate(mbox_messages(str(payload))):
-                        rows.append({
-                            "doc_id": did, "msg_idx": k,
-                            "from_addr": msg["from_addr"],
-                            "subject": msg["subject"],
-                            "date_ms": None if msg["date_s"] is None
-                            else msg["date_s"] * 1000,
-                            "body": msg["body"],
-                        })
-                except (ValueError, TypeError):
-                    rows.append({
-                        "doc_id": did, "msg_idx": -1, "from_addr": None,
-                        "subject": None, "date_ms": None, "body": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(payload) -> list[dict]:
+        return [
+            {
+                "msg_idx": k, "from_addr": msg["from_addr"],
+                "subject": msg["subject"],
+                "date_ms": None if msg["date_s"] is None
+                else msg["date_s"] * 1000,
+                "body": msg["body"],
+            }
+            for k, msg in enumerate(mbox_messages(str(payload)))
+        ]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _msgs,
-        schema="doc_id bigint, msg_idx int, from_addr string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, msg_idx int, from_addr string, "
         "subject string, date_ms bigint, body string",
+        {"msg_idx": -1},
     )
 
 
@@ -4602,60 +4447,49 @@ def mbox_threads(
     zero-shuffle. Output: (doc_id, msg_idx, thread_root_idx, depth);
     malformed payloads yield the msg_idx -1 marker."""
 
-    def _threads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "msg_idx", "thread_root_idx", "depth"]
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    chunks = re.split(
-                        r"(?:^|\n)From [^\n]*\n", str(payload)
-                    )
-                    headers = []
-                    for chunk in chunks:
-                        if not chunk.strip():
-                            continue
-                        head, _, _body = chunk.partition("\n\n")
-                        headers.append(_parse_headers(head))
-                    if not headers:
-                        raise ValueError("empty mbox")
-                    by_id = {
-                        h.get("message-id"): k
-                        for k, h in enumerate(headers)
-                        if h.get("message-id")
-                    }
-                    for k, h in enumerate(headers):
-                        parent = h.get("in-reply-to")
-                        if parent is None and "references" in h:
-                            parent = h["references"].split()[-1]
-                        depth = 0
-                        node = k
-                        seen = {k}
-                        while parent is not None:
-                            nxt = by_id.get(parent)
-                            if nxt is None or nxt in seen:
-                                break  # dangling or cyclic: stop here
-                            seen.add(nxt)
-                            depth += 1
-                            node = nxt
-                            ph = headers[nxt]
-                            parent = ph.get("in-reply-to")
-                            if parent is None and "references" in ph:
-                                parent = ph["references"].split()[-1]
-                        rows.append({
-                            "doc_id": did, "msg_idx": k,
-                            "thread_root_idx": node, "depth": depth,
-                        })
-                except (ValueError, TypeError):
-                    rows.append({
-                        "doc_id": did, "msg_idx": -1,
-                        "thread_root_idx": None, "depth": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(payload) -> list[dict]:
+        chunks = re.split(r"(?:^|\n)From [^\n]*\n", str(payload))
+        headers = []
+        for chunk in chunks:
+            if not chunk.strip():
+                continue
+            head, _, _body = chunk.partition("\n\n")
+            headers.append(_parse_headers(head))
+        if not headers:
+            raise ValueError("empty mbox")
+        by_id = {
+            h.get("message-id"): k
+            for k, h in enumerate(headers)
+            if h.get("message-id")
+        }
+        rows = []
+        for k, h in enumerate(headers):
+            parent = h.get("in-reply-to")
+            if parent is None and "references" in h:
+                parent = h["references"].split()[-1]
+            depth = 0
+            node = k
+            seen = {k}
+            while parent is not None:
+                nxt = by_id.get(parent)
+                if nxt is None or nxt in seen:
+                    break  # dangling or cyclic: stop here
+                seen.add(nxt)
+                depth += 1
+                node = nxt
+                ph = headers[nxt]
+                parent = ph.get("in-reply-to")
+                if parent is None and "references" in ph:
+                    parent = ph["references"].split()[-1]
+            rows.append(
+                {"msg_idx": k, "thread_root_idx": node, "depth": depth}
+            )
+        return rows
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _threads,
-        schema="doc_id bigint, msg_idx int, thread_root_idx int, depth int",
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, msg_idx int, thread_root_idx int, depth int",
+        {"msg_idx": -1},
     )
 
 
@@ -4742,29 +4576,11 @@ def notebook_cells(
 ) -> DataFrame:
     """One row per notebook cell in one Arrow pass; malformed
     notebooks yield the cell_idx -1 marker row."""
-
-    def _cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-
-        cols = ["doc_id", "cell_idx", "cell_type", "source", "n_outputs"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    for c in ipynb_cells(blob):
-                        rows.append({"doc_id": did, **c})
-                except (ValueError, TypeError, _json.JSONDecodeError,
-                        AttributeError):
-                    rows.append({
-                        "doc_id": did, "cell_idx": -1, "cell_type": None,
-                        "source": None, "n_outputs": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, content_col).mapInPandas(
-        _cells,
-        schema="doc_id bigint, cell_idx int, cell_type string, "
+    return blob_rows(
+        docs, id_col, content_col, ipynb_cells,
+        "doc_id bigint, cell_idx int, cell_type string, "
         "source string, n_outputs int",
+        {"cell_idx": -1},
     )
 
 
@@ -4833,58 +4649,39 @@ def stackexchange_posts(
     created_ms, body_html). Malformed dumps yield the post_id -1
     marker row."""
 
-    def _posts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "post_id", "post_type", "parent_id", "score",
-                "created_ms", "body_html"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    data = bytes(blob) if not isinstance(blob, str) \
-                        else blob.encode()
-                    root = ElementTree.fromstring(data)
-                    if _local(root.tag) != "posts":
-                        raise ValueError("not a posts dump")
-                    # All-or-marker: buffer this dump's rows and extend
-                    # only after the whole walk parses, so a bad <row>
-                    # late in the dump can't emit a partial prefix plus
-                    # the marker (same contract as xlsx_cells).
-                    doc_rows = []
-                    for el in root:
-                        if _local(el.tag) != "row":
-                            continue
-                        created = el.get("CreationDate")
-                        doc_rows.append({
-                            "doc_id": did,
-                            "post_id": int(el.get("Id", "-1")),
-                            "post_type": int(el.get("PostTypeId", "0")),
-                            "parent_id": (
-                                int(el.get("ParentId"))
-                                if el.get("ParentId") is not None else None
-                            ),
-                            "score": int(el.get("Score", "0")),
-                            "created_ms": (
-                                _parse_feed_date(created + "Z") * 1000
-                                if created else None
-                            ),
-                            "body_html": el.get("Body"),
-                        })
-                    if not doc_rows:
-                        raise ValueError("dump with no rows")
-                    rows.extend(doc_rows)
-                except (ValueError, TypeError,
-                        ElementTree.ParseError):
-                    rows.append({
-                        "doc_id": did, "post_id": -1, "post_type": None,
-                        "parent_id": None, "score": None,
-                        "created_ms": None, "body_html": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        data = bytes(blob) if not isinstance(blob, str) else blob.encode()
+        root = ElementTree.fromstring(data)
+        if _local(root.tag) != "posts":
+            raise ValueError("not a posts dump")
+        rows = []
+        for el in root:
+            if _local(el.tag) != "row":
+                continue
+            created = el.get("CreationDate")
+            rows.append({
+                "post_id": int(el.get("Id", "-1")),
+                "post_type": int(el.get("PostTypeId", "0")),
+                "parent_id": (
+                    int(el.get("ParentId"))
+                    if el.get("ParentId") is not None else None
+                ),
+                "score": int(el.get("Score", "0")),
+                "created_ms": (
+                    _parse_feed_date(created + "Z") * 1000
+                    if created else None
+                ),
+                "body_html": el.get("Body"),
+            })
+        if not rows:
+            raise ValueError("dump with no rows")
+        return rows
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _posts,
-        schema="doc_id bigint, post_id int, post_type int, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, post_id int, post_type int, "
         "parent_id int, score int, created_ms bigint, body_html string",
+        {"post_id": -1},
     )
 
 
@@ -5037,27 +4834,14 @@ def wikipedia_pages(
     layout) decompress transparently through the bounded bz2 walk
     (r10). Malformed dumps yield the page_id -1 marker row."""
 
-    def _pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    data = bytes(blob) if not isinstance(blob, str) \
-                        else blob.encode()
-                    if data[:3] == b"BZh":
-                        data = _bz2_decompress_streams(data)
-                    rows.extend(_wikipedia_page_rows(did, data))
-                except (ValueError, TypeError, OSError,
-                        ElementTree.ParseError):
-                    rows.append({
-                        "doc_id": did, "page_id": -1, "title": None,
-                        "ns": None, "redirect_to": None,
-                        "text_clean": None, "n_tokens": None,
-                    })
-            yield pd.DataFrame(rows, columns=_WIKI_COLS)
+    def _decode(blob) -> list[dict]:
+        data = bytes(blob) if not isinstance(blob, str) else blob.encode()
+        if data[:3] == b"BZh":
+            data = _bz2_decompress_streams(data)
+        return _wikipedia_page_rows(None, data)  # blob_rows sets doc_id
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _pages, schema=_WIKI_SCHEMA
+    return blob_rows(
+        docs, id_col, content_col, _decode, _WIKI_SCHEMA, {"page_id": -1}
     )
 
 
@@ -5449,36 +5233,23 @@ def pdf_metadata(
     Arrow pass — the document-metadata twin of html_metadata for the
     PDF leg. Malformed blobs yield has_info NULL."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "title", "author", "producer", "created_ms",
-                "has_info"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    info = pdf_info(bytes(blob))
-                    rows.append({
-                        "doc_id": did, "title": info["title"],
-                        "author": info["author"],
-                        "producer": info["producer"],
-                        "created_ms": None if info["created_s"] is None
-                        else info["created_s"] * 1000,
-                        "has_info": info["title"] is not None
-                        or info["author"] is not None
-                        or info["created_s"] is not None,
-                    })
-                except (ValueError, IndexError, TypeError):
-                    rows.append({
-                        "doc_id": did, "title": None, "author": None,
-                        "producer": None, "created_ms": None,
-                        "has_info": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        info = pdf_info(bytes(blob))
+        return [{
+            "title": info["title"], "author": info["author"],
+            "producer": info["producer"],
+            "created_ms": None if info["created_s"] is None
+            else info["created_s"] * 1000,
+            "has_info": info["title"] is not None
+            or info["author"] is not None
+            or info["created_s"] is not None,
+        }]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _meta,
-        schema="doc_id bigint, title string, author string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, title string, author string, "
         "producer string, created_ms bigint, has_info boolean",
+        {},
     )
 
 
@@ -5594,32 +5365,20 @@ def epub_metadata(
     trio (html_metadata / pdf_metadata / epub_metadata). Malformed
     blobs yield the all-NULL marker row."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "title", "creator", "language", "identifier",
-                "published_ms"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    m = _epub_opf_metadata(bytes(blob))
-                    rows.append({
-                        "doc_id": did, "title": m["title"],
-                        "creator": m["creator"],
-                        "language": m["language"],
-                        "identifier": m["identifier"],
-                        "published_ms": None if m["published_s"] is None
-                        else m["published_s"] * 1000,
-                    })
-                except (ValueError, IndexError, struct.error, zlib.error,
-                        ElementTree.ParseError, TypeError):
-                    rows.append({"doc_id": did, **{c: None
-                                                   for c in cols[1:]}})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        m = _epub_opf_metadata(bytes(blob))
+        return [{
+            "title": m["title"], "creator": m["creator"],
+            "language": m["language"], "identifier": m["identifier"],
+            "published_ms": None if m["published_s"] is None
+            else m["published_s"] * 1000,
+        }]
 
-    return docs.select(id_col, content_col).mapInPandas(
-        _meta,
-        schema="doc_id bigint, title string, creator string, "
+    return blob_rows(
+        docs, id_col, content_col, _decode,
+        "doc_id bigint, title string, creator string, "
         "language string, identifier string, published_ms bigint",
+        {},
     )
 
 

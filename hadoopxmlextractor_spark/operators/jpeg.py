@@ -312,6 +312,16 @@ def _entropy_end(blob: bytes, pos: int) -> int:
     return len(blob)
 
 
+def _check_carried(units: int, nbytes: int, min_bits: int) -> None:
+    """Refuse a frame whose header declares more coded units (blocks
+    or samples) than ``nbytes`` of entropy-coded data can carry at
+    ``min_bits`` each (a Huffman code is at least 1 bit), before any
+    plane sized from that header is allocated: a patched SOF becomes
+    None, not a ``MemoryError``, while large real photos still decode."""
+    if units * min_bits > 8 * nbytes:
+        raise ValueError("frame larger than its scan can carry")
+
+
 def decode_jpeg(blob: bytes):
     """Baseline (SOF0) or progressive (SOF2) JPEG → (H, W, 3) uint8
     RGB array, or None for other coding processes / malformed input
@@ -392,6 +402,11 @@ def decode_jpeg(blob: bytes):
                     vmax = max(c["v"] for c in comps)
                     mcux = -(-w // (8 * hmax))
                     mcuy = -(-h // (8 * vmax))
+                    # each block of a component is in its DC-first scan
+                    _check_carried(
+                        max(mcuy * c["v"] * mcux * c["h"] for c in comps),
+                        len(blob) - pos, 1,
+                    )
                     store = {
                         c["id"]: np.zeros(
                             (mcuy * c["v"], mcux * c["h"], 64), dtype=np.int64
@@ -476,6 +491,11 @@ def _decode_scan(data, frame, scan, qt, huff_dc, huff_ac, restart_interval):
     vmax = max(c["v"] for c in frame["comps"])
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
+    # a block is at least a DC code and an AC code (EOB)
+    _check_carried(
+        sum(mcuy * c["v"] * mcux * c["h"] for c in frame["comps"]),
+        len(data), 2,
+    )
     planes = {}
     for c in frame["comps"]:
         planes[c["id"]] = np.zeros(
@@ -537,6 +557,7 @@ def _decode_lossless_scan(data, frame, scan, huff_dc, predictor, pt):
     (lossless JPEG stores source color planes — no YCbCr)."""
     h, w, prec = frame["h"], frame["w"], frame["prec"]
     ncomp = len(scan)
+    _check_carried(h * w * ncomp, len(data), 1)  # a code per sample
     planes = [np.zeros((h, w), dtype=np.int64) for _ in scan]
     tables = [huff_dc[s["dc"]] for s in scan]
     reader = _BitReader(data)

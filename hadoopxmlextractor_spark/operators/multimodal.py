@@ -40,7 +40,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hadoopxmlextractor_spark.operators.bitio import _MAX_INFLATE, _bounded_inflate
+from hadoopxmlextractor_spark.operators.bitio import (
+    _MAX_INFLATE,
+    _bounded_inflate,
+    alloc,
+)
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 
 MEDIA_SCHEMA = (
     "media_id long, media_type string, content binary, "
@@ -1689,7 +1694,7 @@ def _decode_avi_frames(blob: bytes):
             # escapes skip over (EOL advance, DELTA cursor moves, an
             # early end-of-bitmap) is TEMPORAL PREDICTION — those
             # pixels come from the previous frame.
-            canvas = np.zeros((h, w), dtype=np.uint8)  # bottom-up rows
+            canvas = alloc((h, w), np.uint8)  # bottom-up rows
             out = []
             for raw in frames_raw:
                 x = y = pos = 0
@@ -2770,54 +2775,35 @@ def audio_container_meta(
     100 TB this is embarrassingly parallel per blob and reads only
     headers-adjacent bytes of each value."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    from hadoopxmlextractor_spark.operators.containers import (
+        _parse_mp4_audio_meta,
+    )
 
-        from hadoopxmlextractor_spark.operators.containers import (
-            _parse_mp4_audio_meta,
-        )
+    def _decode(blob) -> list[dict]:
+        b = bytes(blob)
+        meta = None
+        if b[:3] == b"ID3" or b[:1] == b"\xff":
+            meta = _parse_mp3(b)
+            if meta is None:
+                meta = _mp3_frame_info_meta(b)  # r12
+        elif b[:4] == b"OggS":
+            meta = (
+                _parse_ogg_vorbis(b)
+                or _parse_ogg_opus(b)
+                or _parse_ogg_flac(b)
+            )
+        elif b[:4] == b"fLaC":
+            meta = _parse_flac(b)
+        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+            meta = _parse_wav_meta(b)
+        elif b[4:8] == b"ftyp":
+            meta = _parse_mp4_audio_meta(b)  # M4A (r9)
+        if meta is None:
+            raise ValueError("unrecognized audio container")
+        return [meta]
 
-        cols = [
-            "media_id", "codec", "sample_rate", "channels", "sample_bits",
-            "n_units", "bitrate_kbps", "is_vbr", "duration_ms", "meta_bytes",
-        ]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                meta = None
-                if blob is not None:
-                    b = bytes(blob)
-                    try:
-                        if b[:3] == b"ID3" or b[:1] == b"\xff":
-                            meta = _parse_mp3(b)
-                            if meta is None:
-                                meta = _mp3_frame_info_meta(b)  # r12
-                        elif b[:4] == b"OggS":
-                            meta = (
-                                _parse_ogg_vorbis(b)
-                                or _parse_ogg_opus(b)
-                                or _parse_ogg_flac(b)
-                            )
-                        elif b[:4] == b"fLaC":
-                            meta = _parse_flac(b)
-                        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                            meta = _parse_wav_meta(b)
-                        elif b[4:8] == b"ftyp":
-                            meta = _parse_mp4_audio_meta(b)  # M4A (r9)
-                    except (ValueError, IndexError, struct.error):
-                        meta = None
-                if meta is None:
-                    meta = {
-                        "codec": None, "sample_rate": None, "channels": None,
-                        "sample_bits": None, "n_units": None,
-                        "bitrate_kbps": None, "is_vbr": None,
-                        "duration_ms": None, "meta_bytes": None,
-                    }
-                rows.append({"media_id": mid, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select(id_col, content_col).mapInPandas(
-        _meta, schema=AUDIO_META_SCHEMA
+    return blob_rows(
+        media, id_col, content_col, _decode, AUDIO_META_SCHEMA, {}
     )
 
 
@@ -3510,46 +3496,28 @@ def video_container_meta(
     Arrow pass; the video twin of :func:`audio_container_meta`, with
     the same codec-NULL marker contract."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    from hadoopxmlextractor_spark.operators.containers import (
+        _parse_mp4_meta,
+        _parse_webm_meta,
+    )
 
-        from hadoopxmlextractor_spark.operators.containers import (
-            _parse_mp4_meta,
-            _parse_webm_meta,
-        )
+    def _decode(blob) -> list[dict]:
+        b = bytes(blob)
+        meta = None
+        if b[:4] == b"RIFF":
+            meta = _parse_avi_meta(b)
+        elif b[:4] == b"OggS":
+            meta = _parse_ogg_theora(b)
+        elif b[4:8] == b"ftyp":
+            meta = _parse_mp4_meta(b)  # MP4/ISO-BMFF (r9)
+        elif b[:4] == b"\x1aE\xdf\xa3":
+            meta = _parse_webm_meta(b)  # WebM/EBML (r9)
+        if meta is None:
+            raise ValueError("unrecognized video container")
+        return [meta]
 
-        cols = [
-            "media_id", "codec", "width", "height",
-            "fps_num", "fps_den", "n_frames", "duration_ms",
-        ]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                meta = None
-                if blob is not None:
-                    b = bytes(blob)
-                    try:
-                        if b[:4] == b"RIFF":
-                            meta = _parse_avi_meta(b)
-                        elif b[:4] == b"OggS":
-                            meta = _parse_ogg_theora(b)
-                        elif b[4:8] == b"ftyp":
-                            meta = _parse_mp4_meta(b)  # MP4/ISO-BMFF (r9)
-                        elif b[:4] == b"\x1aE\xdf\xa3":
-                            meta = _parse_webm_meta(b)  # WebM/EBML (r9)
-                    except (ValueError, IndexError, struct.error):
-                        meta = None
-                if meta is None:
-                    meta = {
-                        "codec": None, "width": None, "height": None,
-                        "fps_num": None, "fps_den": None,
-                        "n_frames": None, "duration_ms": None,
-                    }
-                rows.append({"media_id": mid, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select(id_col, content_col).mapInPandas(
-        _meta, schema=VIDEO_META_SCHEMA
+    return blob_rows(
+        media, id_col, content_col, _decode, VIDEO_META_SCHEMA, {}
     )
 
 
@@ -3817,32 +3785,13 @@ def jpeg_exif_meta(
     """One row of EXIF fields per JPEG in one Arrow pass — the image
     twin of the audio ID3 walk; malformed/EXIF-less JPEGs yield the
     endian-NULL marker row."""
-
-    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        cols = ["media_id", "endian", "orientation", "make", "model",
-                "dt_original", "pixel_w", "pixel_h", "x_resolution",
-                "gps_lat_ref", "gps_lat", "gps_lon_ref", "gps_lon"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    m = jpeg_exif(bytes(blob))
-                    rows.append({"media_id": mid, **{
-                        k: m[k] for k in cols[1:]
-                    }})
-                except (ValueError, IndexError, TypeError, struct.error):
-                    rows.append({"media_id": mid,
-                                 **{k: None for k in cols[1:]}})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, content_col).mapInPandas(
-        _walk,
-        schema="media_id bigint, endian string, orientation int, "
+    return blob_rows(
+        docs, id_col, content_col, lambda blob: [jpeg_exif(bytes(blob))],
+        "media_id bigint, endian string, orientation int, "
         "make string, model string, dt_original string, pixel_w int, "
         "pixel_h int, x_resolution string, gps_lat_ref string, "
         "gps_lat string, gps_lon_ref string, gps_lon string",
+        {},
     )
 
 

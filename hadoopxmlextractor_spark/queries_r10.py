@@ -27,6 +27,7 @@ import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 from hadoopxmlextractor_spark.queries import query
 from hadoopxmlextractor_spark.tables import load
 
@@ -317,38 +318,25 @@ def q_source_cdx_index(spark: SparkSession, sf: str) -> DataFrame:
 
     files = docs.select("doc_id", _cdx("doc_id").alias("content"))
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "entry_idx", "urlkey", "ts_ms", "url", "mime",
-                "status", "digest", "off_bytes", "len_bytes", "key_match"]
-        for pdf in batches:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    for k, r in enumerate(X.parse_cdxj(bytes(blob))):
-                        rows.append({
-                            "doc_id": did, "entry_idx": k,
-                            "urlkey": r["urlkey"], "ts_ms": r["ts_ms"],
-                            "url": r["url"], "mime": r["mime"],
-                            "status": r["status"], "digest": r["digest"],
-                            "off_bytes": r["offset"],
-                            "len_bytes": r["length"],
-                            "key_match": X.surt(r["url"]) == r["urlkey"],
-                        })
-                except (ValueError, OSError):
-                    rows.append({
-                        "doc_id": did, "entry_idx": -1, "urlkey": None,
-                        "ts_ms": None, "url": None, "mime": None,
-                        "status": None, "digest": None, "off_bytes": None,
-                        "len_bytes": None, "key_match": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        return [
+            {
+                "entry_idx": k, "urlkey": r["urlkey"], "ts_ms": r["ts_ms"],
+                "url": r["url"], "mime": r["mime"], "status": r["status"],
+                "digest": r["digest"], "off_bytes": r["offset"],
+                "len_bytes": r["length"],
+                "key_match": X.surt(r["url"]) == r["urlkey"],
+            }
+            for k, r in enumerate(X.parse_cdxj(bytes(blob)))
+        ]
 
-    return files.mapInPandas(
-        _parse,
-        schema="doc_id bigint, entry_idx int, urlkey string, "
+    return blob_rows(
+        files, "doc_id", "content", _decode,
+        "doc_id bigint, entry_idx int, urlkey string, "
         "ts_ms bigint, url string, mime string, status int, "
         "digest string, off_bytes bigint, len_bytes bigint, "
         "key_match boolean",
+        {"entry_idx": -1},
     )
 
 
@@ -737,41 +725,21 @@ def q_multimodal_audio_flac_decode(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("media_id"), _synth("doc_id").alias("content")
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "sample_rate", "channels", "n_frames",
-                "n_samples", "md5_ok", "sum_l", "sumsq_l", "sum_r",
-                "sumsq_r"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    d = FL.decode_flac(bytes(blob))
-                    left, right = d["samples"]
-                    rows.append({
-                        "media_id": mid,
-                        "sample_rate": d["sample_rate"],
-                        "channels": d["channels"],
-                        "n_frames": d["n_frames"],
-                        "n_samples": len(left),
-                        "md5_ok": d["md5_ok"],
-                        "sum_l": sum(left),
-                        "sumsq_l": sum(s * s for s in left),
-                        "sum_r": sum(right),
-                        "sumsq_r": sum(s * s for s in right),
-                    })
-                except (ValueError, IndexError):
-                    rows.append({
-                        "media_id": mid, "sample_rate": None,
-                        "channels": None, "n_frames": None,
-                        "n_samples": None, "md5_ok": None,
-                        "sum_l": None, "sumsq_l": None,
-                        "sum_r": None, "sumsq_r": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode(blob) -> list[dict]:
+        d = FL.decode_flac(bytes(blob))
+        left, right = d["samples"]
+        return [{
+            "sample_rate": d["sample_rate"], "channels": d["channels"],
+            "n_frames": d["n_frames"], "n_samples": len(left),
+            "md5_ok": d["md5_ok"],
+            "sum_l": sum(left), "sumsq_l": sum(s * s for s in left),
+            "sum_r": sum(right), "sumsq_r": sum(s * s for s in right),
+        }]
 
-    return files.mapInPandas(
-        _decode,
-        schema="media_id bigint, sample_rate int, channels int, "
+    return blob_rows(
+        files, "media_id", "content", _decode,
+        "media_id bigint, sample_rate int, channels int, "
         "n_frames int, n_samples bigint, md5_ok boolean, sum_l bigint, "
         "sumsq_l bigint, sum_r bigint, sumsq_r bigint",
+        {},
     )

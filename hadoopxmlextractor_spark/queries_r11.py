@@ -30,13 +30,13 @@ modules).
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator  # noqa: F401  (pandas_udf string annotations)
 
 import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 from hadoopxmlextractor_spark.queries import query
 from hadoopxmlextractor_spark.tables import load
 
@@ -796,6 +796,24 @@ def q_multimodal_image_exif(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _alac_summary(blob) -> list[dict]:
+    """Stream fields and integer sample moments of one ALAC file — the
+    decode kernel both ALAC registry queries share."""
+    from hadoopxmlextractor_spark.operators import alac as AL
+
+    d = AL.decode_alac(bytes(blob))
+    chans = d["samples"]
+    left = chans[0]
+    right = chans[1] if len(chans) > 1 else []
+    return [{
+        "sample_rate": d["sample_rate"], "bit_depth": d["bit_depth"],
+        "channels": d["channels"], "n_packets": d["n_packets"],
+        "n_samples": len(left),
+        "sum_l": sum(left), "sumsq_l": sum(s * s for s in left),
+        "sum_r": sum(right), "sumsq_r": sum(s * s for s in right),
+    }]
+
+
 @query(
     "multimodal_audio_alac_decode",
     f"""
@@ -898,42 +916,12 @@ def q_multimodal_audio_alac_decode(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("media_id"), _synth("doc_id").alias("content")
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "sample_rate", "channels", "n_packets",
-                "n_samples", "sum_l", "sumsq_l", "sum_r", "sumsq_r"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    d = AL.decode_alac(bytes(blob))
-                    chans = d["samples"]
-                    left = chans[0]
-                    right = chans[1] if len(chans) > 1 else []
-                    rows.append({
-                        "media_id": mid,
-                        "sample_rate": d["sample_rate"],
-                        "channels": d["channels"],
-                        "n_packets": d["n_packets"],
-                        "n_samples": len(left),
-                        "sum_l": sum(left),
-                        "sumsq_l": sum(s * s for s in left),
-                        "sum_r": sum(right),
-                        "sumsq_r": sum(s * s for s in right),
-                    })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "media_id": mid, "sample_rate": None,
-                        "channels": None, "n_packets": None,
-                        "n_samples": None, "sum_l": None,
-                        "sumsq_l": None, "sum_r": None, "sumsq_r": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        _decode,
-        schema="media_id bigint, sample_rate int, channels int, "
+    return blob_rows(
+        files, "media_id", "content", _alac_summary,
+        "media_id bigint, sample_rate int, channels int, "
         "n_packets int, n_samples bigint, sum_l bigint, sumsq_l bigint, "
         "sum_r bigint, sumsq_r bigint",
+        {},
     )
 
 
@@ -1037,45 +1025,12 @@ def q_multimodal_audio_alac_hires(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("media_id"), _synth("doc_id").alias("content")
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "sample_rate", "bit_depth", "channels",
-                "n_packets", "n_samples", "sum_l", "sumsq_l", "sum_r",
-                "sumsq_r"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    d = AL.decode_alac(bytes(blob))
-                    chans = d["samples"]
-                    left = chans[0]
-                    right = chans[1] if len(chans) > 1 else []
-                    rows.append({
-                        "media_id": mid,
-                        "sample_rate": d["sample_rate"],
-                        "bit_depth": d["bit_depth"],
-                        "channels": d["channels"],
-                        "n_packets": d["n_packets"],
-                        "n_samples": len(left),
-                        "sum_l": sum(left),
-                        "sumsq_l": sum(s * s for s in left),
-                        "sum_r": sum(right),
-                        "sumsq_r": sum(s * s for s in right),
-                    })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "media_id": mid, "sample_rate": None,
-                        "bit_depth": None, "channels": None,
-                        "n_packets": None, "n_samples": None,
-                        "sum_l": None, "sumsq_l": None,
-                        "sum_r": None, "sumsq_r": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        _decode,
-        schema="media_id bigint, sample_rate int, bit_depth int, "
+    return blob_rows(
+        files, "media_id", "content", _alac_summary,
+        "media_id bigint, sample_rate int, bit_depth int, "
         "channels int, n_packets int, n_samples bigint, sum_l bigint, "
         "sumsq_l bigint, sum_r bigint, sumsq_r bigint",
+        {},
     )
 
 
@@ -1571,63 +1526,42 @@ def q_pipeline_audio_cover_art(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("media_id"), _audio("doc_id").alias("content")
     )
 
-    def _art(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "container", "pic_type", "mime",
-                "description", "width", "height", "ahash"]
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    raw = bytes(blob)
-                    if raw[:4] == b"fLaC":
-                        pics = [
-                            dict(p, container="flac")
-                            for p in FL.flac_pictures(raw)
-                        ]
-                    elif raw[:3] == b"ID3":
-                        pics = [
-                            dict(p, container="mp3", width=None,
-                                 height=None)
-                            for p in CN.id3_pictures(raw)
-                        ]
-                    else:
-                        pics = [
-                            dict(p, container="m4a", pic_type=None,
-                                 description=None, width=None,
-                                 height=None)
-                            for p in CN.m4a_cover(raw)
-                        ]
-                    for pic in pics:
-                        img = M._decode_png(pic["data"])
-                        ah = (
-                            M._ahash64(img)
-                            if img is not None
-                            and img.shape[0] * img.shape[1] == 64
-                            else None
-                        )
-                        rows.append({
-                            "media_id": mid,
-                            "container": pic["container"],
-                            "pic_type": pic["pic_type"],
-                            "mime": pic["mime"],
-                            "description": pic["description"],
-                            "width": pic["width"],
-                            "height": pic["height"], "ahash": ah,
-                        })
-                except (ValueError, IndexError):
-                    rows.append({
-                        "media_id": mid, "container": None,
-                        "pic_type": None, "mime": None,
-                        "description": None, "width": None,
-                        "height": None, "ahash": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def _art(blob) -> list[dict]:
+        raw = bytes(blob)
+        if raw[:4] == b"fLaC":
+            pics = [dict(p, container="flac") for p in FL.flac_pictures(raw)]
+        elif raw[:3] == b"ID3":
+            pics = [
+                dict(p, container="mp3", width=None, height=None)
+                for p in CN.id3_pictures(raw)
+            ]
+        else:
+            pics = [
+                dict(p, container="m4a", pic_type=None, description=None,
+                     width=None, height=None)
+                for p in CN.m4a_cover(raw)
+            ]
+        rows = []
+        for pic in pics:
+            img = M._decode_png(pic["data"])
+            ah = (
+                M._ahash64(img)
+                if img is not None and img.shape[0] * img.shape[1] == 64
+                else None
+            )
+            rows.append({
+                "container": pic["container"], "pic_type": pic["pic_type"],
+                "mime": pic["mime"], "description": pic["description"],
+                "width": pic["width"], "height": pic["height"], "ahash": ah,
+            })
+        return rows
 
-    return files.mapInPandas(
-        _art,
-        schema="media_id bigint, container string, pic_type int, "
+    return blob_rows(
+        files, "media_id", "content", _art,
+        "media_id bigint, container string, pic_type int, "
         "mime string, description string, width int, height int, "
         "ahash bigint",
+        {},
     )
 
 

@@ -17,11 +17,11 @@ that shape applied to the crawl-frontier use case.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (callers' convenience)
+
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 
 
 def _local(tag: str) -> str:
@@ -66,27 +66,9 @@ def sitemap_entries(
     """(id, xml) sitemap documents → entry rows; malformed documents
     degrade to one kind-NULL marker row so frontier auditing stays
     total at file granularity."""
-
-    schema = (
+    return blob_rows(
+        docs, id_col, xml_col, parse_sitemap,
         f"{id_col} long, entry_idx int, kind string, loc string, "
-        "lastmod string, priority double"
+        "lastmod string, priority double",
+        {"entry_idx": -1},
     )
-    cols = [id_col, "entry_idx", "kind", "loc", "lastmod", "priority"]
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, xml in zip(pdf[id_col], pdf[xml_col]):
-                try:
-                    for e in parse_sitemap(xml):
-                        rows.append({id_col: i, **e})
-                except (ET.ParseError, ValueError):
-                    rows.append(
-                        {
-                            id_col: i, "entry_idx": -1, "kind": None,
-                            "loc": None, "lastmod": None, "priority": None,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select(id_col, xml_col).mapInPandas(_parse, schema=schema)

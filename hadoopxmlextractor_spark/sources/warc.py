@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoopxmlextractor_spark.operators.bitio import _bounded_inflate
+from hadoopxmlextractor_spark.operators.kernel import REFUSED, blob_rows
 
 
 def _local_path(path: str) -> str:
@@ -407,50 +408,18 @@ def warc_split_index(
     :func:`split_warc_blob` — one Arrow pass, no shuffle; a malformed
     file degrades to a single marker row (split_idx -1, NULL offsets)
     so file-granularity auditing stays total."""
-
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    for s in split_warc_blob(
-                        bytes(blob), target_bytes=target_bytes
-                    ):
-                        rows.append({"path": path, **s})
-                except (ValueError, IndexError, zlib.error):
-                    rows.append(
-                        {
-                            "path": path, "split_idx": -1, "offset": None,
-                            "length": None, "first_rec": None,
-                            "n_recs": None, "n_members": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "split_idx", "offset", "length",
-                    "first_rec", "n_recs", "n_members",
-                ],
-            )
-
-    return files.select(path_col, content_col).mapInPandas(
-        _index, schema=SPLIT_SCHEMA
+    return blob_rows(
+        files, path_col, content_col,
+        lambda blob: split_warc_blob(bytes(blob), target_bytes=target_bytes),
+        SPLIT_SCHEMA, {"split_idx": -1},
     )
 
 
 def _records_rows(path: str, blob: bytes, base_idx: int) -> list[dict]:
     try:
         return [{"path": path, **r} for r in iter_warc_records(blob, base_idx=base_idx)]
-    except (ValueError, IndexError, zlib.error):
-        return [
-            {
-                "path": path, "rec_idx": -1, "warc_type": None,
-                "record_id": None, "target_uri": None, "warc_date": None,
-                "content_type": None, "content_length": None,
-                "payload": None, "payload_digest": None,
-                "refers_to": None,
-            }
-        ]
+    except REFUSED:
+        return [{**dict.fromkeys(_RECORD_COLUMNS), "path": path, "rec_idx": -1}]
 
 
 _RECORD_COLUMNS = [
@@ -770,6 +739,33 @@ def decode_http_html(payload: bytes):
 _RECORDS_CHUNK = 256
 
 
+def _record_frames(
+    batches: Iterator[pd.DataFrame], path_col: str, content_col: str
+) -> Iterator[pd.DataFrame]:
+    """The batch loop of :func:`warc_records`. It keeps its own loop
+    instead of ``kernel.blob_rows`` because its contract is salvage
+    plus streaming, not all-or-marker: rows accumulate ACROSS files up
+    to ``_RECORDS_CHUNK`` (a per-file flush costs ~2.3 ms of Arrow
+    frame overhead per file, r11) and flush MID-file, so a task holds
+    one chunk of records + one gzip member, never a whole ~GB
+    decompressed segment; records parsed before a fault precede the
+    file's marker row."""
+    marker = dict.fromkeys(_RECORD_COLUMNS)
+    for pdf in batches:
+        rows: list[dict] = []
+        for path, blob in zip(pdf[path_col], pdf[content_col]):
+            try:
+                for r in iter_warc_records(bytes(blob)):
+                    rows.append({"path": path, **r})
+                    if len(rows) >= _RECORDS_CHUNK:
+                        yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
+                        rows = []
+            except REFUSED:
+                rows.append({**marker, "path": path, "rec_idx": -1})
+        if rows:
+            yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
+
+
 def warc_records(
     files: DataFrame, content_col: str = "content", path_col: str = "path"
 ) -> DataFrame:
@@ -783,35 +779,8 @@ def warc_records(
     are salvaged and the marker keeps file-granularity auditing
     total; a file malformed from byte 0 yields only the marker."""
 
-    def _marker(path):
-        return {
-            "path": path, "rec_idx": -1, "warc_type": None,
-            "record_id": None, "target_uri": None, "warc_date": None,
-            "content_type": None, "content_length": None,
-            "payload": None, "payload_digest": None,
-            "refers_to": None,
-        }
-
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows accumulate ACROSS files up to the chunk bound (r11): a
-        # per-file flush emits one tiny Arrow frame per file — measured
-        # 2.3 ms/file of pure frame overhead on small-record corpora,
-        # 30× the actual parse cost. Huge files still stream: the
-        # mid-file flush keeps task peak memory at one chunk + one
-        # member, and salvaged records still precede a fault's marker.
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, blob in zip(pdf[path_col], pdf[content_col]):
-                try:
-                    for r in iter_warc_records(bytes(blob)):
-                        rows.append({"path": path, **r})
-                        if len(rows) >= _RECORDS_CHUNK:
-                            yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
-                            rows = []
-                except (ValueError, IndexError, zlib.error):
-                    rows.append(_marker(path))
-            if rows:
-                yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
+        return _record_frames(batches, path_col, content_col)
 
     return files.select(path_col, content_col).mapInPandas(
         _parse, schema=RECORD_SCHEMA

@@ -948,6 +948,11 @@ def test_wikipedia_bz2_transparent_and_bomb_bound(spark):
         D._bz2_decompress_streams(bz2.compress(b"\0" * (1 << 22)), cap=1 << 16)
     with pytest.raises(ValueError, match="truncated"):
         D._bz2_decompress_streams(bz2.compress(b"data")[:-3])
+    # a corrupt block (bz2 raises OSError) refuses as ValueError too
+    corrupt = bytearray(D._synth_tar_blob(2))
+    corrupt[220] ^= 0xFF
+    with pytest.raises(ValueError, match="corrupt bz2"):
+        D._bz2_decompress_streams(bytes(corrupt))
 
 
 def test_wikipedia_multistream_file_splits(spark, tmp_path):
@@ -1219,6 +1224,11 @@ def test_tar_bz2_xz_wrappers_transparent():
         D._bounded_unxz(lzma.compress(b"\0" * (4 << 20)), cap=1 << 16)
     with pytest.raises(ValueError, match="truncated"):
         D._bounded_unxz(lzma.compress(b"data")[:-4])
+    # corrupt input (lzma raises LZMAError) refuses as ValueError too
+    corrupt = bytearray(D._synth_tar_blob(3))
+    corrupt[60] ^= 0xFF
+    with pytest.raises(ValueError, match="corrupt xz"):
+        D._bounded_unxz(bytes(corrupt))
     # the synth rotation reaches all four wrappers (and each parses)
     heads = set()
     for i in range(8):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pytest
 
 from hadoopxmlextractor_spark.operators.jpeg import (
     K1_LUMA_QT,
@@ -20,6 +21,7 @@ from hadoopxmlextractor_spark.operators.jpeg import (
     K3_DC_LUMA,
     ZIGZAG,
     _BitWriter,
+    _check_carried,
     _dht_segment,
     _huff_codes,
     _idct2,
@@ -435,3 +437,61 @@ def test_lossless_jpeg_all_predictors_and_precisions():
 
     blob = encode_jpeg_lossless(rng[:64].reshape(8, 8).astype(np.int64))
     assert decode_jpeg(blob[: len(blob) // 2]) is None
+
+
+_PATCHED_SOF_CHILD = r"""
+import resource, sys
+resource.setrlimit(resource.RLIMIT_AS, (3 << 30, 3 << 30))
+import numpy as np
+from hadoopxmlextractor_spark.operators.jpeg import (
+    decode_jpeg, encode_jpeg, encode_jpeg_lossless,
+)
+
+def patched(blob, sof):
+    b = bytearray(blob)
+    k = b.index(sof)
+    b[k + 5 : k + 9] = b"\xff\xff\xff\xff"  # height, width = 65535
+    return bytes(b)
+
+img = (np.arange(16, dtype=np.uint8) * 16).reshape(4, 4)
+out = [
+    decode_jpeg(patched(encode_jpeg(img), b"\xff\xc0")),
+    decode_jpeg(patched(encode_jpeg_lossless(img), b"\xff\xc3")),
+]
+print(out)
+"""
+
+
+def test_patched_sof_dimensions_refuse_instead_of_memory_error():
+    """A 4x4 baseline / lossless stream whose SOF claims 65535x65535
+    asks for 32 GiB of planes. Under a 3 GiB address-space limit (set
+    in the child only) decode_jpeg must return None — the frame is
+    refused as larger than its scan can carry, before any plane is
+    allocated — not die with MemoryError."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
+               OMP_NUM_THREADS="1")
+    res = subprocess.run(
+        [sys.executable, "-c", _PATCHED_SOF_CHILD], env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.strip() == "[None, None]"
+
+
+def test_scan_carry_bound_admits_large_photos():
+    """The patched-SOF refusal bounds a frame by its scan bytes, not by
+    a fixed pixel budget: a 48 MP 8000x6000 4:2:0 baseline frame (1.125M
+    blocks, >= 2 bits each) needs 281,250 scan bytes, and a real photo
+    of that size carries megabytes."""
+    blocks = (6000 // 8) * (8000 // 8) * 3 // 2
+    _check_carried(blocks, 281_250, 2)
+    _check_carried(blocks, 8 << 20, 2)
+    with pytest.raises(ValueError):
+        _check_carried(blocks, 281_249, 2)
+    with pytest.raises(ValueError):  # the patched 65535x65535 lossless
+        _check_carried(65535 * 65535, 600, 1)
