@@ -10,15 +10,16 @@ Spark-first restatement of the reference's fixed physical plan
    predicate and the include-children truncation happen here, *before*
    any XML parsing — the same filter/projection pushdown the reference
    hand-rolls in its RecordReader (``SeqXmlRecordReader.java:259-273``).
-   Exploding fragments out of documents early also breaks the
-   one-giant-document-per-task skew the reference inherits from its
-   non-splittable input format.
+   Fragments stay in their document's partition, so the skew of the
+   non-splittable input remains (see ``sources.xml_docs``).
 3. **XPath projection** — JVM-side ``xpath()`` (whole-stage codegen,
    no Python round-trip) evaluated per fragment, gated by rule index;
    multi-node results concatenate with no separator and empty nodesets
    drop the cell, matching ``XmlExtractor.java:100-112``. When every
    XPath is in the ``xpath_subset``, steps 2-4 instead run fused in one
-   Python pass per document (scan → ``ET.fromstring`` → evaluate).
+   Python pass per document: scan, then per fragment either a
+   start-tag-only expat parse or ``ET.fromstring`` plus the
+   ``xpath_subset`` evaluators (see ``_fused_scan``).
 4. **Assembly** — running forward fill and trigger-gated emit. The
    general path uses ``operators.assembly.assemble_rows``: one shuffle
    (partition by doc, sort by (seq, order)). The fused path needs no
@@ -39,13 +40,14 @@ one shuffle, keyed on the high-cardinality doc_id.
 from __future__ import annotations
 
 from typing import Iterator
+from xml.parsers import expat
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from hadoopxmlextractor_spark.config import ExtractionConfig
+from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
 from hadoopxmlextractor_spark.scanner import compile_rules, scan_document
 
@@ -189,20 +191,97 @@ def _select_fused(config: ExtractionConfig, fused: bool | None):
     return per_rule
 
 
+def _start_tag_plan(rule: ExtractRule) -> tuple[tuple[int, str, str], ...] | None:
+    """``(order, element, attr)`` per XPath, ordered as ``_compile_fused``
+    orders them, when the start-tag tier takes ``rule``, else None.
+
+    The tier takes a rule whose fragment is one start tag plus the
+    synthetic close: ``include_children=false`` ends the fragment at the
+    first ``>``, and ``has_attribute=true`` puts that ``>`` inside the
+    start tag (a ``<name>`` start pattern ends at the next ``>`` in the
+    document, which can take in text and child elements). Every XPath
+    must be ``//element/@attr``, which on that one element reads the
+    root's attribute when the root's local name is ``element``.
+    """
+    from hadoopxmlextractor_spark.xpath_subset import shape_of
+
+    if rule.include_children or not rule.has_attribute:
+        return None
+    plan = []
+    for xp in rule.xpaths:
+        shape = shape_of(xp.expr)
+        if shape is None or len(shape.names) != 1:
+            return None
+        plan.append((xp.order, shape.names[0], shape.attr))
+    return tuple(sorted(plan, key=lambda p: p[0]))
+
+
+def _read_start_tag(xml: str) -> tuple[str, dict[str, str]] | None:
+    """The root's local name and attributes of a start-tag-only fragment,
+    or None exactly where ``ET.fromstring`` raises ``ParseError``.
+
+    One expat parser, created as ElementTree creates its own
+    (``namespace_separator="}"``, the same expat library through the same
+    UTF-8 feed), accepts and rejects the same text; no tree is built.
+    expat spells a namespaced name ``uri}local`` where ElementTree writes
+    ``{uri}local``, and like ElementTree leaves ``xmlns`` declarations out
+    of the attributes.
+    """
+    root: dict[str, dict[str, str]] = {}
+    parser = expat.ParserCreate(None, "}")
+    parser.StartElementHandler = root.__setitem__
+    try:
+        parser.Parse(xml, True)
+    except expat.ExpatError:
+        return None
+    ((name, attrs),) = root.items()
+    return name.rpartition("}")[2], attrs
+
+
+def _start_tag_attr(attrs: dict[str, str], attr: str) -> str | None:
+    """``xpath_subset._get_attr_local`` on expat's attribute names."""
+    v = attrs.get(attr)
+    if v is None:
+        for k, kv in attrs.items():
+            if "}" in k and k.rpartition("}")[2] == attr:
+                return kv
+    return v
+
+
 def _fused_scan(config: ExtractionConfig, per_rule):
     """The fused loop: ``document_cells(content)`` yields one document's
     cells ``(seq, order, value)`` in ``(seq, order)`` order.
 
-    One ``ET.fromstring`` per fragment (C expat, ~µs) feeds both
-    validation and projection — vs. the general path's per-(row, expr)
-    javax XPath evaluation (~ms) on the JVM.
+    Each rule runs one of two tiers that give the same cells, chosen
+    here from its flags and XPath shapes:
+
+    - **start tag** (``_start_tag_plan``): one expat parse of the start
+      tag, the root's attributes read directly — no tree;
+    - otherwise one ``ET.fromstring`` per fragment feeding the rule's
+      ``compile_subset`` evaluators.
+
+    Both tiers drop a fragment that does not parse, silently, as the
+    reference does (``XmlExtractor.java:114-126``).
     """
     import xml.etree.ElementTree as ET
 
     compiled = compile_rules(config.rules)
+    start_tag = [_start_tag_plan(rule) for rule in config.rules]
 
     def document_cells(content: str) -> Iterator[tuple[int, int, str]]:
         for frag in scan_document(content, compiled, validate=False):
+            plan = start_tag[frag.rule_idx]
+            if plan is not None:
+                root = _read_start_tag(frag.xml)
+                if root is None:
+                    continue
+                name, attrs = root
+                for order, element, attr in plan:
+                    if name == element:
+                        value = _start_tag_attr(attrs, attr)
+                        if value is not None:
+                            yield frag.seq, order, value
+                continue
             try:
                 tree = ET.fromstring(frag.xml)
             except ET.ParseError:
@@ -283,9 +362,10 @@ def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
 
     Used automatically when every configured XPath is in the supported
     subset (see ``xpath_subset``). End to end (inventory config through
-    the text sink, perfbench's 200-document, 2.8 MB corpus, warm,
-    ``local[4]`` on 4 Xeon cores) the fused pass took 0.82–0.88 s median
-    against the general path's 2.06–2.38 s: ~2.5× faster.
+    the text sink, perfbench's 200-document, 2.8 MB corpus, seed 1, six
+    warm passes of each path alternating, ``local[4]`` on 4 Xeon cores)
+    the fused pass took a median 0.54 s (quartiles 0.50–0.65 s) against
+    the general path's 1.63 s (1.56–1.98 s): ~3× faster.
     """
     return extract_cells(docs, config, fused=True)
 

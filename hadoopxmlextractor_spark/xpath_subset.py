@@ -10,6 +10,10 @@ compiles that subset; anything else returns ``None`` and the engine
 falls back to the general JVM ``xpath()`` path
 (``extract.project_cells``), keeping full XPath 1.0 compatibility.
 
+On the fused path, a rule that takes only the start tag and reads only
+the root's attributes (every XPath a :class:`Shape` ``//el/@attr``)
+skips the tree altogether (``extract._start_tag_plan``).
+
 Subset grammar::
 
     expr     := path ('|' path)*          -- top-level XPath 1.0 union
@@ -1165,6 +1169,55 @@ def _owner_ids_for_text(
     }
 
 
+def _parse_expr(expr: str) -> list[tuple[list[_Step], tuple]] | None:
+    """``expr``'s union branches as (steps, terminal) pairs, or None when
+    any branch is out of subset."""
+    parsed: list[tuple[list[_Step], tuple]] = []
+    for b in _split_union(expr.strip()):
+        path, terminal = _split_terminal(b)
+        steps = _parse_path(path)
+        if steps is None or (not steps and terminal is None):
+            return None
+        if terminal is None:
+            # bare element projection = subtree string value (see module
+            # docstring: deliberate fix of the reference's "null" output)
+            terminal = ("text", True, None)
+        parsed.append((steps, terminal))
+    return parsed
+
+
+class Shape(NamedTuple):
+    """A single-branch ``//a(/b)*/@attr`` path with no predicates,
+    wildcards or axes. ``names`` and ``attr`` are local names."""
+
+    names: tuple[str, ...]
+    attr: str
+
+
+def _shape(parsed: list[tuple[list[_Step], tuple]]) -> Shape | None:
+    if len(parsed) != 1:
+        return None
+    steps, terminal = parsed[0]
+    if terminal[0] != "attr":
+        return None
+    if not steps or steps[0].axis != "desc":
+        return None
+    for i, s in enumerate(steps):
+        if (
+            s.kind != "child" or s.preds or s.name == "*"
+            or (i and s.axis != "child")
+        ):
+            return None
+    return Shape(tuple(s.name for s in steps), terminal[1])
+
+
+def shape_of(expr: str) -> Shape | None:
+    """``expr``'s :class:`Shape`, or None when ``expr`` has another
+    form or is out of subset."""
+    parsed = _parse_expr(expr)
+    return None if parsed is None else _shape(parsed)
+
+
 def compile_subset(expr: str) -> Callable[[Element], str | None] | None:
     """Compile ``expr`` into ``tree -> concatenated-string-or-None``
     (None = empty nodeset → no cell). Returns None if out of subset.
@@ -1177,19 +1230,9 @@ def compile_subset(expr: str) -> Callable[[Element], str | None] | None:
     attributes of one element name-sorted (NamedNodeMap order), which
     the single merge walk reproduces by emitting an element's selected
     attributes, then its text, then its children."""
-    branches = _split_union(expr.strip())
-    parsed: list[tuple[list[_Step], tuple]] = []
-    for b in branches:
-        path, terminal = _split_terminal(b)
-        steps = _parse_path(path)
-        if steps is None or (not steps and terminal is None):
-            return None
-        if terminal is None:
-            # bare element projection = subtree string value (see module
-            # docstring: deliberate fix of the reference's "null" output)
-            terminal = ("text", True, None)
-        parsed.append((steps, terminal))
-
+    parsed = _parse_expr(expr)
+    if parsed is None:
+        return None
     if len(parsed) == 1:
         steps, terminal = parsed[0]
 

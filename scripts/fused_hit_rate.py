@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Measure the fused-XPath hit rate (round-5 verdict item 7): which
-fraction of expressions compile onto the fused ElementTree path (~2.5x
-faster end to end, see ``extract_cells_fused``) vs falling back to the
-general JVM ``xpath()``.
+fraction of expressions compile onto the fused ElementTree path (see
+``extract_cells_fused``) vs falling back to the general JVM ``xpath()``.
+Exits 1 if a reference-config expression falls back, a reference rule
+that takes only the start tag leaves the expat start-tag tier, or the
+catalog drifts from its documented routing.
 
 Three corpora, measured separately:
 1. Both reference configs' expressions (ExtractInventory /
@@ -16,6 +18,8 @@ Three corpora, measured separately:
    the subset — reported to evidence that claim holds, expected 100%).
 
 Pure-Python (no Spark session): compile_subset alone decides routing.
+The reference configs' rules also print their fused tier: the expat
+start-tag tier or a parsed tree (``extract._start_tag_plan``).
 """
 
 from __future__ import annotations
@@ -26,18 +30,21 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hadoopxmlextractor_spark.config import ExtractionConfig  # noqa: E402
+from hadoopxmlextractor_spark.extract import _start_tag_plan  # noqa: E402
 from hadoopxmlextractor_spark.xpath_subset import compile_subset  # noqa: E402
+from tests.fixtures import BOOK_CONFIG_XML, INVENTORY_CONFIG_XML  # noqa: E402
 
-REFERENCE_CONFIG_EXPRS = [
-    # ExtractInventory + ExtractBook (tests/fixtures.py; reference
-    # testdata configs carry the same shapes)
-    "//store/@name",
-    "//address/phone/text()",
-    "//inventory/@month",
-    "//inventory/@day",
-    "//book/@id",
-    "//book/@inStock",
-]
+REFERENCE_CONFIGS = {
+    name: ExtractionConfig.from_hadoop_xml(xml, is_text=True)
+    for name, xml in (("ExtractInventory", INVENTORY_CONFIG_XML), ("ExtractBook", BOOK_CONFIG_XML))
+}
+# the six distinct expressions of both configs, in declaration order
+REFERENCE_CONFIG_EXPRS = list(
+    dict.fromkeys(
+        xp.expr for c in REFERENCE_CONFIGS.values() for r in c.rules for xp in r.xpaths
+    )
+)
 
 # (construct family, canonical expression, expected_fused) — the
 # expectation documents the grammar; the script FAILS if reality
@@ -114,11 +121,24 @@ CATALOG = [
 
 
 def main() -> None:
+    # the reference configs stay fused, and every rule that takes only
+    # the start tag stays on the expat start-tag tier
+    left = []
+    for name, config in REFERENCE_CONFIGS.items():
+        for r in config.rules:
+            fused = all(compile_subset(xp.expr) is not None for xp in r.xpaths)
+            tier = "start tag" if _start_tag_plan(r) else "tree" if fused else "JVM fallback"
+            print(f"  {name}/{r.name}: {tier}: " + "; ".join(xp.expr for xp in r.xpaths))
+            if not fused or (not r.include_children and tier != "start tag"):
+                left.append(f"{name}/{r.name} ({tier})")
     ref_hits = sum(compile_subset(e) is not None for e in REFERENCE_CONFIG_EXPRS)
     print(
         f"reference configs: {ref_hits}/{len(REFERENCE_CONFIG_EXPRS)} "
         f"expressions fused ({100.0 * ref_hits / len(REFERENCE_CONFIG_EXPRS):.0f}%)"
     )
+    if left:
+        print(f"LEFT THEIR TIER: {'; '.join(left)}")
+        sys.exit(1)
 
     in_subset = [c for c in CATALOG if c[2]]
     out_subset = [c for c in CATALOG if not c[2]]
@@ -140,10 +160,7 @@ def main() -> None:
 
     # fuzz corpus: generated inside the subset by construction — the
     # hit rate evidences that the generator and grammar agree
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-    )
-    from test_xpath_crossval import _gen_expr
+    from tests.test_xpath_crossval import _gen_expr
 
     rng = random.Random(20260813)
     exprs = [_gen_expr(rng) for _ in range(500)]
