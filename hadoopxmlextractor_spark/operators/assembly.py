@@ -34,8 +34,14 @@ the scan loop, with no shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from hadoopxmlextractor_spark.sqltext import generated_names, string_literal
+
+_FILL_WINDOW = (
+    "OVER (PARTITION BY doc_id ORDER BY seq, `order` "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+)
 
 
 def assemble_rows(
@@ -56,40 +62,31 @@ def assemble_rows(
     ``theColumns[order] = value`` does); only the rendering maps it to
     ``missing_value``. Pass ``None`` to keep SQL NULLs/empties for the
     analytics surface.
+
+    The plan is built from SQL text over generated column names
+    ``c0 … cN-1`` (``sqltext``); ``column_names`` go on once at the end
+    through ``toDF``, and ``missing_value`` enters the text only as a
+    ``sqltext.string_literal``.
     """
-    names = column_names or [f"c{i}" for i in range(nr_of_columns)]
+    gen = generated_names(nr_of_columns)
+    names = column_names or gen
     if len(names) != nr_of_columns:
         raise ValueError("column_names length must equal nr_of_columns")
 
-    sparse = cells.select(
+    sparse = cells.selectExpr(
         "doc_id",
         "seq",
-        "order",
-        *[
-            F.when(F.col("order") == i, F.col("value")).alias(names[i])
-            for i in range(nr_of_columns)
-        ],
+        "`order`",
+        *[f"CASE WHEN `order` = {i} THEN value END AS {c}" for i, c in enumerate(gen)],
     )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("seq", "order")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    filled = sparse.selectExpr(
+        "doc_id", "seq", "`order`", *[f"last({c}, true) {_FILL_WINDOW} AS {c}" for c in gen]
     )
-    filled = [F.last(names[i], ignorenulls=True).over(w).alias(names[i]) for i in range(nr_of_columns)]
-    out = (
-        sparse.select("doc_id", "seq", "order", *filled)
-        # Emit exactly when the highest-order column arrives
-        # (XmlExtractor.java:159); its absence suppresses the row (§2.2-6).
-        .filter(F.col("order") == nr_of_columns - 1)
-        .drop("order")
-    )
+    # Emit exactly when the highest-order column arrives
+    # (XmlExtractor.java:159); its absence suppresses the row (§2.2-6).
+    out = filled.where(f"`order` = {nr_of_columns - 1}")
+    rendered = gen
     if missing_value is not None:
-        out = out.select(
-            "doc_id",
-            "seq",
-            *[
-                F.coalesce(F.nullif(F.col(n), F.lit("")), F.lit(missing_value)).alias(n)
-                for n in names
-            ],
-        )
-    return out
+        missing = string_literal(missing_value)
+        rendered = [f"coalesce(nullif({c}, ''), {missing}) AS {c}" for c in gen]
+    return out.selectExpr("doc_id", "seq", *rendered).toDF("doc_id", "seq", *names)

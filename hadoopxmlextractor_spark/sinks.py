@@ -7,16 +7,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
+from hadoopxmlextractor_spark.sqltext import generated_names, string_literal
 
 
 def to_reference_lines(result: DataFrame, config: ExtractionConfig) -> DataFrame:
     """Assembled rows → single-column DataFrame of reference-format lines:
     every column followed by the output delimiter, including the last
-    (``XmlExtractor.java:160-170``)."""
-    cols = config.output_columns()
-    line = F.concat(
-        *[F.concat(F.col(c), F.lit(config.output_delimiter)) for c in cols]
-    ).alias("value")
+    (``XmlExtractor.java:160-170``).
+
+    The output columns are found by name in ``result.columns`` and renamed
+    to the generated ``c0 … cN-1`` with one ``toDF``, so no user column
+    name enters the line's SQL text; the delimiter enters it as a
+    ``sqltext.string_literal``.
+    """
+    gen = dict(zip(config.output_columns(), generated_names(config.nr_of_columns)))
+    delimiter = string_literal(config.output_delimiter)
+    line = "concat(" + ", ".join(f"{c}, {delimiter}" for c in gen.values()) + ") AS value"
     # The reference guarantees per-document order within a reducer's
     # output file, never a total order across files (each reducer
     # writes its own part-r-NNNNN). repartition + sortWithinPartitions
@@ -24,9 +30,10 @@ def to_reference_lines(result: DataFrame, config: ExtractionConfig) -> DataFrame
     # range-partitioning global sort, which at 100 TB would add a
     # sampling pass plus a skew-prone total-order exchange.
     return (
-        result.repartition("doc_id")
+        result.toDF(*[gen.get(c, c) for c in result.columns])
+        .repartition("doc_id")
         .sortWithinPartitions("doc_id", "seq")
-        .select(line)
+        .selectExpr(line)
     )
 
 
