@@ -2018,35 +2018,21 @@ def q_events_sessionize_incremental(spark: SparkSession, sf: str) -> DataFrame:
     ev = load(spark, sf, "events").select(
         "user_id", "event_id", F.unix_millis(F.col("ts")).alias("ms")
     )
-    # r11 adjudication: the 2.17 s drift was REAL cpu (cpu/wall 0.92,
-    # BENCH_NOTES_r11) — the unordered count-over-partition window
-    # buffered every user's full partition a second time. A partial-agg
-    # count + broadcast join-back is map-side combinable and drops the
-    # second window pass (2.27 → 1.78 s min-of-3 at sf0.1); at 100 TB
-    # the per-user histogram is users-cardinality, always the cheaper
-    # side.
+    # A partial-agg count + broadcast join-back is map-side combinable
+    # and drops a second, unordered window pass over every user's
+    # events; the per-user histogram is users-cardinality, always the
+    # cheaper side.
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    # r14-opt (guide §5, §2.4): `ranked` feeds the old AND new splits
-    # and `standing` feeds the seed window AND the carry anti-join —
-    # unpersisted, the baseline plan re-scanned the events parquet ~8×
-    # (every seed/merge/continued consumer re-derived the whole chain).
-    # Persist both (plus the operator's internal seed/batch frames via
-    # persist_internal): one scan + one user-keyed window, then every
-    # consumer reads session-/user-cardinality caches. Eager count per
-    # the AQE race rule.
-    ranked = (
-        ev.join(F.broadcast(counts), "user_id")
-        .withColumn("rn", F.row_number().over(w))
-        .persist()
+    # `old` and `new` read the same user-keyed exchange, which AQE
+    # reuses at runtime; no cache and no eager count.
+    ranked = ev.join(F.broadcast(counts), "user_id").withColumn(
+        "rn", F.row_number().over(w)
     )
-    ranked.count()
     old = ranked.filter(F.col("rn") <= F.expr("(8 * n) div 10")).drop("rn", "n")
     new = ranked.filter(F.col("rn") > F.expr("(8 * n) div 10")).drop("rn", "n")
-    standing = sessionize_table(old, gap_ms=GAP).persist()
-    standing.count()
     return sessionize_incremental(
-        standing, new, gap_ms=GAP, persist_internal=True
+        sessionize_table(old, gap_ms=GAP), new, gap_ms=GAP
     )
 
 

@@ -264,33 +264,48 @@ def sessionize_incremental(
     user_col: str = "user_id",
     id_col: str = "event_id",
     ms_col: str = "ms",
-    persist_internal: bool = False,
-    broadcast_seed_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Merge an APPEND-ONLY batch of events into a standing session
     table without re-touching old events — the incremental half of the
     gap-sessionization pattern (late-binding session tables refreshed
     per landed batch).
 
-    Key property: under per-user append-only arrival (every new event
-    at or after that user's last old event), only each dirty user's
-    LAST standing session can change — the batch's first event either
-    falls within ``gap_ms`` of its end (the session EXTENDS, possibly
-    merging in the whole batch prefix) or beyond it (a NEW session
-    starts and the old one is already final). Everything else — every
-    session of untouched users and every non-final session of dirty
-    users — carries forward verbatim.
+    Precondition: per-user append-only arrival — every new event is at
+    or after (``ms`` ≥) that user's last old event. Then only a user's
+    LAST standing session can change: the batch's first event either
+    falls within ``gap_ms`` of its end (the session extends, taking in
+    the batch's leading run) or beyond it (a new session starts and the
+    old one is already final). Every other session carries forward.
 
-    Algebra: seed each dirty user's batch sessionization with
-    (last_sid, last_end): the first batch event's new-session flag
-    compares against ``last_end`` instead of NULL, and batch session
-    ids offset from ``last_sid``, so a continuing prefix lands on
-    EXACTLY the standing session's id. The continued session merges
-    counts/extends end; a non-continued last session survives via the
-    anti-join carry. Cost per batch: O(standing) carry + O(batch)
-    window — old EVENTS are never read (the standing table suffices),
-    which is the point: the session table is session-cardinality,
-    the event log is event-cardinality.
+    Algebra: one key-partitioned, secondary-sorted pass — the
+    reference's partition / sort / forward-fill idiom
+    (``XmlExtractor.java`` partitioner and comparators). The standing
+    sessions and the new events are unioned into one row shape
+    ``(user, kind, k, id, sid, start, end, n)``:
+
+    - a session row is ``kind=0``, sorted on ``k = session_id``, and
+      carries its own ``(start_ms, end_ms, n_events)`` and id;
+    - an event row is ``kind=1``, sorted on ``(k, id) = (ms,
+      event_id)``, and carries ``(ms, ms, 1)``.
+
+    One window ``partitionBy(user).orderBy(kind, k, id)`` puts each
+    user's sessions in id order ahead of its events, so the row before
+    the first event is the max-id session, whose end is the user's last
+    old event. An event starts a session when ``lag(end)`` is NULL or
+    ``ms − lag(end) > gap_ms`` (the :func:`sessionize_table` rule, so
+    a gap exactly at ``gap_ms`` continues); its id is
+    ``coalesce(running max(session id), 0) + running sum(starts)``, so
+    a continuing run lands on exactly the last standing session's id.
+    A session row keeps its own id. One ``groupBy(user, id)`` with
+    ``min(start)``, ``max(end)``, ``sum(n)`` then folds the continued
+    session and its new events together and leaves every other session
+    as it was.
+
+    Cost per batch: one hash exchange on ``user`` over standing ∪
+    batch rows (the window's; the grouping reuses its partitioning), one
+    sort, no join, no broadcast, no cache and no eager job. Old EVENTS
+    are never read — the session table is session-cardinality, the
+    event log event-cardinality.
 
     Inputs: ``standing`` = (user, session_id, start_ms, end_ms,
     n_events) — :func:`sessionize_table` output; ``new_events`` =
@@ -298,100 +313,55 @@ def sessionize_incremental(
     to a from-scratch :func:`sessionize_table` over all events
     (oracle-checked by `events_sessionize_incremental`).
     """
-    wlast = Window.partitionBy(user_col).orderBy(F.col("session_id").desc())
-    last = (
-        standing.withColumn("_rn", F.row_number().over(wlast))
-        .filter(F.col("_rn") == 1)
-        .select(
-            user_col,
-            F.col("session_id").alias("last_sid"),
-            F.col("start_ms").alias("last_start"),
-            F.col("end_ms").alias("last_end"),
-            F.col("n_events").alias("last_n"),
-        )
+    id_type = new_events.schema[id_col].dataType
+    sessions = standing.select(
+        user_col,
+        F.lit(0).alias("_kind"),
+        F.col("session_id").cast("long").alias("_k"),
+        F.lit(None).cast(id_type).alias("_id"),
+        F.col("session_id").cast("long").alias("_sid"),
+        F.col("start_ms").cast("long").alias("_start"),
+        F.col("end_ms").cast("long").alias("_end"),
+        F.col("n_events").cast("long").alias("_n"),
     )
-    dirty = new_events.select(user_col).distinct()
-    seed = dirty.join(last, user_col, "left")
-    # r15 opt (guide §3.1, VERDICT r14 item 7): `seed` is DIRTY-USER
-    # cardinality — a batch touching a large user set would make the
-    # unconditional broadcast the scale-killer (driver + every
-    # executor hold it; 8 GB/512M-row hard cap). When persist_internal
-    # is on, the eager count is already paid, so the broadcast is
-    # size-gated on it (~2M rows ≈ low hundreds of MB of (user, sid,
-    # ms×2, n) rows); past the gate the seed joins as a plain
-    # shuffle join. The streaming foreachBatch twin keeps the
-    # broadcast: its micro-batches bound the dirty set by trigger
-    # size, and counting there would add a per-batch job.
-    do_broadcast = True
-    if persist_internal:
-        # r14-opt (guide §5): `seed` feeds THREE consumers (the batch
-        # anchor broadcast, the merge broadcast, the continued-session
-        # probe) and `batch` two (merge + carry anti-join); unpersisted,
-        # each consumer re-ran the full upstream lineage — the baseline
-        # plan re-scanned the event log ~8×. Both frames are user-/
-        # session-cardinality (never event-cardinality), so the cache
-        # is dimension-sized at any scale. Eager count per the AQE
-        # race rule. Opt-in because the streaming foreachBatch twin
-        # must not accumulate per-batch caches.
-        seed = seed.persist()
-        do_broadcast = seed.count() <= broadcast_seed_max_rows
-    _seed_hint = F.broadcast if do_broadcast else (lambda df: df)
-    w = Window.partitionBy(user_col).orderBy(ms_col, id_col)
+    ms = F.col(ms_col).cast("long")
+    events = new_events.select(
+        user_col,
+        F.lit(1).alias("_kind"),
+        ms.alias("_k"),
+        F.col(id_col).alias("_id"),
+        F.lit(None).cast("long").alias("_sid"),
+        ms.alias("_start"),
+        ms.alias("_end"),
+        F.lit(1).cast("long").alias("_n"),
+    )
+    w = Window.partitionBy(user_col).orderBy("_kind", "_k", "_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     marked = (
-        new_events.join(_seed_hint(seed), user_col, "left")
-        .withColumn("_prev", F.lag(ms_col).over(w))
-        # the batch's first row anchors on the standing session's end
-        .withColumn("_anchor", F.coalesce("_prev", "last_end"))
+        sessions.unionByName(events)
+        .withColumn("_prev", F.lag("_end").over(w))
         .withColumn(
             "_ns",
             F.when(
-                F.col("_anchor").isNull()
-                | ((F.col(ms_col) - F.col("_anchor")) > gap_ms),
+                (F.col("_kind") == 1)
+                & (
+                    F.col("_prev").isNull()
+                    | ((F.col("_start") - F.col("_prev")) > gap_ms)
+                ),
                 1,
             ).otherwise(0),
         )
     )
-    sess = marked.withColumn(
-        "_sid",
-        F.coalesce(F.col("last_sid"), F.lit(0)) + F.sum("_ns").over(wrun),
+    ided = marked.withColumn(
+        "session_id",
+        F.coalesce(
+            F.col("_sid"),
+            F.coalesce(F.max("_sid").over(wrun), F.lit(0))
+            + F.sum("_ns").over(wrun),
+        ),
     )
-    batch = sess.groupBy(user_col, "_sid").agg(
-        F.min(ms_col).cast("long").alias("b_start"),
-        F.max(ms_col).cast("long").alias("b_end"),
-        F.count(F.lit(1)).cast("long").alias("b_n"),
+    return ided.groupBy(user_col, "session_id").agg(
+        F.min("_start").alias("start_ms"),
+        F.max("_end").alias("end_ms"),
+        F.sum("_n").alias("n_events"),
     )
-    if persist_internal:
-        batch = batch.persist()
-        batch.count()
-    merged = batch.join(_seed_hint(seed), user_col, "left").select(
-        user_col,
-        F.col("_sid").cast("long").alias("session_id"),
-        F.when(
-            F.col("_sid") == F.col("last_sid"),
-            F.least("last_start", "b_start"),
-        )
-        .otherwise(F.col("b_start"))
-        .cast("long")
-        .alias("start_ms"),
-        F.col("b_end").alias("end_ms"),
-        (
-            F.col("b_n")
-            + F.when(
-                F.col("_sid") == F.col("last_sid"), F.col("last_n")
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("n_events"),
-    )
-    continued = (
-        batch.join(seed, user_col)
-        .filter(F.col("_sid") == F.col("last_sid"))
-        .select(user_col, F.col("_sid").alias("session_id"))
-    )
-    carried = standing.join(
-        _seed_hint(continued), [user_col, "session_id"], "left_anti"
-    )
-    return carried.select(
-        user_col, "session_id", "start_ms", "end_ms", "n_events"
-    ).unionByName(merged)

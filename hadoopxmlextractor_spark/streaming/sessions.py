@@ -4,9 +4,15 @@ exactly-once.
 
 The composition mirrors ``streaming/leaderboard.py``: per batch,
 :func:`operators.temporal.sessionize_incremental` merges the batch
-into the standing table (append-only arrival ⇒ only each dirty user's
-LAST session can extend/merge; old EVENTS are never re-read — the
-session table plus the batch suffice), and the result lands as a new
+into the standing table in one user-keyed sorted pass — the standing
+sessions and the batch's events are unioned, sorted per user with the
+sessions (in id order) ahead of the events, and one running window
+decides whether the batch's leading run extends the user's last
+session or opens new ones; one grouping folds the result (append-only
+arrival ⇒ only each dirty user's LAST session can extend/merge; old
+EVENTS are never re-read — the session table plus the batch suffice;
+no join, broadcast or cache, so no per-batch state outlives the
+batch), and the result lands as a new
 snapshot version whose pointer commits the version AND the batch id
 in one atomic rename (:func:`snapshots.write_snapshot` with
 ``batch_id``): a crash at ANY point either leaves the pointer

@@ -1148,21 +1148,68 @@ def test_prefix_filter_join_plan_contract(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_sessionize_incremental_plan_contract(spark):
-    # The batch merge must keep its incremental shape: the dirty-user
-    # seed and the continued-session carry ride BROADCAST joins (both
-    # are dirty-dimension-sized), never a shuffle of the standing
-    # table against the batch, and nothing degrades to a nested loop.
+def test_sessionize_incremental_plan_contract(spark, tmp_path):
+    # The batch merge is one user-keyed sorted pass: over two
+    # parquet-read inputs it plans exactly one hash exchange on the
+    # user, no join of any kind and no broadcast (so no
+    # dirty-cardinality frame is ever broadcast, at any batch size).
+    # The registry query around it never degrades to a nested loop.
+    import re
+
     from hadoopxmlextractor_spark.events_queries import (
         q_events_sessionize_incremental,
     )
-    from hadoopxmlextractor_spark.plans import executed_plan
+    from hadoopxmlextractor_spark.operators.temporal import (
+        sessionize_incremental,
+        sessionize_table,
+    )
 
-    plan = executed_plan(q_events_sessionize_incremental(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("BroadcastHashJoin") >= 3  # seed ×2 + carry
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    ev = spark.createDataFrame(
+        [(1, 1, 0), (1, 2, 1000), (2, 3, 0), (1, 4, 9_000_000), (3, 5, 7)],
+        "user_id long, event_id long, ms long",
+    )
+    sessionize_table(
+        ev.filter(F.col("event_id") <= 3), gap_ms=3_600_000
+    ).write.parquet(str(tmp_path / "standing"))
+    ev.filter(F.col("event_id") > 3).write.parquet(str(tmp_path / "batch"))
+    plan = executed_plan(
+        sessionize_incremental(
+            spark.read.parquet(str(tmp_path / "standing")),
+            spark.read.parquet(str(tmp_path / "batch")),
+            gap_ms=3_600_000,
+        )
+    )
+    assert not re.search(r"Join|CartesianProduct", plan), plan
+    assert "BroadcastExchange" not in plan
+    assert len(re.findall(r"\bExchange hashpartitioning\(user_id", plan)) == 1
+
+    qplan = executed_plan(q_events_sessionize_incremental(spark, SF))
+    assert "BroadcastNestedLoopJoin" not in qplan
+    assert "CartesianProduct" not in qplan
+
+
+def test_sessionize_incremental_query_job_budget_and_no_leaked_cache(spark):
+    """Build plus a noop action of the registry query runs in at most 8
+    jobs (it ran 22 with its broadcast merge and four persist+count
+    barriers), and leaves no persisted RDD behind."""
+    from hadoopxmlextractor_spark.events_queries import (
+        q_events_sessionize_incremental,
+    )
+
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs
+    before = persisted().size()
+    group = "sessionize-incremental-job-budget"
+    sc.setJobGroup(group, "events_sessionize_incremental build + noop")
+    try:
+        df = q_events_sessionize_incremental(spark, SF)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, jobs
+    assert persisted().size() == before
 
 
 def test_maintain_minmax_touches_only_dirty_groups(spark):
@@ -1482,33 +1529,6 @@ def test_paragraph_segmentation_lambda_planned_once(spark):
     assert executed_plan(df).count("transform(sequence") == 1
 
 
-def test_sessionize_incremental_persist_internal_equivalence(spark):
-    """persist_internal=True only adds caches for the operator's
-    internal multi-consumer frames; the merged session table must be
-    row-identical either way."""
-    from hadoopxmlextractor_spark.operators.temporal import (
-        sessionize_incremental,
-        sessionize_table,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            (1, 1, 0), (1, 2, 1000), (1, 3, 9_000_000),
-            (2, 4, 0), (2, 5, 50_000_000),
-            (3, 6, 0),
-        ],
-        "user_id long, event_id long, ms long",
-    )
-    old = ev.filter(F.col("event_id") <= 4)
-    new = ev.filter(F.col("event_id") > 4)
-    standing = sessionize_table(old, gap_ms=3_600_000)
-    a = sessionize_incremental(standing, new, gap_ms=3_600_000)
-    b = sessionize_incremental(
-        standing, new, gap_ms=3_600_000, persist_internal=True
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_connected_components_consumes_pair_lineage_once(spark):
     """Edge symmetrization is one explode, not union(edges, swapped):
     the union form consumed the caller's pair-generation lineage twice,
@@ -1574,51 +1594,6 @@ def test_paragraph_array_never_null_or_empty(spark):
         exploded.select("doc_id").distinct().count()
         == toks.select("doc_id").distinct().count()
     )
-
-
-def test_sessionize_incremental_seed_broadcast_size_gated(spark):
-    """VERDICT r14 item 7: the seed broadcast must be size-gated. With
-    a forced-tiny threshold the seed joins WITHOUT a broadcast hint
-    (plan shows no broadcast of the seed side), and the merged table
-    stays row-identical to the broadcast form."""
-    from hadoopxmlextractor_spark.operators.temporal import (
-        sessionize_incremental,
-        sessionize_table,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            (1, 1, 0), (1, 2, 1000), (1, 3, 9_000_000),
-            (2, 4, 0), (2, 5, 50_000_000),
-            (3, 6, 0), (3, 7, 100),
-        ],
-        "user_id long, event_id long, ms long",
-    )
-    old = ev.filter(F.col("event_id") <= 4)
-    new = ev.filter(F.col("event_id") > 4)
-    standing = sessionize_table(old, gap_ms=3_600_000)
-    small = sessionize_incremental(
-        standing, new, gap_ms=3_600_000, persist_internal=True
-    )
-    spark.catalog.clearCache()
-    gated = sessionize_incremental(
-        standing, new, gap_ms=3_600_000, persist_internal=True,
-        broadcast_seed_max_rows=0,
-    )
-    # row-identical either way
-    assert small.exceptAll(gated).count() == 0
-    assert gated.exceptAll(small).count() == 0
-    # the gated plan must not broadcast the seed: the broadcast form
-    # plans strictly more BroadcastExchange nodes
-    import re
-
-    def n_bx(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return len(re.findall(r"BroadcastExchange", plan))
-
-    spark.catalog.clearCache()
-    assert n_bx(gated) < n_bx(small)
-    spark.catalog.clearCache()
 
 
 def test_fused_extraction_assembles_map_side(spark):
