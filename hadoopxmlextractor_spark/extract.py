@@ -5,7 +5,8 @@ Spark-first restatement of the reference's fixed physical plan
 → ordered pivot + forward fill → sink; ``XmlExtractor.java:178-212``):
 
 1. **Scan** — whole-document rows (``sources.read_xml_documents``).
-2. **Fragment extraction** — Arrow-batched ``mapInPandas`` running the
+2. **Fragment extraction** — Arrow-batched ``mapInArrow`` (through
+   ``operators.kernel.map_rows``, one function per document) running the
    pure-Python multi-pattern scanner (``scanner.py``); the attribute
    predicate and the include-children truncation happen here, *before*
    any XML parsing — the same filter/projection pushdown the reference
@@ -52,15 +53,16 @@ from __future__ import annotations
 from typing import Iterator
 from xml.parsers import expat
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoopxmlextractor_spark.config import ExtractionConfig, ExtractRule
 from hadoopxmlextractor_spark.operators.assembly import assemble_rows
+from hadoopxmlextractor_spark.operators.kernel import map_rows
 from hadoopxmlextractor_spark.scanner import compile_rules, scan_document
 from hadoopxmlextractor_spark.sqltext import string_literal
 
+_DOC_COLS = ("doc_id", "content")
 _FRAGMENT_SCHEMA = "doc_id string, seq long, rule_idx int, fragment string"
 
 
@@ -75,30 +77,15 @@ def extract_fragments(
     """
     compiled = compile_rules(config.rules)
 
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            rule_idxs: list[int] = []
-            frags: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for frag in scan_document(content, compiled, validate=validate):
-                    doc_ids.append(doc_id)
-                    seqs.append(frag.seq)
-                    rule_idxs.append(frag.rule_idx)
-                    frags.append(frag.xml)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "rule_idx": pd.Series(rule_idxs, dtype="int32"),
-                    "fragment": pd.Series(frags, dtype="object"),
-                }
-            )
+    def fragment_rows(doc_id, content):
+        if content is None:
+            return ()
+        return [
+            (doc_id, frag.seq, frag.rule_idx, frag.xml)
+            for frag in scan_document(content, compiled, validate=validate)
+        ]
 
-    return docs.mapInPandas(scan_batches, schema=_FRAGMENT_SCHEMA)
+    return map_rows(docs, _DOC_COLS, fragment_rows, _FRAGMENT_SCHEMA)
 
 
 def _xpath_sql(expr: str) -> str:
@@ -291,38 +278,22 @@ def _fused_scan(config: ExtractionConfig, per_rule):
     return document_cells
 
 
-def _cell_batches(document_cells):
-    """mapInPandas body: documents → the long-format cell stream."""
+def _cell_rows(document_cells):
+    """Per-document body of the fused cell stream: (doc_id, content) →
+    the document's cells."""
 
-    def scan_project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            orders: list[int] = []
-            values: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for seq, order, value in document_cells(content):
-                    doc_ids.append(doc_id)
-                    seqs.append(seq)
-                    orders.append(order)
-                    values.append(value)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "order": pd.Series(orders, dtype="int32"),
-                    "value": pd.Series(values, dtype="object"),
-                }
-            )
+    def cell_rows(doc_id, content):
+        if content is None:
+            return ()
+        return [(doc_id, *cell) for cell in document_cells(content)]
 
-    return scan_project
+    return cell_rows
 
 
-def _row_batches(document_cells, config: ExtractionConfig, missing_value: str | None):
-    """mapInPandas body: documents → assembled rows, the reference's reducer
-    (``XmlExtractor.java:150-175``) run map-side.
+def _assembled_rows(document_cells, config: ExtractionConfig, missing_value: str | None):
+    """Per-document body of the fused ``extract``: (doc_id, content) →
+    assembled rows, the reference's reducer (``XmlExtractor.java:150-175``)
+    run map-side.
 
     One scan sees a whole document and yields its cells in ``(seq,
     order)`` order, which is all the reducer's shuffle and sort provide.
@@ -331,27 +302,24 @@ def _row_batches(document_cells, config: ExtractionConfig, missing_value: str | 
     ``assemble_rows``' rows, rendered the same way. ``ExtractionConfig``
     guarantees every order lies in ``[0, nr_of_columns)``.
     """
-    names = config.output_columns()
     n = config.nr_of_columns
     trigger = n - 1
 
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                state: list[str | None] = [None] * n
-                for seq, order, value in document_cells(content):
-                    state[order] = value
-                    if order == trigger:
-                        if missing_value is None:
-                            rows.append((doc_id, seq, *state))
-                        else:
-                            rows.append((doc_id, seq, *[v or missing_value for v in state]))
-            yield pd.DataFrame(rows, columns=["doc_id", "seq", *names]).astype({"seq": "int64"})
+    def assembled_rows(doc_id, content):
+        if content is None:
+            return ()
+        rows: list[tuple] = []
+        state: list[str | None] = [None] * n
+        for seq, order, value in document_cells(content):
+            state[order] = value
+            if order == trigger:
+                if missing_value is None:
+                    rows.append((doc_id, seq, *state))
+                else:
+                    rows.append((doc_id, seq, *[v or missing_value for v in state]))
+        return rows
 
-    return assemble
+    return assembled_rows
 
 
 def extract_cells_fused(docs: DataFrame, config: ExtractionConfig) -> DataFrame:
@@ -383,7 +351,7 @@ def extract_cells(
     per_rule = _select_fused(config, fused)
     if per_rule is None:
         return project_cells(extract_fragments(docs, config, validate=validate), config)
-    return docs.mapInPandas(_cell_batches(_fused_scan(config, per_rule)), schema=_CELL_SCHEMA)
+    return map_rows(docs, _DOC_COLS, _cell_rows(_fused_scan(config, per_rule)), _CELL_SCHEMA)
 
 
 def extract(
@@ -414,8 +382,11 @@ def extract(
         [StructField("doc_id", StringType()), StructField("seq", LongType())]
         + [StructField(name, StringType()) for name in config.output_columns()]
     )
-    return docs.mapInPandas(
-        _row_batches(_fused_scan(config, per_rule), config, missing_value), schema=schema
+    return map_rows(
+        docs,
+        _DOC_COLS,
+        _assembled_rows(_fused_scan(config, per_rule), config, missing_value),
+        schema,
     )
 
 
@@ -463,33 +434,18 @@ def malformed_fragments(
     compiled = compile_rules(config.rules)
     rule_names = [r.element_name for r in config.rules]
 
-    def scan_errors(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[str] = []
-            seqs: list[int] = []
-            rules: list[str] = []
-            errors: list[str] = []
-            snippets: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    continue
-                for frag in scan_document(content, compiled, validate=False):
-                    try:
-                        ET.fromstring(frag.xml)
-                    except ET.ParseError as e:
-                        doc_ids.append(doc_id)
-                        seqs.append(frag.seq)
-                        rules.append(rule_names[frag.rule_idx])
-                        errors.append(str(e))
-                        snippets.append(frag.xml[:snippet_len])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(doc_ids, dtype="object"),
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "rule": pd.Series(rules, dtype="object"),
-                    "error": pd.Series(errors, dtype="object"),
-                    "snippet": pd.Series(snippets, dtype="object"),
-                }
-            )
+    def error_rows(doc_id, content):
+        if content is None:
+            return ()
+        rows = []
+        for frag in scan_document(content, compiled, validate=False):
+            try:
+                ET.fromstring(frag.xml)
+            except ET.ParseError as e:
+                rows.append((
+                    doc_id, frag.seq, rule_names[frag.rule_idx], str(e),
+                    frag.xml[:snippet_len],
+                ))
+        return rows
 
-    return docs.mapInPandas(scan_errors, schema=_ERROR_SCHEMA)
+    return map_rows(docs, _DOC_COLS, error_rows, _ERROR_SCHEMA)

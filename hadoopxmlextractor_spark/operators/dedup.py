@@ -561,19 +561,6 @@ def minhash_lsh_candidates_scoped(
     )
 
 
-def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
-    """Fraction of equal signature components (JVM expression form).
-
-    NOTE: do not use below a join — zip_with/aggregate lambdas are
-    interpreted and get duplicated into pushed-down join filters; use
-    :func:`estimated_jaccard_udf` there (the SCALE.md rule).
-    """
-    eq = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.round(
-        F.aggregate(eq, F.lit(0), lambda acc, x: acc + x) / F.size(sig_a), 4
-    )
-
-
 def estimated_jaccard_udf():
     """Vectorized pair-signature agreement: one numpy comparison per
     Arrow batch — the join-safe verify kernel for the LSH path."""

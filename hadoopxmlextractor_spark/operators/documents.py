@@ -13,8 +13,9 @@ html-free regex tokenizers for the PDF content-stream subset) — no
 Pillow/ffmpeg-class dependency, same zero-dependency contract as the
 media codec tier in :mod:`operators.multimodal`.
 
-Spark shape: every operator is ONE Arrow ``mapInPandas`` pass over an
-opaque binary column — zero shuffle, scan-bandwidth, embarrassingly
+Spark shape: every operator is ONE Arrow ``mapInArrow`` pass
+(``kernel.blob_rows``) over an opaque binary column — zero shuffle,
+scan-bandwidth, embarrassingly
 parallel per blob at 100 TB (SCALE.md: the per-blob kernels are
 CPU-bound and independent, so throughput scales with executor cores
 and the only data movement is the parquet scan itself). Malformed or
@@ -54,7 +55,7 @@ from hadoopxmlextractor_spark.operators.bitio import (
     _bounded_unxz,
     _bz2_decompress_streams,
 )
-from hadoopxmlextractor_spark.operators.kernel import blob_rows
+from hadoopxmlextractor_spark.operators.kernel import blob_rows, map_rows
 
 # ---------------------------------------------------------------------------
 # ZIP container — EOCD scan-back + central-directory walk + inflate
@@ -5004,32 +5005,15 @@ def wikipedia_split_index(
     file-based index pass in :func:`read_wikipedia_multistream`; a
     malformed dump/index degrades to the split_idx -1 marker row."""
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "split_idx", "offset", "length", "first_rec",
-                "n_recs", "n_members"]
-        for pdf in batches:
-            rows = []
-            for did, blob, idx in zip(
-                pdf[id_col], pdf[content_col], pdf[index_col]
-            ):
-                try:
-                    entries = parse_multistream_index(bytes(idx))
-                    for s in wikipedia_multistream_cuts(
-                        entries, len(bytes(blob)), target_bytes
-                    ):
-                        rows.append({"doc_id": did, **s})
-                except (ValueError, IndexError, OSError):
-                    rows.append({
-                        "doc_id": did, "split_idx": -1, "offset": None,
-                        "length": None, "first_rec": None,
-                        "n_recs": None, "n_members": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def cuts(blob, idx):
+        entries = parse_multistream_index(bytes(idx))
+        return wikipedia_multistream_cuts(entries, len(bytes(blob)), target_bytes)
 
-    return files.select(id_col, content_col, index_col).mapInPandas(
-        _index,
-        schema="doc_id bigint, split_idx int, offset long, length long, "
+    return blob_rows(
+        files, id_col, [content_col, index_col], cuts,
+        "doc_id bigint, split_idx int, offset long, length long, "
         "first_rec int, n_recs int, n_members int",
+        {"split_idx": -1},
     )
 
 
@@ -5042,26 +5026,12 @@ def wikipedia_pages_ranged(
     dump (asserted in tests). Malformed ranges yield the page_id -1
     marker."""
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, blob, off, ln in zip(
-                pdf[id_col], pdf[content_col], pdf["offset"], pdf["length"]
-            ):
-                try:
-                    raw = bytes(blob)[int(off) : int(off) + int(ln)]
-                    rows.extend(_wikipedia_range_rows(did, raw))
-                except (ValueError, TypeError, OSError,
-                        ElementTree.ParseError):
-                    rows.append({
-                        "doc_id": did, "page_id": -1, "title": None,
-                        "ns": None, "redirect_to": None,
-                        "text_clean": None, "n_tokens": None,
-                    })
-            yield pd.DataFrame(rows, columns=_WIKI_COLS)
-
-    return splits.select(id_col, content_col, "offset", "length").mapInPandas(
-        _parse, schema=_WIKI_SCHEMA
+    return blob_rows(
+        splits, id_col, [content_col, "offset", "length"],
+        lambda blob, off, ln: _wikipedia_range_rows(
+            None, bytes(blob)[off : off + ln]
+        ),
+        _WIKI_SCHEMA, {"page_id": -1},
     )
 
 
@@ -5084,44 +5054,33 @@ def read_wikipedia_multistream(
         [(dump_path, index_path)], "dump string, idx string"
     )
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["dump", "split_idx", "offset", "length", "first_rec"]
-        for pdf in batches:
-            rows = []
-            for dp, ip in zip(pdf["dump"], pdf["idx"]):
-                with open(_local_path(ip), "rb") as f:
-                    entries = parse_multistream_index(f.read())
-                size = os.path.getsize(_local_path(dp))
-                for s in wikipedia_multistream_cuts(
-                    entries, size, target_bytes
-                ):
-                    rows.append({
-                        "dump": dp, "split_idx": s["split_idx"],
-                        "offset": s["offset"], "length": s["length"],
-                        "first_rec": s["first_rec"],
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def split_rows(dp, ip):
+        with open(_local_path(ip), "rb") as f:
+            entries = parse_multistream_index(f.read())
+        size = os.path.getsize(_local_path(dp))
+        return [
+            (dp, c["split_idx"], c["offset"], c["length"], c["first_rec"])
+            for c in wikipedia_multistream_cuts(entries, size, target_bytes)
+        ]
 
-    splits = paths.mapInPandas(
-        _index,
-        schema="dump string, split_idx int, offset long, length long, "
+    splits = map_rows(
+        paths, ["dump", "idx"], split_rows,
+        "dump string, split_idx int, offset long, length long, "
         "first_rec int",
     )
 
-    def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for dp, off, ln in zip(
-                pdf["dump"], pdf["offset"], pdf["length"]
-            ):
-                with open(_local_path(dp), "rb") as f:
-                    f.seek(int(off))
-                    raw = f.read(int(ln))
-                rows.extend(_wikipedia_range_rows(0, raw))
-            yield pd.DataFrame(rows, columns=_WIKI_COLS)
+    def page_rows(dp, off, ln):
+        with open(_local_path(dp), "rb") as f:
+            f.seek(off)
+            raw = f.read(ln)
+        return [
+            tuple(r.get(c) for c in _WIKI_COLS)
+            for r in _wikipedia_range_rows(0, raw)
+        ]
 
-    return splits.repartition(n_parts, "dump", "split_idx").mapInPandas(
-        _read, schema=_WIKI_SCHEMA
+    return map_rows(
+        splits.repartition(n_parts, "dump", "split_idx"),
+        ["dump", "offset", "length"], page_rows, _WIKI_SCHEMA,
     )
 
 

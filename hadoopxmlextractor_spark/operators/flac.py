@@ -116,9 +116,6 @@ _FIXED_COEF = {
 def _zigzag(v: int) -> int:
     return 2 * v if v >= 0 else -2 * v - 1
 
-def _unzigzag(u: int) -> int:
-    return u >> 1 if u % 2 == 0 else -(u >> 1) - 1
-
 
 def _read_residual(br: BitReader, blocksize: int, order: int) -> list[int]:
     method = br.read(2)

@@ -1,12 +1,24 @@
-"""The per-blob kernel adaptor — one ``mapInPandas`` batch loop, one
-refusal tuple and one marker row for every operator that turns a
-(key, blob) column pair into rows.
+"""The row adaptor — one ``mapInArrow`` batch loop for every operator
+that turns input rows into output rows, and on it one refusal tuple and
+one marker row for every operator that turns a (key, blob) pair into
+rows.
 
-A kernel supplies only ``decode(blob) -> list[dict]``: the rows of one
-blob, without the key. :func:`blob_rows` owns the rest:
+:func:`map_rows` takes a plain per-row function: ``rows_of(*values)``
+gets the values of the input columns of one row and returns that row's
+output rows as tuples in the output schema's order. It owns the rest:
 
-- the key is the first field of the DDL ``schema`` and is added to
-  every row; the output columns follow the DDL order;
+- the input columns of one Arrow batch are read with ``to_pylist``;
+- one ``pa.RecordBatch`` goes out per batch in, built from column
+  lists with the schema's Arrow types (no pandas on the way);
+- an integer column is converted with Arrow's safe cast, so a value
+  with a fraction raises instead of truncating.
+
+:func:`blob_rows` is :func:`map_rows` for the per-blob kernels, which
+supply only ``decode(*values) -> list[dict]``: the rows of one blob,
+without the key.
+
+- the key is the first field of ``schema`` and is added to every row;
+  the output columns follow the schema's order;
 - a blob's rows join the batch only after ``decode`` returns, so a blob
   yields all of its rows or only its marker (all-or-marker);
 - an exception in :data:`REFUSED` becomes ONE marker row: the key, the
@@ -25,11 +37,12 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator, Sequence
 from xml.etree import ElementTree
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # What a malformed blob may raise out of a decoder: the stdlib and
 # codec families the operators hit on hostile input. LookupError covers
@@ -41,55 +54,92 @@ REFUSED = (
 )
 
 
-def _ddl_names(schema: str) -> list[str]:
-    """Field names of a DDL schema string, in order (commas inside
-    ``<...>``/``(...)`` type parameters do not split fields)."""
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(schema + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            names.append(schema[start:i].split()[0])
-            start = i + 1
-    return names
+def _column(values: Sequence, type: pa.DataType) -> pa.Array:
+    """One output column. ``pa.array([1.5], type=pa.int64())`` reads 1,
+    so integers go through inference and the safe cast, which raises on
+    a fraction or an overflow and takes a bool as 0/1."""
+    if pa.types.is_integer(type):
+        return pa.array(values).cast(type)
+    return pa.array(values, type=type)
 
 
-def _blob_batches(
-    batches: Iterator[pd.DataFrame],
-    key_col: str,
-    blob_col: str,
-    decode: Callable,
-    cols: list[str],
-    marker: dict,
-) -> Iterator[pd.DataFrame]:
-    key = cols[0]
-    refused = {**dict.fromkeys(cols), **marker}
-    for pdf in batches:
-        rows: list[dict] = []
-        for k, blob in zip(pdf[key_col], pdf[blob_col]):
-            try:
-                out = [{**r, key: k} for r in decode(blob)]
-            except REFUSED:
-                out = [{**refused, key: k}]
-            rows.extend(out)
-        yield pd.DataFrame(rows, columns=cols)
+def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    cols = zip(*rows) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [_column(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _map_batches(
+    batches: Iterator[pa.RecordBatch],
+    idx: list[int],
+    rows_of: Callable[..., Iterable[tuple]],
+    schema: pa.Schema,
+) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        cols = [c.to_pylist() for c in batch.columns]
+        rows: list[tuple] = []
+        for values in zip(*(cols[i] for i in idx)):
+            rows.extend(rows_of(*values))
+        yield _record_batch(rows, schema)
+
+
+def _struct(schema: StructType | str) -> StructType:
+    if isinstance(schema, str):
+        from pyspark.sql.types import _parse_datatype_string
+
+        return _parse_datatype_string(schema)
+    return schema
+
+
+def map_rows(
+    df: DataFrame,
+    in_cols: Sequence[str],
+    rows_of: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+) -> DataFrame:
+    """``rows_of(*values)`` over the ``in_cols`` values of every row of
+    ``df`` in one Arrow pass, as rows of ``schema`` (a ``StructType``,
+    or DDL text that holds no user-supplied name)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = _struct(schema)
+    arrow = to_arrow_schema(st)
+    names = list(dict.fromkeys(in_cols))
+    idx = [names.index(c) for c in in_cols]
+
+    def _rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _map_batches(batches, idx, rows_of, arrow)
+
+    return df.select(*names).mapInArrow(_rows, schema=st)
+
+
+def _refusing(decode: Callable, names: list[str], marker: dict) -> Callable:
+    """``rows_of`` for :func:`blob_rows`: the key, then ``decode``'s
+    row dicts laid out as ``names[1:]``, or the one marker row."""
+    rest = names[1:]
+    refused = tuple(marker.get(n) for n in rest)
+
+    def rows_of(key, *values):
+        try:
+            return [(key, *[r.get(n) for n in rest]) for r in decode(*values)]
+        except REFUSED:
+            return [(key, *refused)]
+
+    return rows_of
 
 
 def blob_rows(
     df: DataFrame,
     key_col: str,
-    blob_col: str,
+    blob_cols: str | Sequence[str],
     decode: Callable,
-    schema: str,
+    schema: StructType | str,
     marker: dict,
 ) -> DataFrame:
-    """``decode`` over every (``key_col``, ``blob_col``) row of ``df`` in
-    one Arrow pass, as rows of the DDL ``schema`` (key first)."""
-    cols = _ddl_names(schema)
-
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _blob_batches(batches, key_col, blob_col, decode, cols, marker)
-
-    return df.select(key_col, blob_col).mapInPandas(_rows, schema=schema)
+    """``decode(*blobs)`` over every row of ``df`` in one Arrow pass, as
+    rows of ``schema`` (key first). ``blob_cols`` names the one or more
+    columns ``decode`` takes; it may name ``key_col`` itself."""
+    st = _struct(schema)
+    cols = [blob_cols] if isinstance(blob_cols, str) else list(blob_cols)
+    return map_rows(df, [key_col, *cols], _refusing(decode, st.names, marker), st)

@@ -38,6 +38,7 @@ import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 from hadoopxmlextractor_spark.queries import query
 from hadoopxmlextractor_spark.tables import load
 
@@ -240,45 +241,20 @@ def q_multimodal_audio_mp3_frames(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "mpeg_version", "layer", "bitrate_kbps",
-                "sample_rate", "channels", "vbr_kind", "n_frames",
-                "duration_ms"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_mp3_blob(i)
-                if i % 13 == 12:  # corrupt arm: sync byte broken
-                    at = (
-                        10 + C._unsyncsafe(blob[6:10])
-                        if blob[:3] == b"ID3" else 0
-                    )
-                    blob = blob[:at] + b"\x00" + blob[at + 1 :]
-                row = dict.fromkeys(cols)
-                row["doc_id"] = i
-                try:
-                    info = C.mp3_frame_info(blob)
-                    row.update(
-                        mpeg_version=info["version"],
-                        layer=info["layer"],
-                        bitrate_kbps=info["bitrate_kbps"],
-                        sample_rate=info["sample_rate"],
-                        channels=info["channels"],
-                        vbr_kind=info["vbr_kind"],
-                        n_frames=info["n_frames"],
-                        duration_ms=info["duration_ms"],
-                    )
-                except (ValueError, struct.error, IndexError):
-                    pass  # marker row
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def decode(i):
+        blob = _synth_mp3_blob(i)
+        if i % 13 == 12:  # corrupt arm: sync byte broken
+            at = 10 + C._unsyncsafe(blob[6:10]) if blob[:3] == b"ID3" else 0
+            blob = blob[:at] + b"\x00" + blob[at + 1 :]
+        info = C.mp3_frame_info(blob)
+        return [{**info, "mpeg_version": info["version"]}]
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, mpeg_version string, layer int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id", decode,
+        "doc_id bigint, mpeg_version string, layer int, "
         "bitrate_kbps int, sample_rate int, channels int, "
         "vbr_kind string, n_frames bigint, duration_ms bigint",
+        {},
     )
 
 
@@ -852,6 +828,30 @@ def q_multimodal_image_orientation_dedup(
 # ---------------------------------------------------------------------------
 
 
+SEVENZIP_SCHEMA = (
+    "doc_id bigint, member_idx int, name string, method string, "
+    "size bigint, crc_ok int, head string"
+)
+
+
+def _sevenzip_rows(
+    blob: bytes, *, password: str | None = None, verified_head: bool = False
+) -> list[dict]:
+    """``SEVENZIP_SCHEMA`` rows (without doc_id) of a 7z archive's
+    members; ``verified_head`` hides the head of a member whose CRC
+    fails (unverified plaintext is never surfaced)."""
+    from hadoopxmlextractor_spark.operators import documents as D
+
+    return [
+        {
+            "member_idx": k, "name": m["name"], "method": m["method"],
+            "size": m["size"], "crc_ok": m["crc_ok"],
+            "head": None if verified_head and m["crc_ok"] is False else m["head"],
+        }
+        for k, m in enumerate(D.sevenzip_members(blob, password=password))
+    ]
+
+
 def _synth_7z_blob(i: int) -> bytes:
     """One deterministic 7z from md5(doc:7z): 2-4 members (b0),
     member 0 always Copy (the corruption arm flips its first payload
@@ -946,45 +946,14 @@ def q_archive_7z_meta(spark: SparkSession, sf: str) -> DataFrame:
     # truncated headers refuse to the marker row. One Arrow pass;
     # per-blob work only, ids-only shuffle — the same 100 TB shape as
     # the rest of the document tier.
-    from hadoopxmlextractor_spark.operators import documents as D
-
     docs = load(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "member_idx", "name", "method", "size",
-                "crc_ok", "head"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_7z_blob(i)
-                try:
-                    for k, mrow in enumerate(D.sevenzip_members(blob)):
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": mrow["name"],
-                            "method": mrow["method"],
-                            "size": mrow["size"],
-                            "crc_ok": (
-                                None if mrow["crc_ok"] is None
-                                else int(mrow["crc_ok"])
-                            ),
-                            "head": mrow["head"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "member_idx": -1, "name": None,
-                        "method": None, "size": None, "crc_ok": None,
-                        "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, member_idx int, name string, "
-        "method string, size bigint, crc_ok int, head string",
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: _sevenzip_rows(_synth_7z_blob(i)),
+        SEVENZIP_SCHEMA, {"member_idx": -1},
     )
 
 
@@ -1924,47 +1893,31 @@ def q_archive_cfb_meta(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "n_streams", "main_bytes",
-                "main_head", "title", "author", "created_s"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                row = dict.fromkeys(cols)
-                row["doc_id"] = i
-                try:
-                    ms = D.cfb_members(
-                        _synth_cfb_blob(i), with_data=True
-                    )
-                    names = [m["name"] for m in ms]
-                    main = max(
-                        (m for m in ms if m["size"] is not None),
-                        key=lambda m: m["size"],
-                    )
-                    si = next(
-                        m for m in ms
-                        if m["name"] == "\x05SummaryInformation"
-                    )
-                    info = D.parse_summary_information(si["data"])
-                    row.update(
-                        kind=D.cfb_kind(names), n_streams=len(ms),
-                        main_bytes=main["size"],
-                        main_head=main["head"],
-                        title=info["title"], author=info["author"],
-                        created_s=info["created_s"],
-                    )
-                except (ValueError, IndexError, struct.error,
-                        StopIteration):
-                    pass  # marker row
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def decode(i):
+        ms = D.cfb_members(_synth_cfb_blob(i), with_data=True)
+        names = [m["name"] for m in ms]
+        main = max(
+            (m for m in ms if m["size"] is not None), key=lambda m: m["size"]
+        )
+        si = next(
+            (m for m in ms if m["name"] == "\x05SummaryInformation"), None
+        )
+        if si is None:
+            raise ValueError("no SummaryInformation stream")
+        info = D.parse_summary_information(si["data"])
+        return [{
+            "kind": D.cfb_kind(names), "n_streams": len(ms),
+            "main_bytes": main["size"], "main_head": main["head"],
+            "title": info["title"], "author": info["author"],
+            "created_s": info["created_s"],
+        }]
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, kind string, n_streams int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id", decode,
+        "doc_id bigint, kind string, n_streams int, "
         "main_bytes bigint, main_head string, title string, "
         "author string, created_s bigint",
+        {},
     )
 
 
@@ -2101,64 +2054,42 @@ def q_source_xls_cells(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(i):
         import hashlib
 
-        cols = ["doc_id", "row", "col", "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                b = hashlib.md5(f"{i}:xls".encode()).digest()
-                x = hashlib.md5(f"{i}:xls".encode()).hexdigest()
-                cells = []
-                for r in range(2 + b[0] % 3):
-                    sval = (
-                        f"w{x[4 * r : 4 * r + 4]} cell",
-                        f"中文 {x[4 * r : 4 * r + 2]}",
-                        f"plain {r}",
-                    )[(b[1] + r) % 3]
-                    cells.append((r, 0, sval))
-                    cells.append((r, 1, b[2] * 100 + r))
-                    cells.append((
-                        r, 2,
-                        -(b[3] * 10 + r) if r % 2
-                        else 1000000000000 + b[4] * 1000 + r,
-                    ))
-                blob = D.build_xls(cells)
-                if i % 11 == 10:
-                    # strip the EOF record (last 4 bytes of the BIFF
-                    # stream before the cutoff padding): corrupt the
-                    # opcode in place via parse-and-patch
-                    ms = D.cfb_members(blob, with_data=True)
-                    wb = next(
-                        m for m in ms if m["name"] == "Workbook"
-                    )
-                    eof_at = blob.index(wb["data"][:64]) + wb[
-                        "data"
-                    ].rindex(b"\x0a\x00\x00\x00")
-                    blob = (
-                        blob[:eof_at] + b"\xee\x00\x00\x00"
-                        + blob[eof_at + 4 :]
-                    )
-                try:
-                    for c in D.xls_cells(blob):
-                        rows.append({
-                            "doc_id": i, "row": c["row"],
-                            "col": c["col"], "kind": c["kind"],
-                            "value": c["value"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "row": -1, "col": None,
-                        "kind": None, "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+        b = hashlib.md5(f"{i}:xls".encode()).digest()
+        x = hashlib.md5(f"{i}:xls".encode()).hexdigest()
+        cells = []
+        for r in range(2 + b[0] % 3):
+            sval = (
+                f"w{x[4 * r : 4 * r + 4]} cell",
+                f"中文 {x[4 * r : 4 * r + 2]}",
+                f"plain {r}",
+            )[(b[1] + r) % 3]
+            cells.append((r, 0, sval))
+            cells.append((r, 1, b[2] * 100 + r))
+            cells.append((
+                r, 2,
+                -(b[3] * 10 + r) if r % 2
+                else 1000000000000 + b[4] * 1000 + r,
+            ))
+        blob = D.build_xls(cells)
+        if i % 11 == 10:
+            # strip the EOF record (last 4 bytes of the BIFF stream
+            # before the cutoff padding): corrupt the opcode in place
+            # via parse-and-patch
+            ms = D.cfb_members(blob, with_data=True)
+            wb = next(m for m in ms if m["name"] == "Workbook")
+            eof_at = blob.index(wb["data"][:64]) + wb["data"].rindex(
+                b"\x0a\x00\x00\x00"
+            )
+            blob = blob[:eof_at] + b"\xee\x00\x00\x00" + blob[eof_at + 4 :]
+        return D.xls_cells(blob)
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, row int, col int, kind string, "
-        "value string",
+    return blob_rows(
+        docs, "doc_id", "doc_id", decode,
+        "doc_id bigint, row int, col int, kind string, value string",
+        {"row": -1},
     )
 
 

@@ -33,7 +33,9 @@ import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401
 
+from hadoopxmlextractor_spark.operators.kernel import REFUSED, blob_rows, map_rows
 from hadoopxmlextractor_spark.queries import query
+from hadoopxmlextractor_spark.queries_r12 import SEVENZIP_SCHEMA, _sevenzip_rows
 from hadoopxmlextractor_spark.tables import load
 
 _MD5B = (
@@ -282,30 +284,11 @@ def q_source_xls_biff8_full(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "row", "col", "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                try:
-                    for c in D.xls_cells(_synth_xls8_blob(i)):
-                        rows.append({
-                            "doc_id": i, "row": c["row"],
-                            "col": c["col"], "kind": c["kind"],
-                            "value": c["value"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "row": -1, "col": None,
-                        "kind": None, "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, row int, col int, kind string, "
-        "value string",
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: D.xls_cells(_synth_xls8_blob(i)),
+        "doc_id bigint, row int, col int, kind string, value string",
+        {"row": -1},
     )
 
 
@@ -597,47 +580,29 @@ def q_source_xls_encrypted(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "enc_mode", "row", "col", "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_xls_encrypted_blob(i)
-                try:
-                    # mode from the blob bytes: FilePass wtype
-                    wb = next(
-                        m for m in D.cfb_members(blob, with_data=True)
-                        if m["name"] == "Workbook"
-                    )["data"]
-                    mode = None
-                    for off, op, ln in D._xls_stream_records(wb):
-                        if op == 0x002F:
-                            wt, vmaj = struct.unpack_from(
-                                "<HH", wb, off + 4
-                            )
-                            mode = (
-                                "xor" if wt == 0
-                                else "rc4" if vmaj == 1 else "capi"
-                            )
-                            break
-                    for c in D.xls_cells(blob):
-                        rows.append({
-                            "doc_id": i, "enc_mode": mode,
-                            "row": c["row"], "col": c["col"],
-                            "kind": c["kind"], "value": c["value"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "enc_mode": None, "row": -1,
-                        "col": None, "kind": None, "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def decode(i):
+        blob = _synth_xls_encrypted_blob(i)
+        # mode from the blob bytes: FilePass wtype
+        wb = next(
+            (m["data"] for m in D.cfb_members(blob, with_data=True)
+             if m["name"] == "Workbook"),
+            None,
+        )
+        if wb is None:
+            raise ValueError("no Workbook stream")
+        mode = None
+        for off, op, ln in D._xls_stream_records(wb):
+            if op == 0x002F:
+                wt, vmaj = struct.unpack_from("<HH", wb, off + 4)
+                mode = "xor" if wt == 0 else "rc4" if vmaj == 1 else "capi"
+                break
+        return [{**c, "enc_mode": mode} for c in D.xls_cells(blob)]
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, enc_mode string, row int, col int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id", decode,
+        "doc_id bigint, enc_mode string, row int, col int, "
         "kind string, value string",
+        {"row": -1},
     )
 
 
@@ -1048,28 +1013,12 @@ def q_multimodal_audio_mp1_subbands(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame", "sb", "nb", "scf", "code_sum",
-                "code_sq_sum", "dec_sum"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                try:
-                    for r in C.mp1_subband_stats(_synth_mp1_blob(i)):
-                        rows.append({"doc_id": i, **r})
-                except (ValueError, struct.error):
-                    rows.append({
-                        "doc_id": i, "frame": -1, "sb": None,
-                        "nb": None, "scf": None, "code_sum": None,
-                        "code_sq_sum": None, "dec_sum": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, frame int, sb int, nb int, scf int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: C.mp1_subband_stats(_synth_mp1_blob(i)),
+        "doc_id bigint, frame int, sb int, nb int, scf int, "
         "code_sum bigint, code_sq_sum bigint, dec_sum double",
+        {"frame": -1},
     )
 
 
@@ -1505,33 +1454,12 @@ def q_source_xls_multisheet(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sheet", "sheet_name", "row", "col", "kind",
-                "value"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                try:
-                    for c in D.xls_cells(_synth_xls_multisheet_blob(i)):
-                        rows.append({
-                            "doc_id": i, "sheet": c["sheet"],
-                            "sheet_name": c["sheet_name"],
-                            "row": c["row"], "col": c["col"],
-                            "kind": c["kind"], "value": c["value"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "sheet": -1, "sheet_name": None,
-                        "row": None, "col": None, "kind": None,
-                        "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, sheet int, sheet_name string, row int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: D.xls_cells(_synth_xls_multisheet_blob(i)),
+        "doc_id bigint, sheet int, sheet_name string, row int, "
         "col int, kind string, value string",
+        {"sheet": -1},
     )
 
 
@@ -1854,45 +1782,14 @@ def q_archive_7z_encoded(spark: SparkSession, sf: str) -> DataFrame:
     # 13th doc flips a byte INSIDE the packed header — the decode/CRC
     # refusal arm (corrupt LZMA refuses as ValueError, never a
     # garbage directory). One Arrow pass, ids-only shuffle.
-    from hadoopxmlextractor_spark.operators import documents as D
-
     docs = load(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "member_idx", "name", "method", "size",
-                "crc_ok", "head"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_7z_encoded_blob(i)
-                try:
-                    for k, mrow in enumerate(D.sevenzip_members(blob)):
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": mrow["name"],
-                            "method": mrow["method"],
-                            "size": mrow["size"],
-                            "crc_ok": (
-                                None if mrow["crc_ok"] is None
-                                else int(mrow["crc_ok"])
-                            ),
-                            "head": mrow["head"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "member_idx": -1, "name": None,
-                        "method": None, "size": None, "crc_ok": None,
-                        "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, member_idx int, name string, "
-        "method string, size bigint, crc_ok int, head string",
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: _sevenzip_rows(_synth_7z_encoded_blob(i)),
+        SEVENZIP_SCHEMA, {"member_idx": -1},
     )
 
 
@@ -2004,38 +1901,27 @@ def q_archive_zip_encrypted(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "member_idx", "name", "enc", "ok", "size",
-                "head"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_zip_encrypted_blob(i)
-                for k, e in enumerate(D.zip_member_list(blob)):
-                    enc = int(bool(e["flags"] & 1))
-                    try:
-                        data = D.zip_read_member(
-                            blob, e, "infected" if enc else None
-                        )
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": e["name"], "enc": enc, "ok": 1,
-                            "size": len(data),
-                            "head": data[:16].decode("utf-8",
-                                                      "replace"),
-                        })
-                    except ValueError:
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": e["name"], "enc": enc, "ok": 0,
-                            "size": None, "head": None,
-                        })
-            yield pd.DataFrame(rows, columns=cols)
+    def member_rows(i):
+        # per-member salvage: a member that refuses is a data row
+        # (ok 0); the archive itself is never refused
+        blob = _synth_zip_encrypted_blob(i)
+        rows = []
+        for k, e in enumerate(D.zip_member_list(blob)):
+            enc = int(bool(e["flags"] & 1))
+            try:
+                data = D.zip_read_member(blob, e, "infected" if enc else None)
+            except ValueError:
+                rows.append((i, k, e["name"], enc, 0, None, None))
+                continue
+            rows.append((
+                i, k, e["name"], enc, 1, len(data),
+                data[:16].decode("utf-8", "replace"),
+            ))
+        return rows
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, member_idx int, name string, enc int, "
+    return map_rows(
+        docs, ["doc_id"], member_rows,
+        "doc_id bigint, member_idx int, name string, enc int, "
         "ok int, size bigint, head string",
     )
 
@@ -2137,50 +2023,33 @@ def q_archive_cfb_properties(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sector", "codepage", "title", "author",
-                "created_s", "category", "manager", "company"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_cfb_props_blob(i)
-                (shift,) = struct.unpack_from("<H", blob, 30)
-                sector = 1 << shift
-                try:
-                    ms = {
-                        m["name"]: m["data"]
-                        for m in D.cfb_members(blob, with_data=True)
-                    }
-                    cp, props = D.parse_property_set(
-                        ms["\x05SummaryInformation"]
-                    )
-                    dsi = D.parse_doc_summary_information(
-                        ms["\x05DocumentSummaryInformation"]
-                    )
-                    rows.append({
-                        "doc_id": i, "sector": sector,
-                        "codepage": cp, "title": props.get(0x02),
-                        "author": props.get(0x04),
-                        "created_s": props.get(0x0C),
-                        "category": dsi["category"],
-                        "manager": dsi["manager"],
-                        "company": dsi["company"],
-                    })
-                except (ValueError, IndexError, struct.error,
-                        KeyError):
-                    rows.append({
-                        "doc_id": i, "sector": sector,
-                        "codepage": None, "title": None,
-                        "author": None, "created_s": None,
-                        "category": None, "manager": None,
-                        "company": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def props_rows(i):
+        # the marker row keeps the sector size read from the header
+        # before the property walk refuses, so it cannot be a
+        # blob_rows constant marker
+        blob = _synth_cfb_props_blob(i)
+        (shift,) = struct.unpack_from("<H", blob, 30)
+        sector = 1 << shift
+        try:
+            ms = {
+                m["name"]: m["data"]
+                for m in D.cfb_members(blob, with_data=True)
+            }
+            cp, props = D.parse_property_set(ms["\x05SummaryInformation"])
+            dsi = D.parse_doc_summary_information(
+                ms["\x05DocumentSummaryInformation"]
+            )
+        except REFUSED:
+            return [(i, sector, *[None] * 7)]
+        return [(
+            i, sector, cp, props.get(0x02), props.get(0x04),
+            props.get(0x0C), dsi["category"], dsi["manager"],
+            dsi["company"],
+        )]
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, sector int, codepage int, "
+    return map_rows(
+        docs, ["doc_id"], props_rows,
+        "doc_id bigint, sector int, codepage int, "
         "title string, author string, created_s bigint, "
         "category string, manager string, company string",
     )
@@ -2394,85 +2263,64 @@ def q_pipeline_protected_documents(
         spark.sparkContext.defaultParallelism
     )
 
-    def _prep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in batches:
-            ids, blobs = [], []
-            for i in pdf_["doc_id"]:
-                i = int(i)
-                arm = i % 5
-                bad = i % 9 == 8
-                if arm == 0:
-                    outer = D.build_ooxml_encrypted(
-                        D._synth_docx_blob(i),
-                        "realpw" if bad else D._OFFICE_DEFAULT_PW,
-                        agile=True, spin=400,
-                        salt_seed=f"{i}:prot".encode(),
-                    )
-                elif arm == 1:
-                    outer = _synth_pdf_aesv3_blob(
-                        i, user_pw=b"secret" if bad else b""
-                    )
-                elif arm == 2:
-                    outer = _synth_doc_encrypted_blob(i)
-                elif arm == 3:
-                    outer = D.build_zip(
-                        [("inner.docx", D._synth_docx_blob(i), 8,
-                          False)],
-                        passwords={
-                            "inner.docx":
-                            "realpw" if bad else "infected"
-                        },
-                    )
-                else:
-                    # r14: 7z AES-256 member wrapping a .docx — the
-                    # archive_7z_encrypted machinery routed into the
-                    # same document_text dispatch
-                    outer = D.build_7z(
-                        [("inner.docx", D._synth_docx_blob(i),
-                          "aes+lzma")],
-                        passwords={
-                            "inner.docx":
-                            "realpw" if bad else "infected"
-                        },
-                        aes_cycles=6,
-                    )
-                # container parsed from the OUTER bytes
-                if outer.startswith(b"%PDF-"):
-                    code, routable = 1, outer
-                elif outer.startswith(b"7z\xbc\xaf\x27\x1c"):
-                    code = 4
-                    try:
-                        (m,) = D.sevenzip_members(
-                            outer, with_data=True, password="infected"
-                        )
-                        routable = (
-                            m["data"] if m["crc_ok"] else b""
-                        ) or b""
-                    except ValueError:
-                        routable = b""
-                elif outer.startswith(b"PK\x03\x04"):
-                    code = 3
-                    try:
-                        (e,) = D.zip_member_list(outer)
-                        routable = D.zip_read_member(
-                            outer, e, "infected"
-                        )
-                    except ValueError:
-                        routable = b""
-                else:
-                    names = [
-                        m["name"] for m in D.cfb_members(outer)
-                    ]
-                    code = 0 if "EncryptedPackage" in names else 2
-                    routable = outer
-                ids.append(i * 10 + code)
-                blobs.append(routable)
-            yield pd.DataFrame(
-                {"doc_id": ids, "content": blobs}
+    def prep_rows(i):
+        arm = i % 5
+        bad = i % 9 == 8
+        if arm == 0:
+            outer = D.build_ooxml_encrypted(
+                D._synth_docx_blob(i),
+                "realpw" if bad else D._OFFICE_DEFAULT_PW,
+                agile=True, spin=400,
+                salt_seed=f"{i}:prot".encode(),
             )
+        elif arm == 1:
+            outer = _synth_pdf_aesv3_blob(
+                i, user_pw=b"secret" if bad else b""
+            )
+        elif arm == 2:
+            outer = _synth_doc_encrypted_blob(i)
+        elif arm == 3:
+            outer = D.build_zip(
+                [("inner.docx", D._synth_docx_blob(i), 8, False)],
+                passwords={"inner.docx": "realpw" if bad else "infected"},
+            )
+        else:
+            # a 7z AES-256 member wrapping a .docx — the
+            # archive_7z_encrypted machinery routed into the same
+            # document_text dispatch
+            outer = D.build_7z(
+                [("inner.docx", D._synth_docx_blob(i), "aes+lzma")],
+                passwords={"inner.docx": "realpw" if bad else "infected"},
+                aes_cycles=6,
+            )
+        # container parsed from the OUTER bytes; an archive member that
+        # refuses routes b"" on, which document_text marks
+        if outer.startswith(b"%PDF-"):
+            code, routable = 1, outer
+        elif outer.startswith(b"7z\xbc\xaf\x27\x1c"):
+            code = 4
+            try:
+                (m,) = D.sevenzip_members(
+                    outer, with_data=True, password="infected"
+                )
+                routable = (m["data"] if m["crc_ok"] else b"") or b""
+            except ValueError:
+                routable = b""
+        elif outer.startswith(b"PK\x03\x04"):
+            code = 3
+            try:
+                (e,) = D.zip_member_list(outer)
+                routable = D.zip_read_member(outer, e, "infected")
+            except ValueError:
+                routable = b""
+        else:
+            names = [m["name"] for m in D.cfb_members(outer)]
+            code = 0 if "EncryptedPackage" in names else 2
+            routable = outer
+        return [(i * 10 + code, routable)]
 
-    prepped = docs.select("doc_id").mapInPandas(
-        _prep, schema="doc_id bigint, content binary"
+    prepped = map_rows(
+        docs, ["doc_id"], prep_rows, "doc_id bigint, content binary"
     )
     ex = D.document_text(prepped)
     names = F.array(F.lit("ooxml"), F.lit("pdf"), F.lit("doc"),

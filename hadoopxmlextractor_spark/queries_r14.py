@@ -21,14 +21,11 @@ modules)."""
 
 from __future__ import annotations
 
-import struct  # noqa: F401
-from typing import Iterator  # noqa: F401  (pandas_udf string annotations)
-
-import pandas as pd  # noqa: F401  (pandas_udf string annotations)
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401
 
+from hadoopxmlextractor_spark.operators.kernel import blob_rows
 from hadoopxmlextractor_spark.queries import query
+from hadoopxmlextractor_spark.queries_r12 import SEVENZIP_SCHEMA, _sevenzip_rows
 from hadoopxmlextractor_spark.tables import load
 
 _MD5B = (
@@ -166,47 +163,16 @@ def q_archive_7z_encrypted(spark: SparkSession, sf: str) -> DataFrame:
     # is never encrypted in this layout, so the member surface still
     # reports) and the kernel refuses to surface unverified
     # plaintext (head NULL). One Arrow pass, ids-only shuffle.
-    from hadoopxmlextractor_spark.operators import documents as D
-
     docs = load(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "member_idx", "name", "method", "size",
-                "crc_ok", "head"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_7z_aes_blob(i)
-                try:
-                    for k, mrow in enumerate(
-                        D.sevenzip_members(blob, password="infected")
-                    ):
-                        ok = mrow["crc_ok"]
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": mrow["name"],
-                            "method": mrow["method"],
-                            "size": mrow["size"],
-                            "crc_ok": None if ok is None else int(ok),
-                            "head": (
-                                None if ok is False else mrow["head"]
-                            ),
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "member_idx": -1, "name": None,
-                        "method": None, "size": None, "crc_ok": None,
-                        "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, member_idx int, name string, "
-        "method string, size bigint, crc_ok int, head string",
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: _sevenzip_rows(
+            _synth_7z_aes_blob(i), password="infected", verified_head=True
+        ),
+        SEVENZIP_SCHEMA, {"member_idx": -1},
     )
 
 
@@ -329,34 +295,12 @@ def q_source_xls_biff5(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sheet", "sheet_name", "row", "col",
-                "kind", "value"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_xls5_blob(i)
-                try:
-                    for c in D.xls_cells(blob):
-                        rows.append({
-                            "doc_id": i, "sheet": c["sheet"],
-                            "sheet_name": c["sheet_name"],
-                            "row": c["row"], "col": c["col"],
-                            "kind": c["kind"], "value": c["value"],
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "sheet": -1, "sheet_name": None,
-                        "row": None, "col": None, "kind": None,
-                        "value": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, sheet int, sheet_name string, "
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: D.xls_cells(_synth_xls5_blob(i)),
+        "doc_id bigint, sheet int, sheet_name string, "
         "row int, col int, kind string, value string",
+        {"sheet": -1},
     )
 
 
@@ -594,32 +538,13 @@ def q_multimodal_audio_mp2_subbands(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame", "sb", "steps", "grouped", "scfsi",
-                "sf0", "sf1", "sf2", "code_sum", "code_sq_sum",
-                "dec_sum"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                try:
-                    for r in C.mp2_subband_stats(_synth_mp2_blob(i)):
-                        rows.append({"doc_id": i, **r})
-                except (ValueError, struct.error):
-                    rows.append({
-                        "doc_id": i, "frame": -1, "sb": None,
-                        "steps": None, "grouped": None, "scfsi": None,
-                        "sf0": None, "sf1": None, "sf2": None,
-                        "code_sum": None, "code_sq_sum": None,
-                        "dec_sum": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, frame int, sb int, steps int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: C.mp2_subband_stats(_synth_mp2_blob(i)),
+        "doc_id bigint, frame int, sb int, steps int, "
         "grouped int, scfsi int, sf0 int, sf1 int, sf2 int, "
         "code_sum bigint, code_sq_sum bigint, dec_sum double",
+        {"frame": -1},
     )
 
 
@@ -855,32 +780,13 @@ def q_multimodal_audio_mp3_spectral(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame", "gr", "short", "sfb", "win",
-                "scalefac", "exp", "n_nonzero", "pmn", "dec_sum",
-                "dec_abs"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                try:
-                    for r in M.mp3_spectral_stats(_synth_mp3_blob(i)):
-                        rows.append({"doc_id": i, **r})
-                except (ValueError, struct.error):
-                    rows.append({
-                        "doc_id": i, "frame": -1, "gr": None,
-                        "short": None, "sfb": None, "win": None,
-                        "scalefac": None, "exp": None,
-                        "n_nonzero": None, "pmn": None,
-                        "dec_sum": None, "dec_abs": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, frame int, gr int, short int, "
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: M.mp3_spectral_stats(_synth_mp3_blob(i)),
+        "doc_id bigint, frame int, gr int, short int, "
         "sfb int, win int, scalefac int, exp int, n_nonzero int, "
         "pmn int, dec_sum double, dec_abs double",
+        {"frame": -1},
     )
 
 
@@ -963,47 +869,16 @@ def q_archive_7z_solid(spark: SparkSession, sf: str) -> DataFrame:
     # per-folder crc_ok=0 verdict while the surface (names, sizes,
     # method) still reports from the never-encrypted header. One
     # Arrow pass, ids-only shuffle.
-    from hadoopxmlextractor_spark.operators import documents as D
-
     docs = load(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "member_idx", "name", "method", "size",
-                "crc_ok", "head"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = _synth_7z_solid_blob(i)
-                try:
-                    for k, mrow in enumerate(
-                        D.sevenzip_members(blob, password="infected")
-                    ):
-                        ok = mrow["crc_ok"]
-                        rows.append({
-                            "doc_id": i, "member_idx": k,
-                            "name": mrow["name"],
-                            "method": mrow["method"],
-                            "size": mrow["size"],
-                            "crc_ok": None if ok is None else int(ok),
-                            "head": (
-                                None if ok is False else mrow["head"]
-                            ),
-                        })
-                except (ValueError, IndexError, struct.error):
-                    rows.append({
-                        "doc_id": i, "member_idx": -1, "name": None,
-                        "method": None, "size": None, "crc_ok": None,
-                        "head": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, member_idx int, name string, "
-        "method string, size bigint, crc_ok int, head string",
+    return blob_rows(
+        docs, "doc_id", "doc_id",
+        lambda i: _sevenzip_rows(
+            _synth_7z_solid_blob(i), password="infected", verified_head=True
+        ),
+        SEVENZIP_SCHEMA, {"member_idx": -1},
     )
 
 
@@ -1136,43 +1011,19 @@ def q_multimodal_audio_mp3_lsf(
         spark.sparkContext.defaultParallelism
     )
 
-    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "frame", "branch", "sfb", "scalefac",
-                "exp", "n_nonzero", "pmn", "dec_sum", "dec_abs"]
-        for pdf in batches:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                b2 = __import__("hashlib").md5(
-                    f"{i}:mp3lsf".encode()
-                ).digest()[2]
-                try:
-                    for r in M.mp3_spectral_stats(
-                        _synth_mp3_lsf_blob(i)
-                    ):
-                        rows.append({
-                            "doc_id": i, "frame": r["frame"],
-                            "branch": (b2 + r["frame"]) % 3,
-                            "sfb": r["sfb"],
-                            "scalefac": r["scalefac"],
-                            "exp": r["exp"],
-                            "n_nonzero": r["n_nonzero"],
-                            "pmn": r["pmn"],
-                            "dec_sum": r["dec_sum"],
-                            "dec_abs": r["dec_abs"],
-                        })
-                except (ValueError, struct.error):
-                    rows.append({
-                        "doc_id": i, "frame": -1, "branch": None,
-                        "sfb": None, "scalefac": None, "exp": None,
-                        "n_nonzero": None, "pmn": None,
-                        "dec_sum": None, "dec_abs": None,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def decode(i):
+        import hashlib
 
-    return docs.select("doc_id").mapInPandas(
-        _rows,
-        schema="doc_id bigint, frame int, branch int, sfb int, "
+        b2 = hashlib.md5(f"{i}:mp3lsf".encode()).digest()[2]
+        return [
+            {**r, "branch": (b2 + r["frame"]) % 3}
+            for r in M.mp3_spectral_stats(_synth_mp3_lsf_blob(i))
+        ]
+
+    return blob_rows(
+        docs, "doc_id", "doc_id", decode,
+        "doc_id bigint, frame int, branch int, sfb int, "
         "scalefac int, exp int, n_nonzero int, pmn int, "
         "dec_sum double, dec_abs double",
+        {"frame": -1},
     )

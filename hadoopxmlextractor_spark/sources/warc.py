@@ -415,13 +415,6 @@ def warc_split_index(
     )
 
 
-def _records_rows(path: str, blob: bytes, base_idx: int) -> list[dict]:
-    try:
-        return [{"path": path, **r} for r in iter_warc_records(blob, base_idx=base_idx)]
-    except REFUSED:
-        return [{**dict.fromkeys(_RECORD_COLUMNS), "path": path, "rec_idx": -1}]
-
-
 _RECORD_COLUMNS = [
     "path", "rec_idx", "warc_type", "record_id", "target_uri",
     "warc_date", "content_type", "content_length", "payload",
@@ -438,23 +431,13 @@ def warc_records_ranged(splits: DataFrame, content_col: str = "content") -> Data
     file read in :func:`read_warc_split` (same slice+parse kernel) —
     usable wherever the bytes are already a column."""
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, blob, off, ln, first in zip(
-                pdf["path"], pdf[content_col], pdf["offset"],
-                pdf["length"], pdf["first_rec"],
-            ):
-                rows.extend(
-                    _records_rows(
-                        path, bytes(blob)[int(off) : int(off) + int(ln)], int(first)
-                    )
-                )
-            yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
-
-    return splits.select(
-        "path", content_col, "offset", "length", "first_rec"
-    ).mapInPandas(_parse, schema=RECORD_SCHEMA)
+    return blob_rows(
+        splits, "path", [content_col, "offset", "length", "first_rec"],
+        lambda blob, off, ln, first: iter_warc_records(
+            bytes(blob)[off : off + ln], base_idx=first
+        ),
+        RECORD_SCHEMA, {"rec_idx": -1},
+    )
 
 
 def read_warc_split(
@@ -474,52 +457,22 @@ def read_warc_split(
     files = spark.read.format("binaryFile").load(path).select("path")
     n_parts = spark.sparkContext.defaultParallelism
 
-    def _index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                try:
-                    for s in split_warc_file(
-                        _local_path(p), target_bytes=target_bytes
-                    ):
-                        rows.append({"path": p, **s})
-                except (ValueError, IndexError, zlib.error, OSError):
-                    rows.append(
-                        {
-                            "path": p, "split_idx": -1, "offset": None,
-                            "length": None, "first_rec": None,
-                            "n_recs": None, "n_members": None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "split_idx", "offset", "length",
-                    "first_rec", "n_recs", "n_members",
-                ],
-            )
+    splits = blob_rows(
+        files.repartition(n_parts), "path", "path",
+        lambda p: split_warc_file(_local_path(p), target_bytes=target_bytes),
+        SPLIT_SCHEMA, {"split_idx": -1},
+    ).filter(F.col("split_idx") >= 0)
 
-    splits = (
-        files.repartition(n_parts)
-        .mapInPandas(_index, schema=SPLIT_SCHEMA)
-        .filter(F.col("split_idx") >= 0)
-    )
+    def read_range(path, off, ln, first):
+        with open(_local_path(path), "rb") as f:
+            f.seek(off)
+            blob = f.read(ln)
+        return iter_warc_records(blob, base_idx=first)
 
-    def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, off, ln, first in zip(
-                pdf["path"], pdf["offset"], pdf["length"], pdf["first_rec"]
-            ):
-                with open(_local_path(path), "rb") as f:
-                    f.seek(int(off))
-                    blob = f.read(int(ln))
-                rows.extend(_records_rows(path, blob, int(first)))
-            yield pd.DataFrame(rows, columns=_RECORD_COLUMNS)
-
-    return (
-        splits.repartition(n_parts, "path", "split_idx")
-        .mapInPandas(_read, schema=RECORD_SCHEMA)
+    return blob_rows(
+        splits.repartition(n_parts, "path", "split_idx"), "path",
+        ["path", "offset", "length", "first_rec"], read_range,
+        RECORD_SCHEMA, {"rec_idx": -1},
     )
 
 

@@ -811,14 +811,24 @@ def normalize_for_jvm(expr: str) -> str:
 def _walk_texts(el: Element):
     """Yield (owner element, text) for every text node in document
     order — ``el.text`` is owned by ``el``; a child's ``tail`` is a
-    text node of the PARENT in the XPath data model."""
+    text node of the PARENT in the XPath data model. An explicit stack,
+    so nesting depth is bounded by memory, not the recursion limit."""
     if el.text:
         yield (el, el.text)
-    for c in el:
-        if isinstance(c.tag, str):
-            yield from _walk_texts(c)
-        if c.tail:
-            yield (el, c.tail)
+    stack = [(el, iter(el))]
+    while stack:
+        parent, kids = stack[-1]
+        c = next(kids, None)
+        if c is None:
+            stack.pop()
+            if stack and parent.tail:
+                yield (stack[-1][0], parent.tail)
+        elif isinstance(c.tag, str):
+            if c.text:
+                yield (c, c.text)
+            stack.append((c, iter(c)))
+        elif c.tail:
+            yield (parent, c.tail)
 
 
 def _get_attr_local(n: Element, attr: str) -> str | None:
@@ -1343,28 +1353,42 @@ def compile_subset(expr: str) -> Callable[[Element], str | None] | None:
                             text_pick.add((oid, want))
         values: list[str] = []
 
-        def walk(el: Element) -> None:
+        def opened(el: Element) -> list:
+            """Emit ``el``'s selected attributes and leading text; the
+            walk's frame: element, child iterator, text-node count."""
             sel = attr_sel.get(id(el))
             if sel:
                 # name-sorted within the element (NamedNodeMap order)
                 for k in sorted(el.attrib):
                     if k in sel:
                         values.append(el.attrib[k])
-            oid = id(el)
             tidx = 0
             if el.text:
                 tidx = 1
-                if oid in text_all or (oid, 1) in text_pick:
+                if id(el) in text_all or (id(el), 1) in text_pick:
                     values.append(el.text)
-            for c in el:
-                if isinstance(c.tag, str):
-                    walk(c)
-                if c.tail:
-                    tidx += 1
-                    if oid in text_all or (oid, tidx) in text_pick:
-                        values.append(c.tail)
+            return [el, iter(el), tidx]
 
-        walk(root)
+        def tail(frame: list, c: Element) -> None:
+            if c.tail:
+                frame[2] += 1
+                oid = id(frame[0])
+                if oid in text_all or (oid, frame[2]) in text_pick:
+                    values.append(c.tail)
+
+        # document order with an explicit stack (no recursion limit)
+        stack = [opened(root)]
+        while stack:
+            frame = stack[-1]
+            c = next(frame[1], None)
+            if c is None:
+                stack.pop()
+                if stack:
+                    tail(stack[-1], frame[0])
+            elif isinstance(c.tag, str):
+                stack.append(opened(c))
+            else:
+                tail(frame, c)
         if not values:
             return None
         return "".join(values)

@@ -179,3 +179,29 @@ def test_malformed_count_on_bench_corpus(spark):
     assert malformed_fragments(docs, config).count() == 100
     # the fused path drops the same 100 books: one row per other book
     assert extract(docs, config, fused=True).count() == 9_900
+
+
+# --- depth --------------------------------------------------------------------
+
+
+def test_deep_document_gives_the_same_rows_on_both_paths(spark):
+    """A fragment nested 100,000 deep: the fused evaluators walk with
+    explicit stacks, so the fused path answers as the JVM path does
+    instead of failing the job with ``RecursionError``."""
+    from hadoopxmlextractor_spark.extract import extract
+    from hadoopxmlextractor_spark.sources import docs_from_strings
+
+    depth = 100_000
+    rule = ExtractionConfig.parse_rule("r", "r;false;true; ;0#//b/@id;1#/r/c/text();", ";", "#")
+    config = ExtractionConfig(rules=(rule,), nr_of_columns=2)
+    docs = docs_from_strings(
+        spark,
+        {
+            "good.xml": '<r><c>good</c><b id="g"/></r>',
+            "deep.xml": '<r><c>t<b id="k">' + '<b id="k">' * (depth - 1) + "</b>" * depth + "</c></r>",
+        },
+    )
+    fused = sorted(map(tuple, extract(docs, config, fused=True).collect()))
+    general = sorted(map(tuple, extract(docs, config, fused=False).collect()))
+    assert fused == general
+    assert [(d, len(b), c) for d, _, b, c in fused] == [("deep.xml", depth, "t"), ("good.xml", 1, "good")]

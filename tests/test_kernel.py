@@ -1,8 +1,9 @@
-"""The per-blob kernel adaptor (operators/kernel.py): its batch loop
-driven with plain pandas frames — one marker row per refused blob,
-non-refusals propagate, all-or-marker, DDL column order — one Spark
-case, and a guard that keeps hand-rolled per-blob loops from coming
-back into the migrated modules."""
+"""The row adaptor (operators/kernel.py): its batch loop driven with
+plain Arrow record batches — one marker row per refused blob,
+non-refusals propagate, all-or-marker, schema column order, one batch
+out per batch in, the safe integer conversion — two Spark cases, and a
+guard that keeps hand-rolled batch loops from coming back anywhere in
+the package."""
 
 from __future__ import annotations
 
@@ -11,29 +12,42 @@ import os
 import re
 import struct
 import zlib
+from decimal import Decimal
 from xml.etree import ElementTree
 
-import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DecimalType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from hadoopxmlextractor_spark.operators.kernel import (
     REFUSED,
-    _blob_batches,
-    _ddl_names,
+    _map_batches,
+    _refusing,
 )
 
-_SCHEMA = "doc_id bigint, item_idx int, kind string, n decimal(10,2)"
+_STRUCT = StructType([
+    StructField("doc_id", LongType()), StructField("item_idx", IntegerType()),
+    StructField("kind", StringType()), StructField("n", DecimalType(10, 2)),
+])
 _COLS = ["doc_id", "item_idx", "kind", "n"]
 
 
 def _run(decode, blobs, marker=None):
-    pdf = pd.DataFrame({"key": list(range(len(blobs))), "blob": blobs})
-    frames = list(_blob_batches(
-        iter([pdf]), "key", "blob", decode, _COLS,
-        {"item_idx": -1} if marker is None else marker,
-    ))
-    assert len(frames) == 1
-    return frames[0]
+    batch = pa.RecordBatch.from_pydict({"key": list(range(len(blobs))), "blob": blobs})
+    rows_of = _refusing(
+        decode, _STRUCT.names, {"item_idx": -1} if marker is None else marker
+    )
+    out = list(_map_batches(iter([batch]), [0, 1], rows_of, to_arrow_schema(_STRUCT)))
+    assert len(out) == 1
+    return out[0].to_pylist()
 
 
 def _raiser(exc):
@@ -44,14 +58,37 @@ def _raiser(exc):
     return decode
 
 
-def test_ddl_names_follow_schema_order():
-    assert _ddl_names(_SCHEMA) == _COLS
-    assert _ddl_names("path string, m map<string,int>, x double") == [
-        "path", "m", "x",
+def test_rows_follow_schema_order():
+    out = _run(lambda b: [{"n": 2, "kind": "k", "item_idx": 7, "extra": 1}], [b"x"])
+    assert out == [{"doc_id": 0, "item_idx": 7, "kind": "k", "n": Decimal("2.00")}]
+
+
+def test_one_batch_out_per_batch_in():
+    schema = to_arrow_schema(StructType([StructField("x", LongType())]))
+    batches = [pa.RecordBatch.from_pydict({"v": [1, 2]}), pa.RecordBatch.from_pydict({"v": [3]}),
+               pa.RecordBatch.from_pydict({"v": pa.array([], pa.int64())})]
+    out = list(_map_batches(iter(batches), [0], lambda v: [(v,)] * v, schema))
+    assert [b.to_pylist() for b in out] == [
+        [{"x": 1}, {"x": 2}, {"x": 2}], [{"x": 3}] * 3, [],
     ]
-    out = _run(lambda b: [{"n": 2, "kind": "k", "item_idx": 7}], [b"x"])
-    assert list(out.columns) == _COLS
-    assert out.iloc[0].tolist() == [0, 7, "k", 2]
+    assert all(b.schema == schema for b in out)
+
+
+def test_integer_columns_refuse_a_fraction():
+    """``pa.array([1.5], type=pa.int64())`` reads 1: the adaptor's safe
+    cast raises there instead, and still takes 1.0 and a bool."""
+    schema = to_arrow_schema(StructType([StructField("i", IntegerType())]))
+    batch = pa.RecordBatch.from_pydict({"v": [0]})
+
+    def run(value):
+        return list(_map_batches(iter([batch]), [0], lambda _: [(value,)], schema))
+
+    with pytest.raises(pa.ArrowInvalid):
+        run(1.5)
+    with pytest.raises(pa.ArrowInvalid):
+        run(2**40)
+    assert run(1.0)[0].to_pylist() == [{"i": 1}]
+    assert run(True)[0].to_pylist() == [{"i": 1}]
 
 
 @pytest.mark.parametrize("exc", [
@@ -63,18 +100,15 @@ def test_ddl_names_follow_schema_order():
 def test_each_refused_exception_is_one_marker_row(exc):
     assert isinstance(exc, REFUSED)
     out = _run(_raiser(exc), [b"good", b"bad", b"good"])
-    assert out["doc_id"].tolist() == [0, 1, 2]
-    marker = out.iloc[1]
-    assert marker["doc_id"] == 1 and marker["item_idx"] == -1
-    assert marker[["kind", "n"]].isna().all()
-    assert out.iloc[0]["kind"] == "ok" and out.iloc[2]["kind"] == "ok"
+    assert [r["doc_id"] for r in out] == [0, 1, 2]
+    assert out[1] == {"doc_id": 1, "item_idx": -1, "kind": None, "n": None}
+    assert out[0]["kind"] == "ok" and out[2]["kind"] == "ok"
 
 
 def test_marker_fields_are_set_and_the_rest_null():
     out = _run(_raiser(ValueError("no tables")), [b"bad"],
                marker={"item_idx": -1, "kind": "none"})
-    assert out.iloc[0].tolist()[:3] == [0, -1, "none"]
-    assert pd.isna(out.iloc[0]["n"])
+    assert out == [{"doc_id": 0, "item_idx": -1, "kind": "none", "n": None}]
 
 
 @pytest.mark.parametrize("exc", [RuntimeError("bug"), MemoryError()])
@@ -98,8 +132,7 @@ def test_decode_failing_after_rows_yields_only_the_marker():
 
     for decode in (listing, streaming):
         out = _run(decode, [b"bad", b"good"])
-        assert out["doc_id"].tolist() == [0, 1]
-        assert out["item_idx"].tolist() == [-1, 0]
+        assert [(r["doc_id"], r["item_idx"]) for r in out] == [(0, -1), (1, 0)]
 
 
 def test_null_blob_reaches_decode():
@@ -111,7 +144,28 @@ def test_null_blob_reaches_decode():
 
     out = _run(decode, [None, b"x"])
     assert seen == [None, b"x"]
-    assert out["doc_id"].tolist() == [1]
+    assert [r["doc_id"] for r in out] == [1]
+
+
+def test_blob_rows_takes_several_columns_and_the_key_itself(spark):
+    """``blob_cols`` may name the key and more than one column; the
+    output keeps the schema's types and the marker's fields."""
+    from hadoopxmlextractor_spark.operators.kernel import blob_rows
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "bb"), (3, None)], "k long, s string"
+    )
+
+    def decode(k, s, k2):
+        assert k == k2
+        return [{"i": j, "s": s * k} for j in range(len(s))]
+
+    out = blob_rows(df, "k", ["k", "s", "k"], decode,
+                    "k bigint, i int, s string", {"i": -1})
+    assert out.dtypes == [("k", "bigint"), ("i", "int"), ("s", "string")]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 0, "a"), (2, 0, "bbbb"), (2, 1, "bbbb"), (3, -1, None),
+    ]
 
 
 def test_mbox_unknown_charset_subject_is_a_marker_row(spark):
@@ -135,42 +189,94 @@ def test_mbox_unknown_charset_subject_is_a_marker_row(spark):
     assert rows == [(1, -1, None), (2, 0, "b@example.com")]
 
 
-_MIGRATED = (
-    "operators/documents.py", "operators/multimodal.py",
-    "operators/containers.py", "sources/warc.py", "sources/sitemap.py",
-    "queries_r10.py", "queries_r11.py",
-)
+# Loops that keep a catch of their own, each with the reason it cannot
+# sit on blob_rows' all-or-marker contract.
+_OWN_LOOPS = {
+    # streams chunk-sized frames mid-file and salvages the records
+    # parsed before a fault, then the file's marker
+    "sources/warc.py:_record_frames",
+    # per-member salvage: a member that refuses is a data row (ok 0)
+    # and the archive is never refused
+    "queries_r13.py:q_archive_zip_encrypted.member_rows",
+    # the marker row keeps the sector size read from the header before
+    # the property walk refuses
+    "queries_r13.py:q_archive_cfb_properties.props_rows",
+    # an archive member that refuses routes empty bytes on to
+    # document_text, which marks it
+    "queries_r13.py:q_pipeline_protected_documents.prep_rows",
+    # the audit stream: a fragment's parse error IS its output row
+    "extract.py:malformed_fragments.error_rows",
+}
 
-# Batch loops whose contract is not all-or-marker, so they cannot sit
-# on blob_rows: warc_records streams chunk-sized frames mid-file and
-# salvages the records parsed before a fault.
-_OWN_LOOPS = {"sources/warc.py:_record_frames"}
+
+def _batch_loops(tree: ast.AST):
+    """(qualified name, def) of every batch-loop body in a module: a
+    function taking ``batches`` or an ``Iterator`` of frames or record
+    batches, and every named function handed to ``map_rows`` as its
+    per-row body."""
+    defs: dict[str, list] = {}
+
+    def visit(node, prefix):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                qual = f"{prefix}{child.name}"
+                defs.setdefault(child.name, []).append((qual, child))
+                visit(child, qual + ".")
+            else:
+                visit(child, prefix)
+
+    visit(tree, "")
+    rows_of = {
+        arg.id
+        for call in ast.walk(tree)
+        if isinstance(call, ast.Call)
+        and getattr(call.func, "id", getattr(call.func, "attr", None)) == "map_rows"
+        for arg in call.args[2:3] + [k.value for k in call.keywords if k.arg == "rows_of"]
+        if isinstance(arg, ast.Name)
+    }
+    for name, found in defs.items():
+        for qual, fn in found:
+            params = fn.args.args
+            takes_batches = any(
+                a.arg == "batches"
+                or (a.annotation is not None
+                    and re.match(r"Iterator\[.*(DataFrame|RecordBatch)",
+                                 ast.unparse(a.annotation)))
+                for a in params
+            )
+            if takes_batches or name in rows_of:
+                yield qual, fn
 
 
-def test_no_hand_rolled_per_blob_loops_in_migrated_modules():
-    """A mapInPandas body that zips pdf columns AND catches exceptions
-    is a hand-rolled per-blob kernel: it belongs on kernel.blob_rows."""
+def test_no_hand_rolled_batch_loops_catch_exceptions():
+    """A batch-loop body that catches an exception is a hand-rolled
+    per-blob kernel: it belongs on kernel.blob_rows, whose REFUSED
+    tuple and marker row are the one refusal path. The check reads the
+    AST of every module but kernel.py, so neither a line break nor a
+    loop over a single column slips past it."""
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "hadoopxmlextractor_spark",
     )
-    offenders = []
-    for rel in _MIGRATED:
-        src = open(os.path.join(pkg, rel), encoding="utf-8").read()
-        for fn in ast.walk(ast.parse(src)):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+    offenders, seen = [], set()
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
                 continue
-            args = fn.args.args
-            if not args or args[0].arg != "batches":
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            if rel == "operators/kernel.py":
                 continue
-            body = ast.get_source_segment(src, fn)
-            catches = any(
-                isinstance(n, ast.ExceptHandler) for n in ast.walk(fn)
-            )
-            if "zip(pdf[" in body and catches:
-                if f"{rel}:{fn.name}" not in _OWN_LOOPS:
-                    offenders.append(f"{rel}:{fn.lineno} {fn.name}")
+            tree = ast.parse(open(path, encoding="utf-8").read())
+            for qual, fn in _batch_loops(tree):
+                if not any(isinstance(n, ast.ExceptHandler) for n in ast.walk(fn)):
+                    continue
+                key = f"{rel}:{qual}"
+                seen.add(key)
+                if key not in _OWN_LOOPS:
+                    offenders.append(f"{rel}:{fn.lineno} {qual}")
     assert offenders == []
+    assert seen == _OWN_LOOPS  # no stale entry
 
 
 def test_warc_records_stream_chunk_sized_frames():
@@ -179,6 +285,8 @@ def test_warc_records_stream_chunk_sized_frames():
     traced peak of a few chunks (a chunk being built, the frame before
     it, row dicts), not the whole decompressed file (~20 MiB)."""
     import tracemalloc
+
+    import pandas as pd
 
     from hadoopxmlextractor_spark.sources.warc import (
         _RECORDS_CHUNK,

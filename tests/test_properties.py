@@ -7,10 +7,15 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
+import pyarrow as pa
+
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from hadoopxmlextractor_spark.config import ExtractionConfig
+from hadoopxmlextractor_spark.operators.kernel import _map_batches
 from hadoopxmlextractor_spark.scanner import scan_with_config
 from hadoopxmlextractor_spark.xpath_subset import compile_subset
 
@@ -130,6 +135,16 @@ ORDERING_CFG = ExtractionConfig.from_rules(
     nr_of_columns=4,
     column_names=("store", "month", "id", "qty"),
 )
+# pyarrow imports pandas on its first pa.array call: pay that once here,
+# not inside the first deadline-timed example
+pa.array([])
+# the fused extract()'s output schema for ORDERING_CFG, as Arrow types
+ORDERING_ROW_SCHEMA = to_arrow_schema(
+    StructType(
+        [StructField("doc_id", StringType()), StructField("seq", LongType())]
+        + [StructField(n, StringType()) for n in ORDERING_CFG.output_columns()]
+    )
+)
 
 _attr_value = st.one_of(st.none(), st.just(""), _word)
 
@@ -169,23 +184,25 @@ def test_map_side_assembly_equals_reducer(docs):
     out-of-order declarations and order ties, empty values overwriting
     context, fragments without the trigger, malformed fragments, documents
     without any trigger, a null document, two Arrow batches."""
-    import pandas as pd
+    from hadoopxmlextractor_spark.extract import _assembled_rows, _compile_fused, _fused_scan
 
-    from hadoopxmlextractor_spark.extract import _compile_fused, _fused_scan, _row_batches
-
+    names = ORDERING_ROW_SCHEMA.names
     doc_ids = [f"d{i}" for i in range(len(docs))]
-    pdf = pd.DataFrame({"doc_id": [*doc_ids, "null"], "content": [*docs, None]})
+    batch = pa.RecordBatch.from_pydict({"doc_id": [*doc_ids, "null"], "content": [*docs, None]})
     document_cells = _fused_scan(ORDERING_CFG, _compile_fused(ORDERING_CFG))
     for missing_value in (" ", None):
-        assemble = _row_batches(document_cells, ORDERING_CFG, missing_value)
-        out = pd.concat(list(assemble(iter([pdf[:1], pdf[1:]]))))
-        assert list(out.columns) == ["doc_id", "seq", "store", "month", "id", "qty"]
+        assemble = _assembled_rows(document_cells, ORDERING_CFG, missing_value)
+        out = list(
+            _map_batches(iter([batch[:1], batch[1:]]), [0, 1], assemble, ORDERING_ROW_SCHEMA)
+        )
+        assert len(out) == 2 and all(b.schema.names == names for b in out)
         want = [
             (doc_id, *row)
             for doc_id, xml in zip(doc_ids, docs)
             for row in reducer_rows(xml, ORDERING_CFG, missing_value)
         ]
-        assert list(out.itertuples(index=False, name=None)) == want
+        got = [tuple(r.values()) for b in out for r in b.to_pylist()]
+        assert got == want
 
 
 def test_fused_extract_equals_window_assembly(spark):

@@ -224,3 +224,26 @@ def test_reused_spark_worker_skips_directory_reads(tmp_path):
     assert module == worker_imports.__name__
     assert int(n_reads) == 0
     assert int(n_importers) > 0
+
+
+def test_extract_import_loads_no_pandas():
+    """A cold worker imports ``extract`` to unpickle the extraction
+    kernels; their batch loop is Arrow-native (``kernel.map_rows``), so
+    that import must not pull in pandas."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, hadoopxmlextractor_spark.extract; print(sorted("
+            "m for m in sys.modules if m.split('.')[0] == 'pandas'))",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env=env,
+        cwd=env["PYTHONPATH"],
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "[]", out.stdout
